@@ -441,9 +441,13 @@ def main() -> None:
             # like-for-like (round-16 advisor: a 3-rep cheap-tier
             # artifact vs 1-rep accepted refs is asymmetric — the
             # artifact now declares which protocol measured it)
+            # cpus: the regression gate compares artifacts only at
+            # equal core counts (8- vs 32-core walls are scaling, not
+            # regressions)
             json.dump({**summary, "median": timings, "spread": spread,
                        "canary_before": canary_before,
-                       "reps": REPS, "cheap_reps": CHEAP_REPS},
+                       "reps": REPS, "cheap_reps": CHEAP_REPS,
+                       "cpus": spark.sparkContext.defaultParallelism},
                       f, indent=1, sort_keys=True)
             f.write("\n")
     spark.stop()

@@ -62,15 +62,6 @@ def dd_shingles(words_sql: str, k: int = 3) -> str:
 # ---- hashing -------------------------------------------------------------
 
 
-def salted_md5(c: Column, salt: int) -> Column:
-    """Salted md5 hex string — the i-th MinHash 'hash function'."""
-    return F.md5(F.concat(F.lit(f"{salt}:"), c))
-
-
-def dd_salted_md5(c: str, salt: int) -> str:
-    return f"md5(concat('{salt}:', {c}))"
-
-
 # 16 fixed 60-bit XOR salts (sha256("minhash-salt-i") prefixes): the i-th
 # MinHash permutation is h ^ SALT_i — bijective on the key space, one md5
 # per shingle instead of 16, and long-MIN instead of string-MIN

@@ -132,7 +132,8 @@ def minhash_per_doc(
     functions. The explode + groupBy(doc_id) shape this replaces paid a
     corpus-sized exchange to reassemble state that never had to leave
     the row (same md5-once/XOR-permutation scheme; bit-identical
-    signatures — tools/exp_simhash_zeroshuffle.py precedent)."""
+    signatures — the tools/exp_simhash_zeroshuffle.py precedent, last
+    present at commit 3cac22f)."""
     base = shingle_arrays(spark, sf_dir, k)
     # bind the hashed array in its own projection so the n_hashes min
     # folds read it instead of re-hashing every shingle per salt
@@ -262,38 +263,6 @@ def candidate_pairs(
             *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry],
         )
         .distinct()
-    )
-
-
-def jaccard_verify(
-    pairs: DataFrame, arrs: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for the candidate pairs only: two equi-joins pull
-    each doc's shingle *array* onto the pair row, then `array_intersect`
-    computes |∩| JVM-side — no shingle-level join. The candidate set is
-    tiny relative to the corpus (that's the point of LSH), so carrying
-    two bounded arrays per pair beats re-shuffling the exploded shingle
-    table twice. `arrs` is a per-doc (doc_id, shs, n) frame — build it
-    with the zero-shuffle `shingle_arrays`, never by re-aggregating an
-    exploded shingle table."""
-    aa = arrs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("n").alias("na"),
-    )
-    bb = arrs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("n").alias("nb"),
-    )
-    ni = F.size(F.array_intersect("shs_a", "shs_b")).cast("long")
-    jac = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
-    return (
-        pairs.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .withColumn("ni", ni)
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
 
 
@@ -436,8 +405,8 @@ def q_dedup_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Verify shape: the full shingle arrays ride the candidate join and
     # the intersection is a per-pair array_intersect. The round-7 judge
     # proposed the count-based intersection that rewrote
-    # `ngram_jaccard_pairs`; measured duel (tools/exp_confusion_verify.py)
-    # says NO here: arrays 4.5 s vs counts 9.0 s at the 10× tier (2.1 vs
+    # `ngram_jaccard_pairs`; measured duel (tools/exp_confusion_verify.py
+    # at commit 3cac22f) says NO here: arrays 4.5 s vs counts 9.0 s at the 10× tier (2.1 vs
     # 2.0 at sf0.1). The difference from the jaccard case: there the
     # candidates COME FROM the shingle self-join, so the group count is
     # free; here the LSH candidate set is independent of the shingle

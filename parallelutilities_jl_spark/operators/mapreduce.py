@@ -266,28 +266,34 @@ def pmapreduce_rdd(
     return df.rdd.map(f).treeReduce(op, depth)
 
 
-def _check_int_headroom(v) -> None:
-    """Narrow-integer wrap guard (round-16 advisor): a caller that
-    accumulates in an integer dtype promises its sums fit — but
-    `np.add(..., out=...)` wraps silently, so a broken promise would
-    produce wrong sums with no error anywhere. Verify the folded
-    chunk's extrema sit inside HALF the dtype's range: every correct
-    intermediate then has headroom for one more add, while a wrap
-    almost always lands near the boundaries and trips this. Float
-    accumulations (inf-safe by IEEE saturation semantics) skip it."""
+def _checked_add(a, b, out=None):
+    """`np.add(a, b, out=out)` that refuses to wrap. A caller that
+    accumulates in an integer dtype promises its sums fit, but `np.add`
+    wraps silently, so a broken promise would produce wrong sums with
+    no error anywhere. Before every integer add, the operands' summed
+    extrema (min a + min b, max a + max b, as exact Python ints) bound
+    the true sum; the add raises `OverflowError` unless that bound sits
+    inside HALF the dtype's range, so every accumulated partial keeps
+    headroom for one more add. The bound is taken before the add, so no
+    run of partials can wrap back into range unseen (four int8
+    partials of 60 raise; checked only after the fold they would wrap to
+    -16 and pass). Float accumulations (inf-safe by IEEE saturation
+    semantics) skip it."""
     import numpy as np
 
-    if v.size == 0 or not np.issubdtype(v.dtype, np.integer):
-        return
-    info = np.iinfo(v.dtype)
-    lo, hi = int(v.min()), int(v.max())
-    if lo < info.min // 2 or hi > info.max // 2:
-        raise OverflowError(
-            f"dense-elsum chunk extrema [{lo}, {hi}] exceed the safe "
-            f"headroom of {v.dtype} ([{info.min // 2}, {info.max // 2}]) "
-            "— the narrow accumulation dtype is too small for these "
-            "values; use a wider ship dtype."
-        )
+    dt = out.dtype if out is not None else np.result_type(a, b)
+    if np.issubdtype(dt, np.integer) and np.size(a) and np.size(b):
+        info = np.iinfo(dt)
+        lo = int(np.min(a)) + int(np.min(b))
+        hi = int(np.max(a)) + int(np.max(b))
+        if lo < info.min // 2 or hi > info.max // 2:
+            raise OverflowError(
+                f"dense-elsum partial sum bound [{lo}, {hi}] exceeds the "
+                f"safe headroom of {dt} ([{info.min // 2}, "
+                f"{info.max // 2}]) — the narrow accumulation dtype is "
+                "too small for these values; use a wider ship dtype."
+            )
+    return np.add(a, b, out=out)
 
 
 def pmapreduce_dense_elsum(
@@ -325,7 +331,10 @@ def pmapreduce_dense_elsum(
         acc = None
         for i in it:
             m = make_array(i)
-            acc = np.asarray(m) if acc is None else np.add(acc, m, out=acc)
+            acc = (
+                np.asarray(m) if acc is None
+                else _checked_add(acc, m, out=acc)
+            )
         if acc is None:
             return
         shape = acc.shape
@@ -349,9 +358,7 @@ def pmapreduce_dense_elsum(
             else:
                 pv = prev[1]
                 out = pv if pv.flags.writeable else v
-                acc[k] = (shape, np.add(pv, v, out=out))
-        for k, (shape, v) in acc.items():
-            _check_int_headroom(v)
+                acc[k] = (shape, _checked_add(pv, v, out=out))
         return iter(acc.items())
 
     parts = (
@@ -406,7 +413,10 @@ def pmapreduce_dense_elsum_long(
         acc = None
         for i in it:
             m = make_array(i)
-            acc = np.asarray(m) if acc is None else np.add(acc, m, out=acc)
+            acc = (
+                np.asarray(m) if acc is None
+                else _checked_add(acc, m, out=acc)
+            )
         if acc is None:
             return
         flat = acc.reshape(-1)
@@ -427,12 +437,8 @@ def pmapreduce_dense_elsum_long(
                 # deserialized chunks can arrive read-only; if pv is not
                 # writeable, allocate (v may be read-only too — writing
                 # into it would raise)
-                if pv.flags.writeable:
-                    acc[k] = (start, np.add(pv, v, out=pv))
-                else:
-                    acc[k] = (start, pv + v)
-        for k, (start, v) in acc.items():
-            _check_int_headroom(v)
+                out = pv if pv.flags.writeable else None
+                acc[k] = (start, _checked_add(pv, v, out=out))
         return iter(acc.items())
 
     folded = (
@@ -630,7 +636,7 @@ def q_dense_elsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The dtype is make_array's to choose — the operator is
     # dtype-agnostic — and the emitted row casts back to the same
     # float64 values (32 and 32*npix are exact in int8/int64/float64),
-    # with the fold's integer headroom guard catching any future
+    # with `_checked_add`'s pre-add bound catching any future
     # task-count change that could wrap.
     out = pmapreduce_dense_elsum(
         spark,

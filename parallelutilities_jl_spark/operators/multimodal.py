@@ -25,13 +25,21 @@ real parse; everything else → stub). Swapping the stub for the real
 external decoder changes nothing structurally: the UDF signatures,
 schemas and batch shapes are what a real deployment uses.
 
-Scale design:
-* binary payloads stay columnar (parquet BYTE_ARRAY) and are only
-  materialized inside the Arrow batch being decoded;
-* decode → feature-extract is `mapInPandas` (per-partition batch
-  iterator): no per-row Python, one Arrow exchange per batch;
-* `spark.sql.files.maxPartitionBytes` bounds per-task memory — a 100 TB
-  corpus of ~1 MB blobs lands ~128 blobs per task.
+Batch shape: every codec round trip is the same two stages, each one
+helper, so a head holds only its encoder call, its attestation predicate
+and its stats tuple.
+* `_encode_docs(docs, encode)` — (doc_id, text) → (asset_id, content)
+  in one Arrow-batched `mapInPandas` pass (the reference's `pmapbatch`:
+  a batch map over partitions, zero shuffles);
+* `_map_assets(assets, out_schema, label, rows)` — one `mapInPandas`
+  pass turning each asset's bytes into its output rows; a payload the
+  decoder rejects raises `ValueError` naming the codec label and the
+  asset id, and integer columns keep NULLs (dtypes derive from the
+  schema).
+Binary payloads stay columnar (parquet BYTE_ARRAY) and are only
+materialized inside the Arrow batch being decoded;
+`spark.sql.files.maxPartitionBytes` bounds per-task memory — a 100 TB
+corpus of ~1 MB blobs lands ~128 blobs per task.
 """
 
 from __future__ import annotations
@@ -42,32 +50,95 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from parallelutilities_jl_spark.sources.fixtures import load_table_parallel
 
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), False),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURE_DIM = 8
+
+# pandas dtype per Spark DDL column type: nullable extension dtypes, so
+# a None stat (e.g. the peak of an empty stream) stays NULL instead of
+# turning the column into float NaN; other types pass through as lists
+_PD_DTYPES = {"int": "Int32", "long": "Int64", "bigint": "Int64"}
+
+
+def _encode_docs(
+    docs: DataFrame, encode, nonempty: bool = False
+) -> DataFrame:
+    """(doc_id, text) → (asset_id long, content binary) with
+    `encode(doc_id, text) -> bytes`, one Arrow-batched mapInPandas pass.
+    NULL text is excluded (a NULL payload cannot be encoded; every
+    multimodal oracle carries the same `text IS NOT NULL`), and empty
+    text too when `nonempty` — image/video encoders sample pixels from
+    the characters. Stateless, so it applies unchanged to a streaming
+    DataFrame."""
+    from parallelutilities_jl_spark.session import ensure_package_on_executors
+
+    ensure_package_on_executors(docs.sparkSession)
+    # the filter is built per call: a module-level Column would need an
+    # active SparkContext at import time, which executors do not have
+    keep = F.col("text").isNotNull()
+    if nonempty:
+        keep = keep & (F.length("text") >= 1)
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "asset_id": pdf["doc_id"],
+                    "content": [
+                        encode(int(i), t)
+                        for i, t in zip(pdf["doc_id"], pdf["text"])
+                    ],
+                }
+            )
+
+    return docs.filter(keep).select("doc_id", "text").mapInPandas(
+        synth, "asset_id long, content binary"
+    )
+
+
+def _map_assets(
+    assets: DataFrame, out_schema: str, label: str, rows, extra=()
+) -> DataFrame:
+    """One mapInPandas pass over (asset_id, content, *extra) assets:
+    `rows(content, *extra_values)` returns the asset's output tuples
+    (every `out_schema` column after the leading asset_id), or None
+    when the payload fails to parse or attest. The helper prepends the
+    asset id to each tuple and builds each column with the pandas dtype
+    its `out_schema` type implies (`_PD_DTYPES`)."""
+    from parallelutilities_jl_spark.session import ensure_package_on_executors
+
+    ensure_package_on_executors(assets.sparkSession)
+    fields = [f.split() for f in out_schema.split(",")]
+    dtypes = [(name, _PD_DTYPES.get(typ)) for name, typ in fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, out = [], []
+            for aid, c, *x in zip(
+                pdf["asset_id"], pdf["content"], *(pdf[e] for e in extra)
+            ):
+                rs = rows(bytes(c), *x)
+                # explicit raise, not assert: survives python -O and
+                # names the offending asset instead of an opaque
+                # TypeError deep in the Arrow batch (we wrote these
+                # bytes — a None here means the synthesizer or the
+                # decoder regressed)
+                if rs is None:
+                    raise ValueError(
+                        f"invalid {label} payload for asset {aid}"
+                    )
+                ids += [aid] * len(rs)
+                out += rs
+            cols = [ids, *zip(*out)] if out else [()] * len(dtypes)
+            yield pd.DataFrame(
+                {
+                    name: pd.array(list(v), dtype=dt) if dt else list(v)
+                    for (name, dt), v in zip(dtypes, cols)
+                }
+            )
+
+    return assets.mapInPandas(run, out_schema)
 
 
 def _wav_fmt_data(
@@ -362,10 +433,10 @@ def _media_features(content: bytes, modality: str) -> list[float]:
     return _features_stub(content)
 
 
-def _modality_col() -> F.Column:
+def _modality_col(id_col: str = "doc_id") -> F.Column:
     return (
-        F.when(F.col("doc_id") % 3 == 0, "image")
-        .when(F.col("doc_id") % 3 == 1, "audio")
+        F.when(F.col(id_col) % 3 == 0, "image")
+        .when(F.col(id_col) % 3 == 1, "audio")
         .otherwise("video")
     )
 
@@ -387,57 +458,25 @@ def synthesize_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _media_content(doc_id: int, text: str) -> bytes:
     """One REAL container per document, picked by its modality tag:
-    image → 24-bit BMP (`_bmp_bytes`), audio → RIFF/WAVE PCM16
-    (`_wav_container_bytes`), video → animated GIF89a (`_gif_bytes`,
-    full LZW). Each reuses the single-modality synthesizer's geometry
-    spec (`_bmp_dims` / WAV cap / `_gif_dims`) so every decoded field
-    stays first-principles oracle-predictable."""
-    m = doc_id % 3
-    if m == 0:
-        w, h = _bmp_dims(doc_id)
-        return _bmp_bytes(_bmp_pixel_vals(text, w * h), w, h)
-    if m == 1:
-        return _wav_container_bytes(doc_id, text)
-    w, h, nf = _gif_dims(doc_id)
-    base_vals = _bmp_pixel_vals(text, w * h)
-    frames = [
-        [(v + GIF_FRAME_SHIFT * f) % 256 for v in base_vals]
-        for f in range(nf)
-    ]
-    return _gif_bytes(frames, w, h)
+    image → 24-bit BMP (`_bmp_content`), audio → RIFF/WAVE PCM16
+    (`_wav_container_bytes`), video → animated GIF89a (`_gif_content`,
+    full LZW). Each is the single-modality synthesizer's own encoder, so
+    every decoded field stays first-principles oracle-predictable."""
+    return (_bmp_content, _wav_container_bytes, _gif_content)[doc_id % 3](
+        doc_id, text
+    )
 
 
 def synthesize_media_from_docs(docs: DataFrame) -> DataFrame:
     """The (doc_id, text) → real-mixed-media mapInPandas transform,
     shared by the batch path and the streaming ingest parity test
     (stateless, so it applies unchanged to a streaming DataFrame —
-    the `synthesize_bmp_from_docs` pattern for all three modalities)."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(docs.sparkSession)
-    src = docs.filter(
-        F.col("text").isNotNull()
-        & ((F.col("doc_id") % 3 == 1) | (F.length("text") >= 1))
-    ).select("doc_id", "text")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "modality": [
-                        ("image", "audio", "video")[i % 3] for i in ids
-                    ],
-                    "content": [
-                        _media_content(i, t)
-                        for i, t in zip(ids, pdf["text"])
-                    ],
-                }
-            )
-
-    return src.mapInPandas(
-        synth, "asset_id long, modality string, content binary"
+    the `synthesize_bmp_from_docs` pattern for all three modalities).
+    Empty text is kept for audio only (an empty data chunk is a valid
+    WAV); the modality tag is a column op on the asset id."""
+    src = docs.filter((F.col("doc_id") % 3 == 1) | (F.length("text") >= 1))
+    return _encode_docs(src, _media_content).select(
+        "asset_id", _modality_col("asset_id").alias("modality"), "content"
     )
 
 
@@ -497,28 +536,9 @@ def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses it back with no knowledge of doc_id, so the decode query is
     a genuine encode→decode round trip whose outputs an oracle can
     still predict from first principles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"), _wav_container_bytes
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "content": [
-                        _wav_container_bytes(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(synth, "asset_id long, content binary")
 
 
 def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,51 +553,21 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two chained mapInPandas passes, zero shuffles —
     embarrassingly parallel per Arrow batch, the per-blob decode shape
     a 100 TB media corpus needs."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_wav_assets(spark, sf_dir)
+    def rows(c: bytes):
+        m = _decode_wav(c)
+        return None if m is None else [(
+            len(c), m["sample_rate"], m["n_channels"], m["bits"],
+            m["n_frames"], m["peak_abs"],
+        )]
 
-    out_schema = (
+    return _map_assets(
+        synthesize_wav_assets(spark, sf_dir),
         "asset_id long, n_bytes long, sample_rate int, n_channels int, "
-        "bits int, n_frames int, peak_abs int"
+        "bits int, n_frames int, peak_abs int",
+        "WAV",
+        rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_wav(bytes(c)) for c in pdf["content"]]
-            # explicit raise, not assert: survives python -O and names
-            # the offending asset instead of an opaque TypeError deep
-            # in the Arrow batch (we wrote these bytes — a None here
-            # means the synthesizer or the decoder regressed)
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid WAV payload for asset {aid}"
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_bytes": [len(c) for c in pdf["content"]],
-                    "sample_rate": pd.array(
-                        [m["sample_rate"] for m in metas], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [m["n_channels"] for m in metas], dtype="Int32"
-                    ),
-                    "bits": pd.array(
-                        [m["bits"] for m in metas], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [m["n_frames"] for m in metas], dtype="Int32"
-                    ),
-                    "peak_abs": pd.array(
-                        [m["peak_abs"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def _g711_wav_container_bytes(doc_id: int, text: str) -> bytes:
@@ -621,84 +611,31 @@ def q_multimodal_g711_decode(
     convention in either law hash-mismatches. Scale shape: two chained
     mapInPandas passes, zero shuffles; the expansion is one 256-entry
     table gather per Arrow batch."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
+    assets = _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _g711_wav_container_bytes,
     )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "content": [
-                        _g711_wav_container_bytes(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
+    def rows(c: bytes):
+        m = _decode_wav(c)
+        g = _g711_samples(c)
+        if m is None or g is None or m["bits"] != 8:
+            return None
+        s, law = g
+        s64 = s.astype("int64")
+        stats = (
+            (None, None, None) if len(s) == 0
+            else (int(abs(s64).max()), int(s64.sum()), int((s64 * s64).sum()))
+        )
+        return [(law, len(c), m["sample_rate"], m["n_frames"], *stats)]
 
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
+    return _map_assets(
+        assets,
         "asset_id long, law string, n_bytes long, sample_rate int, "
-        "n_frames int, peak_abs int, sample_sum long, energy_sum long"
+        "n_frames int, peak_abs int, sample_sum long, energy_sum long",
+        "G.711",
+        rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "law", "n_bytes", "sample_rate", "n_frames",
-                "peak_abs", "sample_sum", "energy_sum",
-            )}
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                c = bytes(c)
-                m = _decode_wav(c)
-                g = _g711_samples(c)
-                if m is None or g is None or m["bits"] != 8:
-                    raise ValueError(
-                        f"invalid G.711 payload for asset {aid}"
-                    )
-                s, law = g
-                s64 = s.astype("int64")
-                empty = len(s) == 0
-                rows["law"].append(law)
-                rows["n_bytes"].append(len(c))
-                rows["sample_rate"].append(m["sample_rate"])
-                rows["n_frames"].append(m["n_frames"])
-                rows["peak_abs"].append(
-                    None if empty else int(abs(s64).max())
-                )
-                rows["sample_sum"].append(
-                    None if empty else int(s64.sum())
-                )
-                rows["energy_sum"].append(
-                    None if empty else int((s64 * s64).sum())
-                )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "law": rows["law"],
-                    "n_bytes": rows["n_bytes"],
-                    "sample_rate": pd.array(
-                        rows["sample_rate"], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(rows["n_frames"], dtype="Int32"),
-                    "peak_abs": pd.array(rows["peak_abs"], dtype="Int32"),
-                    "sample_sum": pd.array(
-                        rows["sample_sum"], dtype="Int64"
-                    ),
-                    "energy_sum": pd.array(
-                        rows["energy_sum"], dtype="Int64"
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def _oracle_g711_decode() -> str:
@@ -774,78 +711,30 @@ def q_multimodal_flac_decode(
         decode_flac,
         encode_flac,
     )
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
+    def encode(i: int, t: str) -> bytes:
+        return encode_flac(
+            [[b - 128 for b in t.encode("utf-8")[:WAV_DATA_CAP]]],
+            blocksize=FLAC_BLOCKSIZE,
+            subframe="fixed" if i % 2 == 0 else "verbatim",
+            fixed_order=2,
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                samples = [
-                    b - 128 for b in t.encode("utf-8")[:WAV_DATA_CAP]
-                ]
-                contents.append(
-                    encode_flac(
-                        [samples],
-                        blocksize=FLAC_BLOCKSIZE,
-                        subframe="fixed" if i % 2 == 0 else "verbatim",
-                        fixed_order=2,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
+    def rows(c: bytes):
+        m = decode_flac(c)
+        return None if m is None else [(
+            m["sample_rate"], m["n_channels"], m["bits"],
+            m["total_samples"], m["n_frames"], m["peak_abs"],
+            m["sample_sum"],
+        )]
 
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
+    return _map_assets(
+        _encode_docs(load_table_parallel(spark, sf_dir, "documents"), encode),
         "asset_id long, sample_rate int, n_channels int, bits int, "
-        "n_samples int, n_frames int, peak_abs int, sample_sum long"
+        "n_samples int, n_frames int, peak_abs int, sample_sum long",
+        "FLAC",
+        rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_flac(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid FLAC payload for asset {aid}"
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "sample_rate": pd.array(
-                        [m["sample_rate"] for m in metas], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [m["n_channels"] for m in metas], dtype="Int32"
-                    ),
-                    "bits": pd.array(
-                        [m["bits"] for m in metas], dtype="Int32"
-                    ),
-                    "n_samples": pd.array(
-                        [m["total_samples"] for m in metas], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [m["n_frames"] for m in metas], dtype="Int32"
-                    ),
-                    "peak_abs": pd.array(
-                        [m["peak_abs"] for m in metas], dtype="Int32"
-                    ),
-                    "sample_sum": pd.array(
-                        [m["sample_sum"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def _oracle_flac_decode() -> str:
@@ -899,80 +788,30 @@ def q_multimodal_mp4_probe(
     The oracle replays every field from the parquet inputs — a wrong
     box offset, fixed-point shift, or stsz summation hash-mismatches.
     Scale shape: two chained mapInPandas passes, zero shuffles."""
-    from parallelutilities_jl_spark.operators.mp4 import (
-        MP4_SAMPLE_DELTA,
-        MP4_TIMESCALE,
-        encode_mp4,
-        probe_mp4,
-    )
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
+    from parallelutilities_jl_spark.operators.mp4 import encode_mp4, probe_mp4
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
+    def encode(i: int, t: str) -> bytes:
+        return encode_mp4(
+            list(t.encode("utf-8")[:MP4_SAMPLE_CAP]),
+            16 * (1 + i % 4),
+            16 * (1 + (i // 4) % 3),
+        )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                sizes = list(t.encode("utf-8")[:MP4_SAMPLE_CAP])
-                contents.append(
-                    encode_mp4(
-                        sizes,
-                        16 * (1 + i % 4),
-                        16 * (1 + (i // 4) % 3),
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
+    def rows(c: bytes):
+        m = probe_mp4(c)
+        return None if m is None else [tuple(m[k] for k in (
+            "brand", "timescale", "duration", "n_tracks", "width",
+            "height", "n_samples", "media_bytes", "mdat_bytes",
+        ))]
 
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
+    return _map_assets(
+        _encode_docs(load_table_parallel(spark, sf_dir, "documents"), encode),
         "asset_id long, brand string, timescale int, duration long, "
         "n_tracks int, width int, height int, n_samples int, "
-        "media_bytes long, mdat_bytes long"
+        "media_bytes long, mdat_bytes long",
+        "MP4",
+        rows,
     )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [probe_mp4(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid MP4 payload for asset {aid}"
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "brand": [m["brand"] for m in metas],
-                    "timescale": pd.array(
-                        [m["timescale"] for m in metas], dtype="Int32"
-                    ),
-                    "duration": [m["duration"] for m in metas],
-                    "n_tracks": pd.array(
-                        [m["n_tracks"] for m in metas], dtype="Int32"
-                    ),
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "n_samples": pd.array(
-                        [m["n_samples"] for m in metas], dtype="Int32"
-                    ),
-                    "media_bytes": [m["media_bytes"] for m in metas],
-                    "mdat_bytes": [m["mdat_bytes"] for m in metas],
-                }
-            )
-
-    return assets.mapInPandas(probe, out_schema)
 
 
 def _oracle_mp4_probe() -> str:
@@ -1038,42 +877,26 @@ def q_multimodal_wav_energy_env(
     samples × 32768² < 2^37 per frame. Scale shape: one mapInPandas
     pass after the synthesizer, zero shuffles — the per-blob decode
     shape at any corpus size."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
+    import numpy as np
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_wav_assets(spark, sf_dir)
     nf = WAV_ENV_FRAMES
 
-    out_schema = "asset_id long, n_samples long, " + ", ".join(
-        f"e{f} long" for f in range(nf)
+    def rows(c: bytes):
+        s = _wav_pcm16(c)
+        if s is None:
+            return None
+        n = len(s)
+        s64 = s.astype(np.int64)
+        segs = [s64[f * n // nf : (f + 1) * n // nf] for f in range(nf)]
+        return [(n, *(int((seg * seg).sum()) for seg in segs))]
+
+    feats = _map_assets(
+        synthesize_wav_assets(spark, sf_dir),
+        "asset_id long, n_samples long, "
+        + ", ".join(f"e{f} long" for f in range(nf)),
+        "WAV",
+        rows,
     )
-
-    def env(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                s = _wav_pcm16(bytes(c))
-                if s is None:
-                    raise ValueError(
-                        f"invalid WAV payload for asset {aid}"
-                    )
-                n = len(s)
-                s64 = s.astype(np.int64)
-                es = []
-                for f in range(nf):
-                    lo, hi = f * n // nf, (f + 1) * n // nf
-                    seg = s64[lo:hi]
-                    es.append(int((seg * seg).sum()))
-                rows.append((int(aid), n, *es))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "n_samples"]
-                + [f"e{f}" for f in range(nf)],
-            )
-
-    feats = assets.mapInPandas(env, out_schema)
     fp = sum(
         (F.col(f"e{f + 1}") > F.col(f"e{f}")).cast("long") * (1 << f)
         for f in range(nf - 1)
@@ -1135,50 +958,34 @@ def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_wav_sample_ctes`) and replays the same pair algebra — a
     misdecoded sample or frame boundary hash-mismatches. One
     mapInPandas pass after the synthesizer, zero shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    assets = synthesize_wav_assets(spark, sf_dir)
     nf = WAV_ENV_FRAMES
 
-    out_schema = (
+    def rows(c: bytes):
+        s = _wav_pcm16(c)
+        if s is None:
+            return None
+        n = len(s)
+        neg = s < 0
+        zcs = []
+        for f in range(nf):
+            lo, hi = f * n // nf, (f + 1) * n // nf
+            # pairs (i-1, i) for 1-based i in (lo, hi], i >= 2
+            lo0 = max(lo, 1)  # 0-based pair start index
+            zcs.append(
+                int((neg[lo0:hi] != neg[lo0 - 1 : hi - 1]).sum())
+                if hi > lo0
+                else 0
+            )
+        return [(n, *zcs, sum(zcs))]
+
+    return _map_assets(
+        synthesize_wav_assets(spark, sf_dir),
         "asset_id long, n_samples long, "
         + ", ".join(f"zc{f} long" for f in range(nf))
-        + ", zc_total long"
+        + ", zc_total long",
+        "WAV",
+        rows,
     )
-
-    def zcr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                s = _wav_pcm16(bytes(c))
-                if s is None:
-                    raise ValueError(
-                        f"invalid WAV payload for asset {aid}"
-                    )
-                n = len(s)
-                neg = s < 0
-                zcs = []
-                for f in range(nf):
-                    lo, hi = f * n // nf, (f + 1) * n // nf
-                    # pairs (i-1, i) for 1-based i in (lo, hi], i >= 2
-                    lo0 = max(lo, 1)  # 0-based pair start index
-                    zcs.append(
-                        int((neg[lo0:hi] != neg[lo0 - 1 : hi - 1]).sum())
-                        if hi > lo0
-                        else 0
-                    )
-                rows.append((int(aid), n, *zcs, sum(zcs)))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "n_samples"]
-                + [f"zc{f}" for f in range(nf)]
-                + ["zc_total"],
-            )
-
-    return assets.mapInPandas(zcr, out_schema)
 
 
 def _oracle_wav_zcr() -> str:
@@ -1404,6 +1211,23 @@ def _luma_sums(lu) -> tuple[int, int]:
     return int(lu.sum()), int(np.dot(np.arange(1, lu.size + 1), lu))
 
 
+def _luma_stats(lu) -> tuple:
+    """The six pixel stats every single-image decode head emits:
+    (n_pixels, luma_sum, luma_min, luma_max, luma_topleft,
+    luma_weighted) of a decoded row-major luma array."""
+    l_sum, l_weighted = _luma_sums(lu)
+    return (
+        len(lu), l_sum, int(lu.min()), int(lu.max()), int(lu[0]),
+        l_weighted,
+    )
+
+
+_LUMA_STATS_SCHEMA = (
+    "n_pixels long, luma_sum long, luma_min int, luma_max int, "
+    "luma_topleft int, luma_weighted long"
+)
+
+
 def _bmp_dims(doc_id: int) -> tuple[int, int]:
     return _dims_of(_BMP_WH, doc_id)
 
@@ -1419,30 +1243,16 @@ def _bmp_pixel_vals(text: str, npix: int) -> list[int]:
     ]
 
 
+def _bmp_content(doc_id: int, text: str) -> bytes:
+    w, h = _bmp_dims(doc_id)
+    return _bmp_bytes(_bmp_pixel_vals(text, w * h), w, h)
+
+
 def synthesize_bmp_from_docs(docs: DataFrame) -> DataFrame:
     """The (doc_id, text) → real-BMP mapInPandas transform, shared by
     the batch path and the streaming ingest parity test (stateless, so
     it applies unchanged to a streaming DataFrame)."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(docs.sparkSession)
-    src = docs.filter(
-        F.col("text").isNotNull() & (F.length("text") >= 1)
-    ).select("doc_id", "text")
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h = _bmp_dims(int(i))
-                contents.append(
-                    _bmp_bytes(_bmp_pixel_vals(t, w * h), w, h)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    return src.mapInPandas(synth, "asset_id long, content binary")
+    return _encode_docs(docs, _bmp_content, nonempty=True)
 
 
 def synthesize_bmp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1470,56 +1280,21 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     field from the parquet inputs alone. Scale shape: two chained
     mapInPandas passes, zero shuffles — the per-blob decode shape a
     100 TB image corpus needs."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_bmp_assets(spark, sf_dir)
+    def rows(c: bytes):
+        m = _decode_bmp(c)
+        return None if m is None else [(
+            len(c), m["width"], m["height"], m["row_stride"],
+            *_luma_stats(m["luma"]),
+        )]
 
-    out_schema = (
+    return _map_assets(
+        synthesize_bmp_assets(spark, sf_dir),
         "asset_id long, n_bytes long, width int, height int, "
-        "row_stride int, n_pixels long, luma_sum long, luma_min int, "
-        "luma_max int, luma_topleft int, luma_weighted long"
+        "row_stride int, " + _LUMA_STATS_SCHEMA,
+        "BMP",
+        rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_bmp(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid BMP payload for asset {aid}"
-                    )
-            lums = [m["luma"] for m in metas]
-            sums = [_luma_sums(lu) for lu in lums]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_bytes": [len(c) for c in pdf["content"]],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "row_stride": pd.array(
-                        [m["row_stride"] for m in metas], dtype="Int32"
-                    ),
-                    "n_pixels": [len(lu) for lu in lums],
-                    "luma_sum": [s for s, _ in sums],
-                    "luma_min": pd.array(
-                        [int(lu.min()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_max": pd.array(
-                        [int(lu.max()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_topleft": pd.array(
-                        [int(lu[0]) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_weighted": [w for _, w in sums],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def _oracle_bmp_decode() -> str:
@@ -1585,56 +1360,21 @@ def q_multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-rounded dimension hash-mismatches. The oracle replays the
     integer mapping from the parquet inputs alone. Scale shape: two
     chained mapInPandas passes, zero shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_bmp_assets(spark, sf_dir)
+    def rows(c: bytes):
+        m = _decode_bmp(c)
+        if m is None:
+            return None
+        out, nw, nh = _nn_resize_luma(m["luma"], m["width"], m["height"])
+        return [(m["width"], m["height"], nw, nh, len(out), *_luma_sums(out))]
 
-    out_schema = (
+    return _map_assets(
+        synthesize_bmp_assets(spark, sf_dir),
         "asset_id long, width int, height int, new_w int, new_h int, "
-        "r_n_pixels long, r_luma_sum long, r_luma_weighted long"
+        "r_n_pixels long, r_luma_sum long, r_luma_weighted long",
+        "BMP",
+        rows,
     )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = {k: [] for k in (
-            "asset_id", "width", "height", "new_w", "new_h",
-            "r_n_pixels", "r_luma_sum", "r_luma_weighted",
-        )}
-        for pdf in batches:
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                m = _decode_bmp(bytes(c))
-                if m is None:
-                    raise ValueError(f"invalid BMP payload for asset {aid}")
-                out, nw, nh = _nn_resize_luma(
-                    m["luma"], m["width"], m["height"]
-                )
-                r_sum, r_weighted = _luma_sums(out)
-                rows["asset_id"].append(int(aid))
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["new_w"].append(nw)
-                rows["new_h"].append(nh)
-                rows["r_n_pixels"].append(len(out))
-                rows["r_luma_sum"].append(r_sum)
-                rows["r_luma_weighted"].append(r_weighted)
-            yield pd.DataFrame(
-                {
-                    **{k: rows[k] for k in ("asset_id",)},
-                    **{
-                        k: pd.array(rows[k], dtype="Int32")
-                        for k in ("width", "height", "new_w", "new_h")
-                    },
-                    **{
-                        k: rows[k]
-                        for k in (
-                            "r_n_pixels", "r_luma_sum", "r_luma_weighted"
-                        )
-                    },
-                }
-            )
-            rows = {k: [] for k in rows}
-
-    return assets.mapInPandas(resize, out_schema)
 
 
 def _oracle_bmp_resize() -> str:
@@ -1679,44 +1419,32 @@ def q_multimodal_image_features(
     filters on. Every output replays exactly in DuckDB from the
     parquet inputs. Scale shape: two chained mapInPandas passes, zero
     shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
+    import numpy as np
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_bmp_assets(spark, sf_dir)
+    def rows(c: bytes):
+        m = _decode_bmp(c)
+        if m is None:
+            return None
+        w, h = m["width"], m["height"]
+        g = np.asarray(m["luma"], dtype=np.int64).reshape(h, w)
+        # quadrant of (y, x) = ((2y)//h, (2x)//w): the top/left half
+        # ends at the last y with 2y <= h-1, i.e. row (h+1)//2 exclusive
+        # — two slice boundaries replace the per-pixel bucket test
+        hs, ws = (h + 1) // 2, (w + 1) // 2
+        return [(
+            int(g[:hs, :ws].sum()), int(g[:hs, ws:].sum()),
+            int(g[hs:, :ws].sum()), int(g[hs:, ws:].sum()),
+            int(np.abs(np.diff(g, axis=1)).sum()),
+            int(np.abs(np.diff(g, axis=0)).sum()),
+        )]
 
-    out_schema = (
+    return _map_assets(
+        synthesize_bmp_assets(spark, sf_dir),
         "asset_id long, q00 long, q01 long, q10 long, q11 long, "
-        "grad_h long, grad_v long"
+        "grad_h long, grad_v long",
+        "BMP",
+        rows,
     )
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "q00", "q01", "q10", "q11", "grad_h", "grad_v"
-            )}
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                m = _decode_bmp(bytes(c))
-                if m is None:
-                    raise ValueError(f"invalid BMP payload for asset {aid}")
-                w, h = m["width"], m["height"]
-                g = np.asarray(m["luma"], dtype=np.int64).reshape(h, w)
-                # quadrant of (y, x) = ((2y)//h, (2x)//w): the top/left
-                # half ends at the last y with 2y <= h-1, i.e. row
-                # (h+1)//2 exclusive — two slice boundaries replace the
-                # per-pixel bucket test
-                hs, ws = (h + 1) // 2, (w + 1) // 2
-                out["asset_id"].append(int(aid))
-                out["q00"].append(int(g[:hs, :ws].sum()))
-                out["q01"].append(int(g[:hs, ws:].sum()))
-                out["q10"].append(int(g[hs:, :ws].sum()))
-                out["q11"].append(int(g[hs:, ws:].sum()))
-                out["grad_h"].append(int(np.abs(np.diff(g, axis=1)).sum()))
-                out["grad_v"].append(int(np.abs(np.diff(g, axis=0)).sum()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(feats, out_schema)
 
 
 def _oracle_image_features() -> str:
@@ -1995,66 +1723,34 @@ def synthesize_gif_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sampled codepoint value rotated by {GIF_FRAME_SHIFT}·f (mod
     256), so frames are distinct yet the oracle replays every one from
     the text alone."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _gif_content,
+        nonempty=True,
     )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h, nf = _gif_dims(int(i))
-                base_vals = _bmp_pixel_vals(t, w * h)
-                frames = [
-                    [(v + GIF_FRAME_SHIFT * f) % 256 for v in base_vals]
-                    for f in range(nf)
-                ]
-                contents.append(_gif_bytes(frames, w, h))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
 
-    return docs.mapInPandas(synth, "asset_id long, content binary")
+def _gif_content(doc_id: int, text: str) -> bytes:
+    w, h, nf = _gif_dims(doc_id)
+    base_vals = _bmp_pixel_vals(text, w * h)
+    frames = [
+        [(v + GIF_FRAME_SHIFT * f) % 256 for v in base_vals]
+        for f in range(nf)
+    ]
+    return _gif_bytes(frames, w, h)
 
 
-def _gif_decode_rows(pdf: pd.DataFrame, every_k: int = 1):
-    """Shared per-batch decode for the GIF queries: one output row per
-    (asset, frame with frame_idx % every_k == 0)."""
-    out = {k: [] for k in (
-        "asset_id", "width", "height", "n_frames", "frame_idx",
-        "luma_sum", "luma_weighted",
-    )}
-    for aid, c in zip(pdf["asset_id"], pdf["content"]):
-        m = _decode_gif(bytes(c))
-        if m is None:
-            raise ValueError(f"invalid GIF payload for asset {aid}")
-        for fi, lu in enumerate(m["frames"]):
-            if fi % every_k:
-                continue
-            l_sum, l_weighted = _luma_sums(lu)
-            out["asset_id"].append(int(aid))
-            out["width"].append(m["width"])
-            out["height"].append(m["height"])
-            out["n_frames"].append(m["n_frames"])
-            out["frame_idx"].append(fi)
-            out["luma_sum"].append(l_sum)
-            out["luma_weighted"].append(l_weighted)
-    return pd.DataFrame(
-        {
-            "asset_id": out["asset_id"],
-            "width": pd.array(out["width"], dtype="Int32"),
-            "height": pd.array(out["height"], dtype="Int32"),
-            "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-            "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-            "luma_sum": out["luma_sum"],
-            "luma_weighted": out["luma_weighted"],
-        }
-    )
+def _gif_frame_rows(content: bytes, every_k: int = 1):
+    """Shared decode for the GIF queries: one output row per frame
+    with frame_idx % every_k == 0."""
+    m = _decode_gif(content)
+    if m is None:
+        return None
+    return [
+        (m["width"], m["height"], m["n_frames"], fi, *_luma_sums(lu))
+        for fi, lu in enumerate(m["frames"])
+        if fi % every_k == 0
+    ]
 
 
 _GIF_OUT_SCHEMA = (
@@ -2072,16 +1768,12 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every frame from the parquet inputs alone (frame f = the
     sampled codepoints rotated by {GIF_FRAME_SHIFT}·f). Scale shape:
     two chained mapInPandas passes, zero shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    assets = synthesize_gif_assets(spark, sf_dir)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_decode_rows(pdf)
-
-    return assets.mapInPandas(decode, _GIF_OUT_SCHEMA)
+    return _map_assets(
+        synthesize_gif_assets(spark, sf_dir),
+        _GIF_OUT_SCHEMA,
+        "GIF",
+        _gif_frame_rows,
+    )
 
 
 GIF_SAMPLE_EVERY = 2
@@ -2096,16 +1788,12 @@ def q_multimodal_gif_frame_sample(
     a video curation pipeline runs, with the kept frames' real pixel
     statistics on the output so sampling the wrong frames is
     hash-visible."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    assets = synthesize_gif_assets(spark, sf_dir)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_decode_rows(pdf, every_k=GIF_SAMPLE_EVERY)
-
-    return assets.mapInPandas(decode, _GIF_OUT_SCHEMA)
+    return _map_assets(
+        synthesize_gif_assets(spark, sf_dir),
+        _GIF_OUT_SCHEMA,
+        "GIF",
+        lambda c: _gif_frame_rows(c, every_k=GIF_SAMPLE_EVERY),
+    )
 
 
 def _oracle_gif(every_k: int = 1) -> str:
@@ -2318,28 +2006,14 @@ def synthesize_png_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mapInPandas, Arrow-batched): per-doc dims from `_png_dims`, pixel
     base values sampled from the text characters, one filter type per
     scanline (r % 5) so decoding exercises every de-filter path."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
+    def encode(i: int, t: str) -> bytes:
+        w, h = _png_dims(i)
+        return _png_bytes(_bmp_pixel_vals(t, w * h), w, h)
+
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"), encode, nonempty=True
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                w, h = _png_dims(int(i))
-                contents.append(
-                    _png_bytes(_bmp_pixel_vals(t, w * h), w, h)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    return docs.mapInPandas(synth, "asset_id long, content binary")
 
 
 def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2355,56 +2029,21 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     output). The oracle predicts every field from the parquet inputs
     alone. Scale shape: two chained mapInPandas passes, zero
     shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    assets = synthesize_png_assets(spark, sf_dir)
+    def rows(c: bytes):
+        m = _decode_png(c)
+        return None if m is None else [(
+            m["n_raw_bytes"], m["width"], m["height"], m["filter_mask"],
+            *_luma_stats(m["luma"]),
+        )]
 
-    out_schema = (
+    return _map_assets(
+        synthesize_png_assets(spark, sf_dir),
         "asset_id long, n_raw_bytes long, width int, height int, "
-        "filter_mask int, n_pixels long, luma_sum long, luma_min int, "
-        "luma_max int, luma_topleft int, luma_weighted long"
+        "filter_mask int, " + _LUMA_STATS_SCHEMA,
+        "PNG",
+        rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_png(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid PNG payload for asset {aid}"
-                    )
-            lums = [m["luma"] for m in metas]
-            sums = [_luma_sums(lu) for lu in lums]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "n_raw_bytes": [m["n_raw_bytes"] for m in metas],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "filter_mask": pd.array(
-                        [m["filter_mask"] for m in metas], dtype="Int32"
-                    ),
-                    "n_pixels": [len(lu) for lu in lums],
-                    "luma_sum": [s for s, _ in sums],
-                    "luma_min": pd.array(
-                        [int(lu.min()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_max": pd.array(
-                        [int(lu.max()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_topleft": pd.array(
-                        [int(lu[0]) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_weighted": [w for _, w in sums],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def _oracle_png_decode() -> str:
@@ -2513,28 +2152,52 @@ def synthesize_jpeg_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sampled text codepoint (`encode_jpeg_gray`) — fully conformant
     streams whose decoded pixels are exactly predictable."""
     from parallelutilities_jl_spark.operators.jpeg import encode_jpeg_gray
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
+    def encode(i: int, t: str) -> bytes:
+        bw, bh = _jpg_dims(i)
+        return encode_jpeg_gray(_bmp_pixel_vals(t, bw * bh), bw, bh)
+
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"), encode, nonempty=True
     )
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                bw, bh = _jpg_dims(int(i))
-                contents.append(
-                    encode_jpeg_gray(_bmp_pixel_vals(t, bw * bh), bw, bh)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
 
-    return docs.mapInPandas(synth, "asset_id long, content binary")
+def _jpeg_gray_rows(content: bytes, progressive: bool = False):
+    """Gray JPEG decode → (width, height, n_blocks, *`_luma_stats`);
+    `progressive` also requires the decoder to attest the SOF2 path
+    ran."""
+    from parallelutilities_jl_spark.operators.jpeg import decode_jpeg
+
+    m = decode_jpeg(content)
+    if m is None or (progressive and not m.get("progressive")):
+        return None
+    return [(m["width"], m["height"], m["n_blocks"], *_luma_stats(m["luma"]))]
+
+
+def _jpeg_color_rows(content: bytes):
+    """YCbCr JPEG decode → (width, height, n_blocks, n_components,
+    y_sum, y_weighted, y_topleft, cb_sum, cr_sum); the decoder must
+    attest three components."""
+    from parallelutilities_jl_spark.operators.jpeg import decode_jpeg
+
+    m = decode_jpeg(content)
+    if m is None or m.get("n_components") != 3:
+        return None
+    return [(
+        m["width"], m["height"], m["n_blocks"], m["n_components"],
+        *_luma_sums(m["luma"]), int(m["luma"][0]),
+        int(m["cb"].sum()), int(m["cr"].sum()),
+    )]
+
+
+_JPEG_GRAY_SCHEMA = (
+    "asset_id long, width int, height int, n_blocks int, "
+    + _LUMA_STATS_SCHEMA
+)
+_JPEG_COLOR_STATS_SCHEMA = (
+    "n_components int, y_sum long, y_weighted long, y_topleft int, "
+    "cb_sum long, cr_sum long"
+)
 
 
 def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2550,56 +2213,12 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     entropy/AC machinery is pinned by tests/test_jpeg_codec.py against
     arbitrary coefficients. Scale shape: two chained mapInPandas
     passes, zero shuffles."""
-    from parallelutilities_jl_spark.operators.jpeg import decode_jpeg
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
-    assets = synthesize_jpeg_assets(spark, sf_dir)
-
-    out_schema = (
-        "asset_id long, width int, height int, n_blocks int, "
-        "n_pixels long, luma_sum long, luma_min int, luma_max int, "
-        "luma_topleft int, luma_weighted long"
+    return _map_assets(
+        synthesize_jpeg_assets(spark, sf_dir),
+        _JPEG_GRAY_SCHEMA,
+        "JPEG",
+        _jpeg_gray_rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_jpeg(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None:
-                    raise ValueError(
-                        f"invalid JPEG payload for asset {aid}"
-                    )
-            lums = [m["luma"] for m in metas]
-            sums = [_luma_sums(lu) for lu in lums]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "n_blocks": pd.array(
-                        [m["n_blocks"] for m in metas], dtype="Int32"
-                    ),
-                    "n_pixels": [len(lu) for lu in lums],
-                    "luma_sum": [s for s, _ in sums],
-                    "luma_min": pd.array(
-                        [int(lu.min()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_max": pd.array(
-                        [int(lu.max()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_topleft": pd.array(
-                        [int(lu[0]) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_weighted": [w for _, w in sums],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def q_multimodal_jpeg_prog_decode(
@@ -2620,80 +2239,26 @@ def q_multimodal_jpeg_prog_decode(
     silent fallback to the baseline scan loop cannot fake a pass.
     Scale shape: two chained mapInPandas passes, zero shuffles."""
     from parallelutilities_jl_spark.operators.jpeg import (
-        decode_jpeg,
         encode_jpeg_prog_gray,
     )
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
+    def encode(i: int, t: str) -> bytes:
+        bw, bh = _jpg_dims(i)
+        return encode_jpeg_prog_gray(
+            _bmp_pixel_vals(t, bw * bh), bw, bh,
+            restart_interval=2 if i % 3 == 0 else 0,
+        )
+
+    return _map_assets(
+        _encode_docs(
+            load_table_parallel(spark, sf_dir, "documents"),
+            encode,
+            nonempty=True,
+        ),
+        _JPEG_GRAY_SCHEMA,
+        "progressive JPEG",
+        lambda c: _jpeg_gray_rows(c, progressive=True),
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                bw, bh = _jpg_dims(int(i))
-                ri = 2 if int(i) % 3 == 0 else 0
-                contents.append(
-                    encode_jpeg_prog_gray(
-                        _bmp_pixel_vals(t, bw * bh), bw, bh,
-                        restart_interval=ri,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
-        "asset_id long, width int, height int, n_blocks int, "
-        "n_pixels long, luma_sum long, luma_min int, luma_max int, "
-        "luma_topleft int, luma_weighted long"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_jpeg(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None or not m.get("progressive"):
-                    raise ValueError(
-                        f"invalid progressive JPEG payload for asset {aid}"
-                    )
-            lums = [m["luma"] for m in metas]
-            sums = [_luma_sums(lu) for lu in lums]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "n_blocks": pd.array(
-                        [m["n_blocks"] for m in metas], dtype="Int32"
-                    ),
-                    "n_pixels": [len(lu) for lu in lums],
-                    "luma_sum": [s for s, _ in sums],
-                    "luma_min": pd.array(
-                        [int(lu.min()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_max": pd.array(
-                        [int(lu.max()) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_topleft": pd.array(
-                        [int(lu[0]) for lu in lums], dtype="Int32"
-                    ),
-                    "luma_weighted": [w for _, w in sums],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 def q_multimodal_jpeg_color_decode(
@@ -2707,75 +2272,26 @@ def q_multimodal_jpeg_color_decode(
     per-plane statistics; a swapped component order, a cross-component
     predictor leak, or a wrong quant-table binding hash-mismatches the
     closed-form oracle."""
-    from parallelutilities_jl_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color,
-    )
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
+    from parallelutilities_jl_spark.operators.jpeg import encode_jpeg_color
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
-    )
+    def encode(i: int, t: str) -> bytes:
+        bw, bh = _jpg_dims(i)
+        y = _bmp_pixel_vals(t, bw * bh)
+        cb = [(v + 64) % 256 for v in y]
+        cr = [255 - v for v in y]
+        return encode_jpeg_color(y, cb, cr, bw, bh)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                bw, bh = _jpg_dims(int(i))
-                y = _bmp_pixel_vals(t, bw * bh)
-                cb = [(v + 64) % 256 for v in y]
-                cr = [255 - v for v in y]
-                contents.append(encode_jpeg_color(y, cb, cr, bw, bh))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
+    return _map_assets(
+        _encode_docs(
+            load_table_parallel(spark, sf_dir, "documents"),
+            encode,
+            nonempty=True,
+        ),
         "asset_id long, width int, height int, n_blocks int, "
-        "n_components int, y_sum long, y_weighted long, y_topleft int, "
-        "cb_sum long, cr_sum long"
+        + _JPEG_COLOR_STATS_SCHEMA,
+        "color JPEG",
+        _jpeg_color_rows,
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_jpeg(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None or m.get("n_components") != 3:
-                    raise ValueError(
-                        f"invalid color JPEG payload for asset {aid}"
-                    )
-            sums = [_luma_sums(m["luma"]) for m in metas]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "n_blocks": pd.array(
-                        [m["n_blocks"] for m in metas], dtype="Int32"
-                    ),
-                    "n_components": pd.array(
-                        [m["n_components"] for m in metas], dtype="Int32"
-                    ),
-                    "y_sum": [s for s, _ in sums],
-                    "y_weighted": [w for _, w in sums],
-                    "y_topleft": pd.array(
-                        [int(m["luma"][0]) for m in metas], dtype="Int32"
-                    ),
-                    "cb_sum": [int(m["cb"].sum()) for m in metas],
-                    "cr_sum": [int(m["cr"].sum()) for m in metas],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
 
 
 # 4:2:0 MCU-grid spec: (base, mod) in 16x16 MCUs; Y blocks live on the
@@ -2795,77 +2311,33 @@ def q_multimodal_jpeg420_decode(
     complement). A wrong in-MCU block order, a chroma/luma quant-table
     swap, or a broken upsample hash-mismatches the closed-form
     oracle."""
-    from parallelutilities_jl_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg_420,
-    )
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
+    from parallelutilities_jl_spark.operators.jpeg import encode_jpeg_420
 
-    ensure_package_on_executors(spark)
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 1))
-        .select("doc_id", "text")
-    )
+    def encode(i: int, t: str) -> bytes:
+        mcw, mch = _dims_of(_JPG420_MWH, i)
+        yv = _bmp_pixel_vals(t, 4 * mcw * mch)
+        bw2 = 2 * mcw
+        tl = [
+            yv[(2 * (j // mcw)) * bw2 + 2 * (j % mcw)]
+            for j in range(mcw * mch)
+        ]
+        cb = [(v + 64) % 256 for v in tl]
+        cr = [255 - v for v in tl]
+        return encode_jpeg_420(yv, cb, cr, mcw, mch)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                mcw, mch = _dims_of(_JPG420_MWH, int(i))
-                yv = _bmp_pixel_vals(t, 4 * mcw * mch)
-                bw2 = 2 * mcw
-                tl = [
-                    yv[(2 * (j // mcw)) * bw2 + 2 * (j % mcw)]
-                    for j in range(mcw * mch)
-                ]
-                cb = [(v + 64) % 256 for v in tl]
-                cr = [255 - v for v in tl]
-                contents.append(encode_jpeg_420(yv, cb, cr, mcw, mch))
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    assets = docs.mapInPandas(synth, "asset_id long, content binary")
-
-    out_schema = (
+    # the decoder's block count is the MCU count here; n_components is
+    # attested by `_jpeg_color_rows` but not part of this head's output
+    return _map_assets(
+        _encode_docs(
+            load_table_parallel(spark, sf_dir, "documents"),
+            encode,
+            nonempty=True,
+        ),
         "asset_id long, width int, height int, n_mcus int, "
-        "y_sum long, y_weighted long, y_topleft int, "
-        "cb_sum long, cr_sum long"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_jpeg(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None or m.get("n_components") != 3:
-                    raise ValueError(
-                        f"invalid 4:2:0 JPEG payload for asset {aid}"
-                    )
-            sums = [_luma_sums(m["luma"]) for m in metas]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "n_mcus": pd.array(
-                        [m["n_blocks"] for m in metas], dtype="Int32"
-                    ),
-                    "y_sum": [s for s, _ in sums],
-                    "y_weighted": [w for _, w in sums],
-                    "y_topleft": pd.array(
-                        [int(m["luma"][0]) for m in metas], dtype="Int32"
-                    ),
-                    "cb_sum": [int(m["cb"].sum()) for m in metas],
-                    "cr_sum": [int(m["cr"].sum()) for m in metas],
-                }
-            )
-
-    return assets.mapInPandas(decode, out_schema)
+        + _JPEG_COLOR_STATS_SCHEMA,
+        "4:2:0 JPEG",
+        _jpeg_color_rows,
+    ).drop("n_components")
 
 
 def _oracle_jpeg420_decode() -> str:
@@ -3001,33 +2473,19 @@ def decode_census_from_docs(docs: DataFrame) -> DataFrame:
     streaming DataFrame (complete output mode) — the decode-on-arrival
     shape a multimodal ingest pipeline runs; stream ≡ batch is pinned
     by tests/test_streaming_decode.py."""
-    assets = synthesize_bmp_from_docs(docs)
 
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "width", "height", "luma_sum", "luma_weighted"
-            )}
-            for aid, c in zip(pdf["asset_id"], pdf["content"]):
-                m = _decode_bmp(bytes(c))
-                if m is None:
-                    raise ValueError(f"invalid BMP payload for asset {aid}")
-                l_sum, l_weighted = _luma_sums(m["luma"])
-                out["width"].append(m["width"])
-                out["height"].append(m["height"])
-                out["luma_sum"].append(l_sum)
-                out["luma_weighted"].append(l_weighted)
-            yield pd.DataFrame(
-                {
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "luma_sum": out["luma_sum"],
-                    "luma_weighted": out["luma_weighted"],
-                }
-            )
+    def rows(c: bytes):
+        m = _decode_bmp(c)
+        return None if m is None else [
+            (m["width"], m["height"], *_luma_sums(m["luma"]))
+        ]
 
-    per = assets.mapInPandas(
-        dec, "width int, height int, luma_sum long, luma_weighted long"
+    per = _map_assets(
+        synthesize_bmp_from_docs(docs),
+        "asset_id long, width int, height int, luma_sum long, "
+        "luma_weighted long",
+        "BMP",
+        rows,
     )
     return per.groupBy("width", "height").agg(
         F.count(F.lit(1)).alias("n_assets"),
@@ -3063,87 +2521,36 @@ def decode_assets(assets: DataFrame) -> DataFrame:
     """mapInPandas decode: (asset_id, modality, content) → + decoded
     metadata columns. Arrow-batched; per-batch Python, not per-row."""
 
-    # the decode closure references module-level stubs, which cloudpickle
-    # serializes by reference — executors must be able to import the pkg
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(assets.sparkSession)
-
-    out_schema = (
-        "asset_id long, modality string, n_bytes long, width int, "
-        "height int, sample_rate int, n_frames int"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for c, m in zip(pdf["content"], pdf["modality"]):
-                # dispatch on claimed modality FIRST, container sniff
-                # second: only audio rows may take the real WAV
-                # decoder, only image rows the real BMP/PNG decoders,
-                # only video rows the real GIF decoder. An image/video
-                # blob that happens to be a structurally valid
-                # RIFF/WAVE container must NOT get WAV metadata (NULL
-                # width/height) — the row's output contract follows its
-                # modality, and rows whose bytes are not a valid
-                # container for their modality fall back to the
-                # documented stand-in
-                wav = _decode_wav(bytes(c)) if m == "audio" else None
-                bmp = gif = None
-                if m == "image":
-                    bmp = _decode_image_any(bytes(c))
-                elif m == "video":
-                    gif = _decode_gif(bytes(c))
-                if wav is not None:
-                    metas.append(
-                        {
-                            "width": None,
-                            "height": None,
-                            "sample_rate": wav["sample_rate"],
-                            "n_frames": wav["n_frames"],
-                        }
-                    )
-                elif bmp is not None:
-                    metas.append(
-                        {
-                            "width": bmp["width"],
-                            "height": bmp["height"],
-                            "sample_rate": None,
-                            "n_frames": None,
-                        }
-                    )
-                elif gif is not None:
-                    metas.append(
-                        {
-                            "width": gif["width"],
-                            "height": gif["height"],
-                            "sample_rate": None,
-                            "n_frames": gif["n_frames"],
-                        }
-                    )
-                else:
-                    metas.append(_decode_stub(c, m))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": [len(c) for c in pdf["content"]],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [m["sample_rate"] for m in metas], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [m["n_frames"] for m in metas], dtype="Int32"
-                    ),
-                }
+    def rows(c: bytes, m: str):
+        # dispatch on claimed modality FIRST, container sniff second:
+        # only audio rows may take the real WAV decoder, only image rows
+        # the real BMP/PNG/JPEG decoders, only video rows the real GIF
+        # decoder. An image/video blob that happens to be a structurally
+        # valid RIFF/WAVE container must NOT get WAV metadata (NULL
+        # width/height) — the row's output contract follows its
+        # modality, and rows whose bytes are not a valid container for
+        # their modality fall back to the documented stand-in
+        if m == "audio" and (wav := _decode_wav(c)) is not None:
+            meta = (None, None, wav["sample_rate"], wav["n_frames"])
+        elif m == "image" and (img := _decode_image_any(c)) is not None:
+            meta = (img["width"], img["height"], None, None)
+        elif m == "video" and (gif := _decode_gif(c)) is not None:
+            meta = (gif["width"], gif["height"], None, gif["n_frames"])
+        else:
+            s = _decode_stub(c, m)
+            meta = tuple(
+                s[k] for k in ("width", "height", "sample_rate", "n_frames")
             )
+        return [(m, len(c), *meta)]
 
-    return assets.mapInPandas(decode, out_schema)
+    return _map_assets(
+        assets,
+        "asset_id long, modality string, n_bytes long, width int, "
+        "height int, sample_rate int, n_frames int",
+        "media",
+        rows,
+        extra=("modality",),
+    )
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
@@ -3152,62 +2559,36 @@ def extract_features(assets: DataFrame) -> DataFrame:
     (`_media_features` — luma histogram / PCM frame energies /
     per-frame luma sums), sha256 fallback only for containers outside
     the stdlib codecs. One Arrow-batched pass, zero shuffles."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(assets.sparkSession)
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "features": [
-                        _media_features(bytes(c), m)
-                        for c, m in zip(pdf["content"], pdf["modality"])
-                    ],
-                }
-            )
-
-    return assets.mapInPandas(feats, "asset_id long, features array<double>")
+    return _map_assets(
+        assets,
+        "asset_id long, features array<double>",
+        "media",
+        lambda c, m: [(_media_features(c, m),)],
+        extra=("modality",),
+    )
 
 
 RESIZE_BOX = 224
 
 
 def resize_plan(decoded: DataFrame, box: int = RESIZE_BOX) -> DataFrame:
-    """mapInPandas resize: fit decoded images into a `box`×`box` square
-    preserving aspect ratio. The pixel transform itself is the stubbed
-    part (no PIL in this container — content passes through untouched);
-    the dimension arithmetic, batch shape, and schema are the real
-    deployment surface."""
-    imgs = decoded.filter(F.col("modality") == "image")
+    """Resize plan: fit decoded images into a `box`×`box` square
+    preserving aspect ratio. The pixel resample itself is
+    `multimodal_bmp_resize`; this stage is the dimension arithmetic
+    alone, so it is plain column ops — floor, not round (round-half
+    ties differ across engines), on the same IEEE doubles
+    (box / max(w, h), then w · scale) in both engines."""
+    scale = F.lit(box) / F.greatest("width", "height")
 
-    out_schema = (
-        "asset_id long, width int, height int, new_w int, new_h int"
-    )
+    def fit(c: str) -> F.Column:
+        return F.greatest(F.lit(1), F.floor(F.col(c) * scale)).cast("int")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        for pdf in batches:
-            new_w, new_h = [], []
-            for w, h in zip(pdf["width"], pdf["height"]):
-                scale = box / max(int(w), int(h))
-                # floor, not round: round-half ties differ across engines
-                new_w.append(max(1, math.floor(int(w) * scale)))
-                new_h.append(max(1, math.floor(int(h) * scale)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "new_w": pd.array(new_w, dtype="int32"),
-                    "new_h": pd.array(new_h, dtype="int32"),
-                }
-            )
-
-    return imgs.select("asset_id", "width", "height", "modality").mapInPandas(
-        resize, out_schema
+    return decoded.filter(F.col("modality") == "image").select(
+        "asset_id",
+        "width",
+        "height",
+        fit("width").alias("new_w"),
+        fit("height").alias("new_h"),
     )
 
 
@@ -3699,31 +3080,14 @@ def synthesize_bmp_gray_assets(
     make integer luma exactly the sampled codepoint (mod 256), so the
     oracle can replay the grid from the text alone while the Spark
     side goes through the full encode → strict-parse round trip."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     g = DHASH_GRID
-    docs = (
-        load_table_parallel(spark, sf_dir, "documents")
-        .filter(
-            F.col("text").isNotNull()
-            & (F.col("doc_id") % 3 == 0)
-            & (F.length("text") >= DHASH_MIN_LEN)
-        )
-        .select("doc_id", "text")
+    docs = load_table_parallel(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") % 3 == 0) & (F.length("text") >= DHASH_MIN_LEN)
     )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = [
-                _bmp_bytes(_bmp_pixel_vals(t, g * g), g, g, gray=True)
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {"asset_id": pdf["doc_id"], "content": contents}
-            )
-
-    return docs.mapInPandas(synth, "asset_id long, content binary")
+    return _encode_docs(
+        docs,
+        lambda _i, t: _bmp_bytes(_bmp_pixel_vals(t, g * g), g, g, gray=True),
+    )
 
 
 def q_multimodal_dhash_near_dup(
@@ -3753,26 +3117,13 @@ def q_multimodal_dhash_near_dup(
     mapInPandas passes; banding + bucket-capped self-join + bit_count
     verify is exactly the audited simhash_near_dup plan with a 14-bit
     key space (4x fewer hot buckets than the 8-bit simhash bands)."""
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     g = DHASH_GRID
-    assets = synthesize_bmp_gray_assets(spark, sf_dir)
 
-    def grid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [_decode_bmp(bytes(c)) for c in pdf["content"]]
-            for aid, m in zip(pdf["asset_id"], metas):
-                if m is None or len(m["luma"]) != g * g:
-                    raise ValueError(
-                        f"invalid gray BMP payload for asset {aid}"
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "hs": [m["luma"] for m in metas],
-                }
-            )
+    def grid(c: bytes):
+        m = _decode_bmp(c)
+        if m is None or len(m["luma"]) != g * g:
+            return None
+        return [(m["luma"],)]
 
     li = f"CAST(b DIV {g - 1} AS INT) * {g} + CAST(b % {g - 1} AS INT)"
     dh = (
@@ -3780,9 +3131,12 @@ def q_multimodal_dhash_near_dup(
         f"acc + IF(element_at(hs, {li} + 1) < element_at(hs, {li} + 2), "
         f"shiftleft(1L, CAST(b AS INT)), 0L))"
     )
-    fp = assets.mapInPandas(grid, "asset_id long, hs array<bigint>").select(
-        "asset_id", F.expr(dh).alias("dhash")
-    )
+    fp = _map_assets(
+        synthesize_bmp_gray_assets(spark, sf_dir),
+        "asset_id long, hs array<bigint>",
+        "gray BMP",
+        grid,
+    ).select("asset_id", F.expr(dh).alias("dhash"))
     bands = fp.select(
         "asset_id",
         "dhash",

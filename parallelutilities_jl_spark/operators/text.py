@@ -841,10 +841,14 @@ def _bpe_cte_chain(n_merges: int = BPE_MERGES) -> tuple[list[str], list[str]]:
     """The merge rounds as chained CTEs (no RNG → replayable). DuckDB's
     generate_series(1, 0) is empty (unlike Spark's), so single-symbol
     words drop out of the pair lateral naturally. Returns (ctes,
-    per-round merge-table SELECTs); the final vocab is `v{n_merges}`."""
+    per-round merge-table SELECTs); the final vocab is `v{n_merges}`.
+    Each vocab and winner CTE is read twice (next round's pair count
+    and its rewrite), so they are MATERIALIZED: inlined, round r would
+    expand into 2^r copies of the corpus scan and its aggregates —
+    11 rounds at sf0.001 ran out of memory in DuckDB at 11 GiB."""
     nt = TH.dd_norm_text("text")
     ctes = [
-        f"""v0 AS (
+        f"""v0 AS MATERIALIZED (
   SELECT regexp_replace(word, '(.)', '(\\1)', 'g') AS w, freq FROM (
     SELECT word, COUNT(*) AS freq FROM (
       SELECT UNNEST(string_split({nt}, ' ')) AS word
@@ -864,11 +868,12 @@ def _bpe_cte_chain(n_merges: int = BPE_MERGES) -> tuple[list[str], list[str]]:
   GROUP BY 1, 2)"""
         )
         ctes.append(
-            f"t{r} AS (SELECT x, y, pair_count FROM p{r} "
+            f"t{r} AS MATERIALIZED (SELECT x, y, pair_count FROM p{r} "
             f"ORDER BY pair_count DESC, x, y LIMIT 1)"
         )
         ctes.append(
-            f"v{r} AS (SELECT REPLACE(w, '(' || x || ')(' || y || ')', "
+            f"v{r} AS MATERIALIZED ("
+            f"SELECT REPLACE(w, '(' || x || ')(' || y || ')', "
             f"'(' || x || y || ')') AS w, freq "
             f"FROM {prev} CROSS JOIN t{r})"
         )

@@ -48,14 +48,6 @@ def dd_partition(total: int, np, i: str = "i") -> str:
     )
 
 
-def dd_droptake(total: int, np: str = "np", p: str = "p") -> tuple[str, str]:
-    d = f"({total} // {np})"
-    r = f"({total} % {np})"
-    drop = f"({d} * ({p} - 1) + LEAST({r}, {p} - 1))"
-    take = f"({d} * {p} + LEAST({r}, {p}) - {drop})"
-    return drop, take
-
-
 def product_cte(
     spec: ProductSpec, np: int | None = None, i: str = "i"
 ) -> str:

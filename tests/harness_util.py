@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -83,8 +85,22 @@ def _norm(v):
     return v
 
 
+# DuckDB defaults to 80% of RAM and every core; beside the Spark
+# driver's 8 GiB heap on a 15 GiB box that default can take the machine
+# down before DuckDB's own limit trips. Cap it, and give it somewhere
+# to spill (the first Spark scratch dir, so test litter stays in one
+# place).
+DUCK_MEMORY_LIMIT = "4GB"
+DUCK_THREADS = 2
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    local = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    spill = os.path.join(local or tempfile.gettempdir(), "duckdb-spill")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{DUCK_MEMORY_LIMIT}'")
+    con.execute(f"SET threads = {DUCK_THREADS}")
+    con.execute(f"SET temp_directory = '{spill}'")
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings".split()

@@ -53,6 +53,7 @@ def test_bench_cli_emits_single_json_line():
     assert detail["median"] == d["queries"]
     assert set(detail["spread"]) == set(d["queries"])
     assert detail["reps"] == 1
+    assert detail["cpus"] == 4  # the gate's like-with-like key
     # round-14: the per-head canary column (one pinned scan-agg rep
     # timed immediately before each head) — lets the artifact
     # discriminate a one-head step change (plan regression) from box
@@ -134,6 +135,10 @@ GATE_BAND = 1.05
 #    Ratchet protocol: when a fresh full run's raw common total beats
 #    the accepted one, copy BENCH_DETAIL.json over BENCH_ACCEPTED.json
 #    in the same commit (down-only, one-line justification).
+#    BENCH_DETAIL.json itself is overwritten only by a full sf0.1
+#    `python bench.py` run, committed exactly as that run wrote it
+#    (its `cpus` included); the gate judges it against BENCH_ACCEPTED
+#    only when the two `cpus` agree and skips otherwise.
 #  * Screen on the totals first (cheap, unchanged semantics). If both
 #    raw and normalized sit inside their +5% bands, pass.
 #  * Otherwise run the per-head analysis. A head is a STEP CHANGE when
@@ -195,7 +200,49 @@ def test_common_total_regression_gate():
         )
     with open(os.path.join(REPO, "BENCH_ACCEPTED.json")) as f:
         ref = json.load(f)
+    _regression_gate(d, ref)
 
+
+def test_regression_gate_still_fails_a_same_core_step():
+    """The like-with-like rule must not loosen the gate: an artifact at
+    the refs' own core count, on a uniformly slow boot, with ONE head
+    2x slower than the rest, is still a step change."""
+    with open(os.path.join(REPO, "BENCH_ACCEPTED.json")) as f:
+        ref = json.load(f)
+    drift = 1.3  # pushes both totals over band into the per-head analysis
+    slow = "dataset_card_report"
+    med = {k: round(v * drift, 3) for k, v in ref["median"].items()}
+    med[slow] = round(med[slow] * 2, 3)
+    d = {
+        "cpus": ref["cpus"],
+        "sf": 0.1,
+        "r06_common_total": round(ref["r06_common_total"] * drift, 3),
+        "r06_common_total_norm": round(
+            ref["r06_common_total_norm"] * drift, 3
+        ),
+        "median": med,
+        "spread": {k: [v, v] for k, v in med.items()},
+    }
+    with pytest.raises(AssertionError, match=f"STEP CHANGE(.|\n)*{slow}"):
+        _regression_gate(d, ref)
+    # the same artifact without the step passes as boot drift
+    med[slow] = round(ref["median"][slow] * drift, 3)
+    d["spread"] = {k: [v, v] for k, v in med.items()}
+    with pytest.warns(UserWarning, match="uniform"):
+        _regression_gate(d, ref)
+
+
+def _regression_gate(d: dict, ref: dict) -> None:
+    """The gate proper: `d` is a bench detail artifact, `ref` the
+    accepted one. Walls measured at different core counts are scaling,
+    not regressions, so the gate skips unless both artifacts record
+    the same `cpus`."""
+    if d.get("cpus") != ref.get("cpus"):
+        pytest.skip(
+            f"BENCH_DETAIL.json was measured at cpus={d.get('cpus')}, "
+            f"the BENCH_ACCEPTED.json refs at cpus={ref.get('cpus')}: "
+            "the gate compares like with like only"
+        )
     raw = d["r06_common_total"]
     norm = d["r06_common_total_norm"]
     raw_bad = raw > RAW_GATE_REF_SEC * GATE_BAND

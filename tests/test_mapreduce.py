@@ -234,6 +234,53 @@ def test_dense_elsum_int_overflow_raises(spark):
     assert "headroom" in str(ei.value)
 
 
+def test_checked_add_bounds_every_add():
+    # ADVICE r17: a guard run once after the fold missed this — four
+    # int8 partials of 60 sum to 240, which wraps to -16 and lands back
+    # inside the post-fold band; the pre-add bound trips on the way
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import _checked_add
+
+    acc = np.full(8, 60, dtype=np.int8)
+    with pytest.raises(OverflowError, match="headroom"):
+        for _ in range(3):
+            acc = _checked_add(acc, np.full(8, 60, dtype=np.int8), out=acc)
+    # float accumulations are never bounded (IEEE saturates to inf)
+    big = np.full(4, 1e308)
+    with np.errstate(over="ignore"):
+        assert np.isinf(_checked_add(big, big)).all()
+
+
+@pytest.mark.parametrize("twin", ["collect", "sink"])
+def test_dense_elsum_four_int8_partials_of_60_raise(spark, twin):
+    # the same counterexample end to end: one task per map partition,
+    # so four partials of 60 meet in the chunk fold of both twins
+    import numpy as np
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import PythonException
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
+    )
+
+    def gen(i):
+        return np.full((4, 5), 60, dtype=np.int8)
+
+    with pytest.raises((PythonException, Py4JJavaError)) as ei:
+        if twin == "collect":
+            pmapreduce_dense_elsum(
+                spark, 4, gen, num_partitions=4, n_chunks=2
+            )
+        else:
+            pmapreduce_dense_elsum_long(
+                spark, 4, gen, num_partitions=4, n_chunks=2,
+                ship_dtype="int8",
+            ).collect()
+    assert "OverflowError" in str(ei.value)
+
+
 def test_flip_swaps_arguments():
     from parallelutilities_jl_spark.operators.reductions import ReduceOp, flip
 
