@@ -323,6 +323,11 @@ def pmapreduce_dense_elsum(
     builds by hand (reference src/trees.jl:42-137)."""
     import numpy as np
 
+    from parallelutilities_jl_spark.session import ensure_package_on_executors
+
+    # the chunk folds call `_checked_add`, which cloudpickle ships by
+    # reference to this module
+    ensure_package_on_executors(spark)
     sc = spark.sparkContext
     n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
     n_chunks = n_chunks or n_parts
@@ -405,6 +410,11 @@ def pmapreduce_dense_elsum_long(
     but bounds the result by driver memory; this one does not."""
     import numpy as np
 
+    from parallelutilities_jl_spark.session import ensure_package_on_executors
+
+    # the chunk folds call `_checked_add`, which cloudpickle ships by
+    # reference to this module
+    ensure_package_on_executors(spark)
     sc = spark.sparkContext
     n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
     n_chunks = n_chunks or n_parts
@@ -603,15 +613,13 @@ def q_pmapreduce_bigsum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dense_elsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable wrapper for the dense elsum workload: 32 tasks ×
-    ones, elementwise-summed; emits shape + corner + total.
+    Float64 ones, elementwise-summed; emits shape + corner + total.
 
     At bench scale (sf ≥ 0.1) the per-task array is the reference's
-    published shape — 10_000×1_000 (reference docs/src/index.md:22-46,
-    2.17 s on 56 cores), generated int8 since the ones-sum is exact in
-    any dtype (see inline note) — so BENCH times the apples-to-apples
-    workload. The sf0.01 correctness sweep uses
-    1000×1000 (16× less work; the oracle constants below match that
-    shape, and the driver contract pins the oracle run to sf=0.01)."""
+    published Float64 10_000×1_000 (reference docs/src/index.md:22-46,
+    2.17 s on 56 cores). The sf0.01 correctness sweep uses 1000×1000
+    (16× less work; the oracle constants below match that shape, and the
+    driver contract pins the oracle run to sf=0.01)."""
     import numpy as np
 
     full = _sf_of(sf_dir) >= 0.1
@@ -628,20 +636,10 @@ def q_dense_elsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # faster AND far tighter-variance than 8 under bench-sequence JVM
     # pressure (median 1.17 s, max 1.34 s vs median 1.61 s, max 2.61 s).
     par = spark.sparkContext.defaultParallelism
-    # ones sum EXACTLY: every element of the reduced array is the task
-    # count (32) and every partial is <= 32, so the whole pipeline —
-    # generate, in-place accumulate, chunk shuffle, driver collect —
-    # runs in int8, 8x narrower than the float64 it used to ship
-    # (guide §2.3 narrower types; the sink twin's int16 move, round 16).
-    # The dtype is make_array's to choose — the operator is
-    # dtype-agnostic — and the emitted row casts back to the same
-    # float64 values (32 and 32*npix are exact in int8/int64/float64),
-    # with `_checked_add`'s pre-add bound catching any future
-    # task-count change that could wrap.
     out = pmapreduce_dense_elsum(
         spark,
         32,
-        lambda i: np.ones(shape, dtype=np.int8),
+        lambda i: np.ones(shape),
         num_partitions=max(2, min(32, par // 8)) if full else None,
         n_chunks=16 if full else 8,
     )

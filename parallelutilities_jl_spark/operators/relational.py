@@ -945,11 +945,15 @@ GROUP BY a.event_id, a.user_id
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: 30-minute inactivity gap splits sessions (lag +
-    cumulative sum — the batch analog of session_window)."""
+    cumulative sum — the batch analog of session_window). The gap is
+    compared in microseconds, so a gap of 1800.4 s opens a new session
+    as the oracle's fractional `epoch(ts)` difference does (whole-second
+    `unix_timestamp` would truncate it to 1800)."""
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    is_new = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = us - F.lag(us).over(w)
+    is_new = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
     wcum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     sess = (
         events.withColumn("is_new", is_new)

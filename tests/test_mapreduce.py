@@ -188,10 +188,10 @@ def test_dense_elsum_long_narrow_dtype_identical(spark):
 
 
 def test_dense_elsum_collect_narrow_dtype_identical(spark):
-    # round-17: the collect twin's ones workload generates/accumulates/
-    # ships int8 (the operator is dtype-agnostic — the dtype is
-    # make_array's) — the reduced array must be elementwise identical
-    # to the float64 pipeline after the final cast
+    # operator-level pin: the collect twin is dtype-agnostic (the dtype
+    # is make_array's), so a ones workload generated, accumulated and
+    # shipped in int8 must be elementwise identical to the float64
+    # pipeline after the final cast
     import numpy as np
 
     from parallelutilities_jl_spark.operators.mapreduce import (

@@ -85,16 +85,44 @@ def null_corpus(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("qname", EVENTS_QUERIES)
 def test_null_events_parity(spark, null_corpus, qname):
+    _assert_events_parity(spark, null_corpus, qname)
+
+
+def test_sessionize_subsecond_gap_opens_session(spark, tmp_path):
+    # user 1's events are 1800.4 s apart: past the 30-min gap, so two
+    # sessions (a whole-second gap would truncate to 1800 and merge
+    # them); user 2's exact 1800 s gap stays one session
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (1, t0, 1, "view", 1.0, None),
+        (2, t0 + dt.timedelta(seconds=1800, microseconds=400_000), 1,
+         "view", 2.0, None),
+        (3, t0, 2, "view", 3.0, None),
+        (4, t0 + dt.timedelta(seconds=1800), 2, "view", 4.0, None),
+    ]
+    d = str(tmp_path)
+    spark.createDataFrame(rows, EV_SCHEMA).write.parquet(
+        f"{d}/events.parquet"
+    )
+    import __spark_entry__ as entrymod
+
+    got = entrymod.queries()["sessionize_events"](spark, d).collect()
+    n_sessions = {u: sum(r.user_id == u for r in got) for u in (1, 2)}
+    assert n_sessions == {1: 2, 2: 1}
+    _assert_events_parity(spark, d, "sessionize_events")
+
+
+def _assert_events_parity(spark, corpus_dir, qname):
     import __spark_entry__ as entrymod
 
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    sdf = qs[qname](spark, null_corpus)
+    sdf = qs[qname](spark, corpus_dir)
     s_cols = list(sdf.columns)
     s_rows = sdf.collect()
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "
-        f"'{null_corpus}/events.parquet/*.parquet'"
+        f"'{corpus_dir}/events.parquet/*.parquet'"
     )
     arr = con.execute(osql[qname]).fetch_arrow_table()
     d_cols = arr.schema.names

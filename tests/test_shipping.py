@@ -23,7 +23,8 @@ spark = (SparkSession.builder.master("local[4]")
 import __spark_entry__ as m
 qs = m.queries()
 for name in ("productsplit_partition_agg", "multimodal_decode",
-             "multimodal_features", "pmapbatch_partitions"):
+             "multimodal_features", "pmapbatch_partitions",
+             "pmapreduce_dense_elsum", "dense_elsum_sink"):
     n = qs[name](spark, "/root/testdata/sf0.001").count()
     assert n > 0, name
     print("OK", name, n)
@@ -44,4 +45,4 @@ def test_udf_queries_survive_foreign_cwd():
         },
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.count("OK") == 4, proc.stdout
+    assert proc.stdout.count("OK") == 6, proc.stdout
