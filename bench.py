@@ -337,7 +337,8 @@ def main() -> None:
         # is measured from its own state only (its warm run below
         # re-creates any cache the query itself maintains — the
         # resident-index case). `release_cached_blocks` clears the
-        # module-level fit caches AND unpersists every persistent RDD —
+        # resident memo of fits and graphs AND unpersists every
+        # persistent RDD —
         # catalog.clearCache alone left the 49 localCheckpoint/persist
         # sites' blocks pinned, and over a 90-head roster that
         # accumulation degraded the round-13 driver run progressively

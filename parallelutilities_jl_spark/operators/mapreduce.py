@@ -296,6 +296,25 @@ def _checked_add(a, b, out=None):
     return np.add(a, b, out=out)
 
 
+def _partition_sum(make_array, ids):
+    """Elementwise sum of `make_array(i)` over one partition's `ids`
+    (None for an empty partition). It never writes into an array that
+    `make_array` returned — a caller may hand out one shared or
+    read-only array for every task: the first add allocates the
+    accumulator, later adds go in place into it."""
+    import numpy as np
+
+    acc, owned = None, False
+    for i in ids:
+        m = make_array(i)
+        if acc is None:
+            acc = np.asarray(m)
+        else:
+            acc = _checked_add(acc, m, out=acc if owned else None)
+            owned = True
+    return acc
+
+
 def pmapreduce_dense_elsum(
     spark: SparkSession,
     n_tasks: int,
@@ -333,13 +352,7 @@ def pmapreduce_dense_elsum(
     n_chunks = n_chunks or n_parts
 
     def part_chunks(it):
-        acc = None
-        for i in it:
-            m = make_array(i)
-            acc = (
-                np.asarray(m) if acc is None
-                else _checked_add(acc, m, out=acc)
-            )
+        acc = _partition_sum(make_array, it)
         if acc is None:
             return
         shape = acc.shape
@@ -362,7 +375,9 @@ def pmapreduce_dense_elsum(
                 acc[k] = (shape, v)
             else:
                 pv = prev[1]
-                out = pv if pv.flags.writeable else v
+                # deserialized chunks can arrive read-only; if pv is not
+                # writeable, allocate (v may be read-only too)
+                out = pv if pv.flags.writeable else None
                 acc[k] = (shape, _checked_add(pv, v, out=out))
         return iter(acc.items())
 
@@ -420,13 +435,7 @@ def pmapreduce_dense_elsum_long(
     n_chunks = n_chunks or n_parts
 
     def part_chunks(it):
-        acc = None
-        for i in it:
-            m = make_array(i)
-            acc = (
-                np.asarray(m) if acc is None
-                else _checked_add(acc, m, out=acc)
-            )
+        acc = _partition_sum(make_array, it)
         if acc is None:
             return
         flat = acc.reshape(-1)

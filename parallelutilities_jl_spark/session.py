@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -126,8 +127,14 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     for k, v in conf.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # a cluster may pin some confs immutable; keep going
+        except Exception as e:
+            # a cluster may pin some confs immutable; keep going, but
+            # say which one the session refused
+            warnings.warn(
+                f"session refused runtime conf {k}={v!r}: {e}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     spark._pu_tuned = True
     return spark
 
@@ -138,57 +145,73 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 #
 # The engine pins blocks two ways: per-call `localCheckpoint()` /
 # `persist()` inside individual queries (freed only when the RDD handle
-# is GC'd AND the ContextCleaner runs), and module-level fit caches
-# (clustering.py `_FIT_CACHE` and peers) that intentionally keep a
-# checkpointed frame alive for reuse within a session. Neither is freed
-# by `spark.catalog.clearCache()` (which only drops catalog-cached
-# relations), so a long-lived session running the full 234-query roster
+# is GC'd AND the ContextCleaner runs), and the resident memo below,
+# which intentionally keeps fitted models and graphs (checkpointed
+# frames) alive for reuse within a session. Neither is freed by
+# `spark.catalog.clearCache()` (which only drops catalog-cached
+# relations), so a long-lived session running the full roster
 # accumulates storage-memory blocks without bound — the round-13 driver
 # bench degraded progressively (heavy heads 5-8x) with exactly that
 # signature. The policy: after a query's result has been fully
 # materialized (written/collected), the caller may release EVERYTHING —
-# module caches first (so no dict keeps a handle to a frame whose
+# the memo first (so no entry keeps a handle to a frame whose
 # checkpoint blocks are about to vanish; a localCheckpoint has no
 # lineage to recompute from), then every persistent RDD in the context.
 
-_CACHE_CLEANERS: list = []
-
-# every module-level dict that holds DataFrame handles (fit caches
-# etc.) — `block_scope` evicts entries ADDED inside a scope before
-# freeing the scope's blocks, so no cache dangles on a
-# truncated-lineage frame. tests/test_block_release.py mechanically
-# asserts every `*CACHE*`-named module dict in the package is
-# registered here (the invariant a future unregistered cache would
-# silently break).
-_SCOPED_CACHES: list[dict] = []
+# (applicationId, artifact, *params) -> value; see `resident`
+_RESIDENT: dict[tuple, object] = {}
 
 
-def register_cache_cleaner(fn, caches: tuple[dict, ...] = ()) -> None:
-    """Register a zero-arg callable that drops a module-level cache of
-    DataFrame handles (fit caches etc.). Called by
-    `release_cached_blocks` BEFORE blocks are unpersisted so no cache
-    survives holding a frame whose checkpoint blocks were freed. Pass
-    the cache dicts themselves via `caches` so `block_scope` can do
-    entry-granular eviction (scope-created entries only)."""
-    _CACHE_CLEANERS.append(fn)
-    _SCOPED_CACHES.extend(caches)
+def resident(spark: SparkSession, key: tuple, build):
+    """The engine's one memo for artifacts that live across queries:
+    returns the value stored under `(applicationId, *key)`, or stores
+    `build()` there and returns it. `key[0]` names the artifact
+    (`"flat_fit"`, `"pq_fit"`, `"sampled_fit"`, `"power_direction"`,
+    `"mutual_edges"`), the rest are its parameters.
+
+    Every lookup first drops entries from other applications: their
+    checkpointed blocks died with that SparkContext, and keeping the
+    handles would pin dead references for the life of the process.
+    Keying by application also means a restarted session never sees
+    another session's frames. `build()` may itself look up other
+    artifacts (the mutual-edge graph builds on the sampled fit).
+
+    ASSUMPTION: the fixture under an `sf_dir` key is immutable for the
+    life of the application — a rewritten fixture at the same path
+    would be served stale (acceptable: fixtures are read-only).
+
+    SCALE NOTE: a stored frame pins its localCheckpoint'ed blocks in
+    executor storage until `release_cached_blocks` or a `block_scope`
+    exit drops the entry — the right trade at fixture/bench scale,
+    where every consumer re-reads the frame many times and the corpus
+    is MBs. At 100 TB the corpus side must NOT be pinned: keep only the
+    KB-sized model and let each consumer re-scan the columnar parquet;
+    the model is the only state worth pinning.
+
+    Values are shared: a caller that may mutate a model takes a copy."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _RESIDENT if k[0] != app]:
+        del _RESIDENT[k]
+    full = (app, *key)
+    if full not in _RESIDENT:
+        _RESIDENT[full] = build()
+    return _RESIDENT[full]
 
 
 def release_cached_blocks(spark: SparkSession) -> int:
-    """Release every cached/checkpointed block in the session: clear
-    registered module caches, the catalog cache, and unpersist every
-    persistent RDD (which is where `localCheckpoint()` blocks live).
-    Returns the number of RDDs unpersisted.
+    """Release every cached/checkpointed block in the session: clear the
+    resident memo, the catalog cache, and unpersist every persistent
+    RDD (which is where `localCheckpoint()` blocks live). Returns the
+    number of RDDs unpersisted.
 
     SAFE only between queries — i.e. after the previous query's result
     was fully materialized and before the next one builds its plan. A
     localCheckpointed RDD has truncated lineage, so unpersisting it
-    makes any still-held handle unrecomputable; clearing the module
-    caches first guarantees the engine itself holds none. This is the
+    makes any still-held handle unrecomputable; clearing the memo
+    first guarantees the engine itself holds none. This is the
     100x-scale fix: a resident service running thousands of queries per
     session otherwise leaks storage memory linearly in query count."""
-    for fn in list(_CACHE_CLEANERS):
-        fn()
+    _RESIDENT.clear()
     spark.catalog.clearCache()
     n = 0
     # py4j maps java.util.Map to a dict-like JavaMap
@@ -206,12 +229,12 @@ def block_scope(spark: SparkSession):
     queries' caches and every warm fit). On exit this releases ONLY
     what appeared inside the scope:
 
-    1. cache entries ADDED to any registered module cache during the
-       scope are evicted first (their checkpoint blocks are about to
-       vanish; a surviving handle would be unrecomputable — the same
-       clear-before-unpersist order the global release enforces);
-       entries that existed at entry keep both their handle and their
-       blocks, so cross-query cache warmth survives;
+    1. memo entries ADDED to `_RESIDENT` during the scope are evicted
+       first (their checkpoint blocks are about to vanish; a surviving
+       handle would be unrecomputable — the same clear-before-unpersist
+       order the global release enforces); entries that existed at
+       entry keep both their handle and their blocks, so cross-query
+       memo warmth survives;
     2. persistent RDDs whose ids were not present at entry are
        unpersisted.
 
@@ -221,32 +244,29 @@ def block_scope(spark: SparkSession):
     concurrent work by job group before trusting finer attribution.
 
     Yields a dict filled at exit: {"released": n_rdds_unpersisted,
-    "evicted": n_cache_entries_dropped}."""
+    "evicted": n_memo_entries_dropped}."""
     jsc = spark.sparkContext._jsc
     before = {int(k) for k in jsc.getPersistentRDDs().keys()}
     # snapshot (key, value REFERENCE): an entry OVERWRITTEN under a
     # pre-existing key during the scope must be evicted too — its new
     # checkpoint blocks are about to be unpersisted, and keeping the
-    # handle would leave a dangling truncated-lineage frame (the
-    # check-then-return memoizers never overwrite today; this enforces
-    # the invariant rather than assuming it). Holding the reference —
-    # not id() — matters: a del-then-recompute inside the scope frees
-    # the old value first, and CPython can hand its address to the
-    # replacement, defeating an id-only comparison.
-    cache_snapshot = [(c, dict(c)) for c in _SCOPED_CACHES]
+    # handle would leave a dangling truncated-lineage frame (`resident`
+    # never overwrites; this enforces the invariant rather than
+    # assuming it). Holding the reference — not id() — matters: a
+    # del-then-recompute inside the scope frees the old value first,
+    # and CPython can hand its address to the replacement, defeating an
+    # id-only comparison.
+    had = dict(_RESIDENT)
     stats: dict[str, int] = {}
     try:
         yield stats
     finally:
-        evicted = 0
-        for cache, had in cache_snapshot:
-            stale = [
-                k for k in cache
-                if k not in had or cache[k] is not had[k]
-            ]
-            for k in stale:
-                cache.pop(k, None)
-                evicted += 1
+        stale = [
+            k for k in _RESIDENT
+            if k not in had or _RESIDENT[k] is not had[k]
+        ]
+        for k in stale:
+            _RESIDENT.pop(k, None)
         released = 0
         jmap = jsc.getPersistentRDDs()
         for k in jmap.keys():
@@ -254,7 +274,7 @@ def block_scope(spark: SparkSession):
                 jmap[k].unpersist(False)
                 released += 1
         stats["released"] = released
-        stats["evicted"] = evicted
+        stats["evicted"] = len(stale)
 
 
 # ---------------------------------------------------------------------------

@@ -3,12 +3,13 @@ query's result is materialized, `release_cached_blocks` must leave ZERO
 persistent RDD blocks in the session — the 49 `localCheckpoint`/
 `persist` sites otherwise accumulate storage memory linearly across a
 long-lived roster (the mechanism behind the round-13 driver bench's
-progressive 5-8x heavy-head inflation), and the module-level fit caches
-must drop their handles first so nothing dangles on a truncated-lineage
-frame."""
+progressive 5-8x heavy-head inflation), and the resident memo of fits
+and graphs (`session.resident`) must drop its handles first so nothing
+dangles on a truncated-lineage frame."""
 
 from __future__ import annotations
 
+from parallelutilities_jl_spark import session as sess
 from parallelutilities_jl_spark.session import release_cached_blocks
 
 
@@ -18,6 +19,10 @@ def _n_persistent(spark) -> int:
 
 def _materialize(df) -> int:
     return df.count()
+
+
+def _artifacts() -> set[str]:
+    return {k[1] for k in sess._RESIDENT}
 
 
 def test_release_after_checkpoint_heavy_query(spark, sf_dir):
@@ -43,20 +48,18 @@ def test_release_after_checkpoint_heavy_query(spark, sf_dir):
 
 
 def test_release_clears_fit_caches_and_query_recovers(spark, sf_dir):
-    """The fit caches hold localCheckpoint'ed frames; release must clear
-    the dicts BEFORE unpersisting (a surviving handle would be
+    """The resident memo holds localCheckpoint'ed frames; release must
+    clear it BEFORE unpersisting (a surviving handle would be
     unrecomputable — truncated lineage), and the query must rebuild the
     fit transparently on its next call."""
     from parallelutilities_jl_spark.operators import clustering as cl
 
     release_cached_blocks(spark)
     n1 = _materialize(cl.q_kmeans_assign(spark, sf_dir))
-    assert cl._FLAT_FIT_CACHE, "kmeans fit should be memoized after a run"
+    assert _artifacts() == {"flat_fit"}, "kmeans fit should be resident"
 
     release_cached_blocks(spark)
-    assert not cl._FLAT_FIT_CACHE
-    assert not cl._FIT_CACHE and not cl._PQ_FIT_CACHE
-    assert not cl._PI_CACHE and not cl._EDGE_CACHE
+    assert not sess._RESIDENT
     assert _n_persistent(spark) == 0
 
     # rebuilds from scratch — no dangling handle, identical result size
@@ -99,7 +102,7 @@ def test_block_scope_releases_only_scope_created_blocks(spark, sf_dir):
 
 
 def test_block_scope_evicts_only_scope_added_cache_entries(spark, sf_dir):
-    """A fit-cache entry created inside a scope is evicted on exit (its
+    """A memo entry created inside a scope is evicted on exit (its
     checkpoint blocks are freed — a surviving handle would dangle on
     truncated lineage); an entry warmed BEFORE the scope keeps both its
     handle and its blocks, and still serves queries afterwards."""
@@ -108,82 +111,93 @@ def test_block_scope_evicts_only_scope_added_cache_entries(spark, sf_dir):
 
     release_cached_blocks(spark)
     n_warm = _materialize(cl.q_kmeans_assign(spark, sf_dir))
-    assert cl._FLAT_FIT_CACHE, "kmeans fit should be memoized"
-    warm_keys = set(cl._FLAT_FIT_CACHE)
+    warm = dict(sess._RESIDENT)
+    assert _artifacts() == {"flat_fit"}, "kmeans fit should be resident"
 
     with block_scope(spark) as stats:
         _materialize(cl.q_ann_pq_topk(spark, sf_dir))
-        assert cl._PQ_FIT_CACHE, "PQ fit should be memoized in-scope"
+        assert "pq_fit" in _artifacts(), "PQ fit should be resident in-scope"
     assert stats["evicted"] > 0
-    assert not cl._PQ_FIT_CACHE  # scope-added: evicted with its blocks
-    assert set(cl._FLAT_FIT_CACHE) == warm_keys  # pre-existing: intact
-    # the warm cache still serves from its intact blocks
+    # scope-added: evicted with its blocks; pre-existing: intact
+    assert set(sess._RESIDENT) == set(warm)
+    assert all(sess._RESIDENT[k] is v for k, v in warm.items())
+    # the warm memo still serves from its intact blocks
     assert _materialize(cl.q_kmeans_assign(spark, sf_dir)) == n_warm
     release_cached_blocks(spark)
 
 
-def test_every_module_cache_dict_is_registered():
-    """Mechanical registration lint (round-14 advice): every
-    module-level dict named *CACHE* in the engine package must be
-    wired into the session registry — both cleared by a registered
-    cleaner (global release) and enrolled for scoped eviction
-    (block_scope). An unregistered future cache would dangle on
-    truncated lineage the first time a release runs."""
+def test_resident_drops_other_applications_on_any_lookup(spark, sf_dir):
+    """An entry stored under a dead application id is dropped on the
+    next lookup of ANY key, whatever artifact it names: its
+    checkpointed blocks died with that SparkContext. A hit returns the
+    stored value without calling `build`."""
+    from parallelutilities_jl_spark.operators import clustering as cl
+
+    app = spark.sparkContext.applicationId
+    dead = ("app-dead-0000", "power_direction", sf_dir, 2, 20)
+    sess._RESIDENT[dead] = object()
+    cl._fit_state(spark, sf_dir)  # a lookup of another artifact
+    assert dead not in sess._RESIDENT
+    assert all(k[0] == app for k in sess._RESIDENT)
+
+    sess._RESIDENT[dead] = object()
+    key = ("probe", sf_dir)
+    value = sess.resident(spark, key, object)
+    assert dead not in sess._RESIDENT
+
+    def rebuild():
+        raise AssertionError("resident rebuilt on a hit")
+
+    assert sess.resident(spark, key, rebuild) is value
+    del sess._RESIDENT[(app, *key)]
+
+
+def test_no_module_cache_dict_and_release_empties_resident(spark):
+    """One memo, nothing to register: no module in the engine package
+    defines a module-level dict named *CACHE* (a hand-rolled cache
+    would dangle on truncated lineage the first time a release runs),
+    and `release_cached_blocks` leaves `session._RESIDENT` empty."""
     import importlib
     import pkgutil
 
     import parallelutilities_jl_spark as pkg
-    from parallelutilities_jl_spark import session as sess
 
-    found = []
+    walked, found = set(), []
     for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
         mod = importlib.import_module(info.name)
+        walked.add(mod.__name__)
         for name, val in vars(mod).items():
-            if (
-                isinstance(val, dict)
-                and "CACHE" in name.upper()
-                and mod.__name__.startswith(pkg.__name__)
-                and name not in ("_SCOPED_CACHES",)
-            ):
-                found.append((mod.__name__, name, val))
-    assert found, "lint is vacuous: no module caches discovered"
-    scoped_ids = {id(c) for c in sess._SCOPED_CACHES}
-    unscoped = [f"{m}.{n}" for m, n, d in found if id(d) not in scoped_ids]
-    assert not unscoped, f"caches not enrolled for scoped eviction: {unscoped}"
+            if isinstance(val, dict) and "CACHE" in name.upper():
+                found.append(f"{mod.__name__}.{name}")
+    assert "parallelutilities_jl_spark.operators.clustering" in walked
+    assert not found, f"module-level caches outside session.resident: {found}"
 
-    # cleaner coverage: after all registered cleaners run, every
-    # discovered cache must be empty (sentinel proves the clear is real)
-    for _m, _n, d in found:
-        d["__lint_sentinel__"] = None
-    for fn in sess._CACHE_CLEANERS:
-        fn()
-    uncleared = [f"{m}.{n}" for m, n, d in found if d]
-    for _m, _n, d in found:
-        d.pop("__lint_sentinel__", None)
-    assert not uncleared, f"caches not cleared by any cleaner: {uncleared}"
+    sess.resident(spark, ("lint_probe",), object)
+    assert sess._RESIDENT
+    release_cached_blocks(spark)
+    assert not sess._RESIDENT
 
 
 def test_block_scope_evicts_overwritten_entries(spark):
     """Round-15 ADVICE: an entry OVERWRITTEN under a pre-existing key
     during the scope must be evicted on exit (its replacement's blocks
     are unpersisted; a surviving handle would dangle), while untouched
-    pre-existing entries survive. Pinned with a synthetic registered
-    cache so the invariant is enforced even though today's
-    check-then-return memoizers never overwrite."""
-    from parallelutilities_jl_spark import session as sess
-
-    cache: dict = {"keep": object(), "clobber": object()}
-    sess._SCOPED_CACHES.append(cache)
+    pre-existing entries survive. Pinned by writing the memo directly,
+    since `resident` itself never overwrites."""
+    app = spark.sparkContext.applicationId
+    keep, clobber, fresh = (app, "keep"), (app, "clobber"), (app, "fresh")
+    sess._RESIDENT.update({keep: object(), clobber: object()})
     try:
         with sess.block_scope(spark) as stats:
-            cache["clobber"] = object()  # overwrite under existing key
-            cache["fresh"] = object()  # plain scope-added entry
+            sess._RESIDENT[clobber] = object()  # overwrite existing key
+            sess._RESIDENT[fresh] = object()  # plain scope-added entry
         assert stats["evicted"] >= 2
-        assert "keep" in cache  # untouched pre-existing entry survives
-        assert "clobber" not in cache  # overwritten: evicted
-        assert "fresh" not in cache  # scope-added: evicted
+        assert keep in sess._RESIDENT  # untouched entry survives
+        assert clobber not in sess._RESIDENT  # overwritten: evicted
+        assert fresh not in sess._RESIDENT  # scope-added: evicted
     finally:
-        sess._SCOPED_CACHES.remove(cache)
+        for k in (keep, clobber, fresh):
+            sess._RESIDENT.pop(k, None)
 
 
 def test_block_scope_evicts_del_then_recompute(spark):
@@ -191,15 +205,13 @@ def test_block_scope_evicts_del_then_recompute(spark):
     the scope must be evicted on exit even if CPython hands the
     replacement the freed object's address — the snapshot must hold
     value references and compare identity, not id() integers."""
-    from parallelutilities_jl_spark import session as sess
-
-    cache: dict = {"k": object()}
-    sess._SCOPED_CACHES.append(cache)
+    key = (spark.sparkContext.applicationId, "k")
+    sess._RESIDENT[key] = object()
     try:
         with sess.block_scope(spark) as stats:
-            del cache["k"]
-            cache["k"] = object()  # may reuse the freed address
+            del sess._RESIDENT[key]
+            sess._RESIDENT[key] = object()  # may reuse the freed address
         assert stats["evicted"] >= 1
-        assert "k" not in cache
+        assert key not in sess._RESIDENT
     finally:
-        sess._SCOPED_CACHES.remove(cache)
+        sess._RESIDENT.pop(key, None)

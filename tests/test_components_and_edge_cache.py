@@ -1,6 +1,7 @@
 """Round-10 units: the shared checkpointed mutual-edge frame
-(`clustering._EDGE_CACHE`) and the pointer-jump min-label propagation
-in `dedup.connected_components` (reference parity target:
+(`clustering._mutual_edges_checkpointed`) and the pointer-jump
+min-label propagation in `dedup.connected_components` (reference
+parity target:
 src/mapreduce.jl has no graph ops — these belong to the mandated
 LLM-pipeline surface; the loop invariants are documented in
 dedup.connected_components' docstring)."""
@@ -194,15 +195,15 @@ def test_components_spill_cleaned_up_on_exception(spark):
     assert after == before
 
 
-def test_edge_cache_shared_and_evicted(spark, sf_dir):
+def test_mutual_edges_resident_shared(spark, sf_dir):
     """`_mutual_edges_checkpointed` returns the SAME resident frame on
     repeat calls within one application (the one-build/many-consumers
-    contract `q_knn_components` rides), its rows equal the lazy
-    `q_knn_mutual_graph` plan's, and `_evict_stale` drops entries whose
-    applicationId is not the live SparkContext's."""
+    contract `q_knn_components` rides), and its rows equal the lazy
+    `q_knn_mutual_graph` plan's."""
+    from parallelutilities_jl_spark import session as S
     from parallelutilities_jl_spark.operators import clustering as C
 
-    C._EDGE_CACHE.clear()
+    S._RESIDENT.clear()
     first = C._mutual_edges_checkpointed(spark, sf_dir)
     again = C._mutual_edges_checkpointed(spark, sf_dir)
     assert first is again
@@ -215,22 +216,18 @@ def test_edge_cache_shared_and_evicted(spark, sf_dir):
     }
     assert lazy == resident and resident
 
-    # a foreign-application entry is evicted on the next lookup
-    C._EDGE_CACHE[("dead-app", sf_dir, C.KNN_GRAPH_NPROBE)] = first
-    C._mutual_edges_checkpointed(spark, sf_dir)
-    assert all(
-        k[0] == spark.sparkContext.applicationId for k in C._EDGE_CACHE
-    )
-
 
 def test_fit_cache_evicts_foreign_application(spark, sf_dir):
+    from parallelutilities_jl_spark import session as S
     from parallelutilities_jl_spark.operators import clustering as C
 
     emb_all, cents = C._sampled_fit(spark, sf_dir)
-    C._FIT_CACHE[("dead-app", sf_dir, 1, 2, 3)] = (emb_all, cents)
+    S._RESIDENT[("dead-app", "sampled_fit", sf_dir, 1, 2, 3)] = (
+        emb_all, cents,
+    )
     C._sampled_fit(spark, sf_dir)
     assert all(
-        k[0] == spark.sparkContext.applicationId for k in C._FIT_CACHE
+        k[0] == spark.sparkContext.applicationId for k in S._RESIDENT
     )
 
 

@@ -1,7 +1,7 @@
-"""Round-12 fit hygiene: the flat fixture-tier k-means fit is memoized
-per (application, sf_dir, k, iters), and the flat argmin's two physical
-realizations (literal expression vs broadcast model-table join) are
-row-identical.
+"""Round-12 fit hygiene: the flat fixture-tier k-means fit is resident
+(`session.resident`) per (application, sf_dir, k, iters), and the flat
+argmin's two physical realizations (literal expression vs broadcast
+model-table join) are row-identical.
 
 Judge directive (VERDICT r11 "Next round" #1): five query families
 (kmeans_assign, two-level assign, ivf_trained census/topk, multiprobe,
@@ -13,42 +13,43 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from parallelutilities_jl_spark import session as S
 from parallelutilities_jl_spark.operators import clustering as C
 
 
 def test_fit_state_memoized_and_bit_identical(spark, sf_dir):
-    C._FLAT_FIT_CACHE.clear()
+    S._RESIDENT.clear()
     emb1, cent1 = C._fit_state(spark, sf_dir)
     assert cent1, "fixture corpus must produce a model"
-    # second call is a cache hit: the SAME frame handle, an EQUAL model
+    # second call is a memo hit: the SAME frame handle, an EQUAL model
     # — but a fresh dict copy, so a caller mutating "its" model cannot
-    # poison the cache for later queries (_model_copy)
+    # poison the memo for later queries (_model_copy)
     emb2, cent2 = C._fit_state(spark, sf_dir)
     assert emb2 is emb1 and cent2 == cent1 and cent2 is not cent1
     cent2[min(cent2)][0] += 1.0  # simulate a careless caller
     _, cent2b = C._fit_state(spark, sf_dir)
-    assert cent2b == cent1  # cache unpoisoned
-    # distinct params miss the cache
+    assert cent2b == cent1  # memo unpoisoned
+    # distinct params miss the memo
     emb3, cent3 = C._fit_state(spark, sf_dir, k=4)
-    assert len(cent3) == 4
+    assert len(cent3) == 4 and emb3 is not emb1
     # determinism: a cold refit is bit-identical (float equality, not
     # approx — lowest-id init + decimal(38,18) means have no RNG and a
     # fixed combine order)
-    C._FLAT_FIT_CACHE.clear()
+    S._RESIDENT.clear()
     _, cent_fresh = C._fit_state(spark, sf_dir)
     assert cent_fresh == cent1
 
 
 def test_fit_cache_evicts_other_applications(spark, sf_dir):
-    C._FLAT_FIT_CACHE.clear()
+    S._RESIDENT.clear()
     C._fit_state(spark, sf_dir)
-    assert len(C._FLAT_FIT_CACHE) == 1
+    assert len(S._RESIDENT) == 1
     # a key from a dead application is evicted on the next call
-    key = next(iter(C._FLAT_FIT_CACHE))
+    key = next(iter(S._RESIDENT))
     stale_key = ("app-dead-0000",) + key[1:]
-    C._FLAT_FIT_CACHE[stale_key] = C._FLAT_FIT_CACHE[key]
+    S._RESIDENT[stale_key] = S._RESIDENT[key]
     C._fit_state(spark, sf_dir)
-    assert stale_key not in C._FLAT_FIT_CACHE
+    assert stale_key not in S._RESIDENT
 
 
 def test_flat_assign_literal_vs_join_row_identical(spark, sf_dir):

@@ -281,6 +281,37 @@ def test_dense_elsum_four_int8_partials_of_60_raise(spark, twin):
     assert "OverflowError" in str(ei.value)
 
 
+@pytest.mark.parametrize("twin", ["collect", "sink"])
+def test_dense_elsum_shared_make_array_is_not_written(spark, twin):
+    # a make_array that hands out the SAME matrix on every call: the
+    # in-partition accumulator must never be the caller's array, or
+    # each add doubles it (8 tasks of ones summed to 16, not 8)
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
+    )
+
+    shared = np.ones((4, 3))
+
+    def gen(i):
+        return shared
+
+    if twin == "collect":
+        vals = pmapreduce_dense_elsum(
+            spark, 8, gen, num_partitions=2
+        ).reshape(-1).tolist()
+    else:
+        vals = [
+            r["value"]
+            for r in pmapreduce_dense_elsum_long(
+                spark, 8, gen, num_partitions=2
+            ).collect()
+        ]
+    assert vals == [8.0] * 12
+
+
 def test_flip_swaps_arguments():
     from parallelutilities_jl_spark.operators.reductions import ReduceOp, flip
 

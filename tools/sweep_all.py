@@ -11,8 +11,9 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 SF_DIR = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.01")
 
@@ -90,7 +91,7 @@ def _record_local_sweep(rows) -> None:
     per-name; the full registry run refreshes everything."""
     import datetime
 
-    path = os.path.join("/root/repo", "SWEEP_LOCAL.json")
+    path = os.path.join(ROOT, "SWEEP_LOCAL.json")
     try:
         with open(path) as f:
             state = json.load(f)
