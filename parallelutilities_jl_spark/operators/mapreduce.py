@@ -30,6 +30,7 @@ from __future__ import annotations
 from typing import Callable, Optional, Sequence
 
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -298,21 +299,108 @@ def _checked_add(a, b, out=None):
 
 def _partition_sum(make_array, ids):
     """Elementwise sum of `make_array(i)` over one partition's `ids`
-    (None for an empty partition). It never writes into an array that
-    `make_array` returned — a caller may hand out one shared or
-    read-only array for every task: the first add allocates the
-    accumulator, later adds go in place into it."""
+    (None for an empty partition), in place like the reference's
+    `broadcastinplace` (src/reductionfunctions.jl:69-71): at most two
+    arrays are alive at once, the accumulator this function owns and
+    the array just generated, which is dropped before the next
+    `make_array` call. The first array is copied into the accumulator,
+    so an array `make_array` returned is never written — a caller may
+    hand out one shared or read-only array for every task. A wider
+    operand promotes the accumulator (int8 then float64 sums to
+    float64, as `np.add` would)."""
     import numpy as np
 
-    acc, owned = None, False
+    acc = None
     for i in ids:
         m = make_array(i)
         if acc is None:
-            acc = np.asarray(m)
+            acc = np.array(m, copy=True)
+        elif np.result_type(acc, m) == acc.dtype:
+            _checked_add(acc, m, out=acc)
         else:
-            acc = _checked_add(acc, m, out=acc if owned else None)
-            owned = True
+            acc = _checked_add(acc, m)
+        del m
     return acc
+
+
+class _FirstValue(AccumulatorParam):
+    """Accumulator that keeps the first non-None value a task adds."""
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, a, b):
+        return b if a is None else a
+
+
+def _folded_chunks(
+    spark: SparkSession,
+    n_tasks: int,
+    make_array,
+    num_partitions: int | None,
+    n_chunks: int | None,
+    shape=None,
+):
+    """The chunk pipeline of both dense-elsum twins: an RDD of (flat
+    start offset, summed piece), one record per chunk. Each map partition sums its tasks (`_partition_sum`) and
+    slices the flat partial into `n_chunks` contiguous pieces; the
+    pieces shuffle by chunk id and every reduce task adds its chunk's
+    pieces, so every core sums its own slice of the array concurrently
+    and no process ever serializes or adds a whole array. A `shape`
+    accumulator (`_FirstValue`) receives each partial's shape once."""
+    import numpy as np
+
+    from parallelutilities_jl_spark.session import ensure_package_on_executors
+
+    if n_tasks < 1:
+        # the reference's mapreduce over an empty collection without
+        # `init` is an error too; there is no array to return
+        raise ValueError(f"n_tasks must be >= 1, got {n_tasks}")
+    # the chunk folds call `_checked_add`, which cloudpickle ships by
+    # reference to this module
+    ensure_package_on_executors(spark)
+    sc = spark.sparkContext
+    n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
+    n_chunks = n_chunks or n_parts
+
+    def part_chunks(it):
+        acc = _partition_sum(make_array, it)
+        if acc is None:
+            return
+        if shape is not None:
+            shape.add(acc.shape)
+        flat = acc.reshape(-1)
+        bounds = np.linspace(0, flat.size, n_chunks + 1, dtype=np.int64)
+        for k in range(n_chunks):
+            piece = flat[bounds[k] : bounds[k + 1]]
+            if piece.size:
+                yield (int(k), (int(bounds[k]), piece))
+
+    # partitionBy + in-partition fold, not reduceByKey: every chunk key is
+    # unique within a map partition, so reduceByKey's map-side combine is a
+    # pure overhead pass (dict build + re-pickle of every 2.5 MB piece —
+    # measured ~1.5× slower at the 80 MB-per-task shape).
+    def fold_chunks(it):
+        acc = {}
+        for k, (start, v) in it:
+            prev = acc.get(k)
+            if prev is None:
+                acc[k] = (start, v)
+            else:
+                pv = prev[1]
+                # deserialized chunks can arrive read-only; if pv is not
+                # writeable, allocate (v may be read-only too — writing
+                # into it would raise)
+                out = pv if pv.flags.writeable else None
+                acc[k] = (start, _checked_add(pv, v, out=out))
+        return iter(acc.values())
+
+    return (
+        sc.range(0, n_tasks, numSlices=n_parts)
+        .mapPartitions(part_chunks)
+        .partitionBy(n_chunks, partitionFunc=lambda k: k)
+        .mapPartitions(fold_chunks)
+    )
 
 
 def pmapreduce_dense_elsum(
@@ -328,69 +416,28 @@ def pmapreduce_dense_elsum(
     sum of one generated matrix per worker).
 
     Spark rendering: generate + *accumulate locally inside each partition*
-    (the in-place combine of `broadcastinplace`, reference
-    src/reductionfunctions.jl:69-71 — numpy `out=` add), then combine the
-    per-partition partials **chunk-parallel**: each partition slices its
-    partial into `n_chunks` contiguous pieces and the pieces reduce with
-    `reduceByKey(chunk_id)` — every core sums its own slice of the array
-    concurrently, and no single process ever serializes or adds a whole
-    array. (A whole-array `treeReduce` was 3× slower at the reference's
+    (the in-place combine of `broadcastinplace`), then combine the
+    per-partition partials **chunk-parallel** (`_folded_chunks`). (A
+    whole-array `treeReduce` was 3× slower at the reference's
     80 MB-per-task shape: each combine round pickled and added full
-    arrays sequentially.) Driver work is a single ordered concatenate of
-    the final chunks. On a multi-node cluster the chunk shuffle is the
-    same per-host/cross-host staging the reference's segmented tree
+    arrays sequentially.) Driver work is one preallocated output that
+    each folded chunk fills at its start offset, reshaped to the shape
+    of the first partial. On a multi-node cluster the chunk shuffle is
+    the same per-host/cross-host staging the reference's segmented tree
     builds by hand (reference src/trees.jl:42-137)."""
     import numpy as np
 
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    # the chunk folds call `_checked_add`, which cloudpickle ships by
-    # reference to this module
-    ensure_package_on_executors(spark)
-    sc = spark.sparkContext
-    n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
-    n_chunks = n_chunks or n_parts
-
-    def part_chunks(it):
-        acc = _partition_sum(make_array, it)
-        if acc is None:
-            return
-        shape = acc.shape
-        flat = acc.reshape(-1)
-        bounds = np.linspace(0, flat.size, n_chunks + 1, dtype=np.int64)
-        for k in range(n_chunks):
-            piece = flat[bounds[k] : bounds[k + 1]]
-            if piece.size:
-                yield (int(k), (shape, piece))
-
-    # partitionBy + in-partition fold, not reduceByKey: every chunk key is
-    # unique within a map partition, so reduceByKey's map-side combine is a
-    # pure overhead pass (dict build + re-pickle of every 2.5 MB piece —
-    # measured ~1.5× slower at the 80 MB-per-task shape).
-    def fold_chunks(it):
-        acc = {}
-        for k, (shape, v) in it:
-            prev = acc.get(k)
-            if prev is None:
-                acc[k] = (shape, v)
-            else:
-                pv = prev[1]
-                # deserialized chunks can arrive read-only; if pv is not
-                # writeable, allocate (v may be read-only too)
-                out = pv if pv.flags.writeable else None
-                acc[k] = (shape, _checked_add(pv, v, out=out))
-        return iter(acc.items())
-
-    parts = (
-        sc.range(0, n_tasks, numSlices=n_parts)
-        .mapPartitions(part_chunks)
-        .partitionBy(n_chunks, partitionFunc=lambda k: k)
-        .mapPartitions(fold_chunks, preservesPartitioning=True)
-        .collect()
+    shape = spark.sparkContext.accumulator(None, _FirstValue())
+    pieces = _folded_chunks(
+        spark, n_tasks, make_array, num_partitions, n_chunks, shape
+    ).collect()
+    out = np.empty(
+        sum(p.size for _, p in pieces),
+        np.result_type(*{p.dtype for _, p in pieces}),
     )
-    parts.sort(key=lambda kv: kv[0])
-    shape = parts[0][1][0]
-    return np.concatenate([p[1][1] for p in parts]).reshape(shape)
+    for start, p in pieces:
+        out[start : start + p.size] = p
+    return out.reshape(shape.value)
 
 
 def pmapreduce_dense_elsum_long(
@@ -403,73 +450,30 @@ def pmapreduce_dense_elsum_long(
     ship_dtype=None,
 ) -> DataFrame:
     """Sink twin of `pmapreduce_dense_elsum` (round-13 verdict item 5):
-    the same generate → in-partition in-place accumulate → chunk-
-    parallel reduce, but the reduced array leaves the job as a
-    DISTRIBUTED long-form DataFrame of (idx, value) rows — flat
-    row-major index, elementwise sum — instead of a driver collect.
-    `ship_dtype` (default float64) names the numpy dtype crossing the
-    shuffle and the Python→JVM boundary: a caller whose task values
-    and partial sums fit a narrower integer type accumulates and
-    ships that type — 4x fewer shuffled bytes for int16 vs float64
-    (guide §2: shuffle fewer bytes / narrower types) — and the
-    expansion casts to the float64 output column, so the emitted rows
-    are identical as long as the narrow type never overflows (the
-    caller's obligation). Each reduced chunk becomes ONE
-    (start_offset, values) row (a
-    single pickle frame per chunk, never per element) and posexplode
-    unrolls it JVM-side, so driver memory is O(1) in the array size
-    and the result can flow straight to a parquet sink
-    (`df.write.parquet(...)`) or any downstream plan. This is the
-    100x path: the collect twin is faithful to the reference's
-    return-to-caller semantics (reference docs/src/index.md:22-46)
-    but bounds the result by driver memory; this one does not."""
-    import numpy as np
-
-    from parallelutilities_jl_spark.session import ensure_package_on_executors
-
-    # the chunk folds call `_checked_add`, which cloudpickle ships by
-    # reference to this module
-    ensure_package_on_executors(spark)
-    sc = spark.sparkContext
-    n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
-    n_chunks = n_chunks or n_parts
-
-    def part_chunks(it):
-        acc = _partition_sum(make_array, it)
-        if acc is None:
-            return
-        flat = acc.reshape(-1)
-        bounds = np.linspace(0, flat.size, n_chunks + 1, dtype=np.int64)
-        for k in range(n_chunks):
-            piece = flat[bounds[k] : bounds[k + 1]]
-            if piece.size:
-                yield (int(k), (int(bounds[k]), piece))
-
-    def fold_chunks(it):
-        acc = {}
-        for k, (start, v) in it:
-            prev = acc.get(k)
-            if prev is None:
-                acc[k] = (start, v)
-            else:
-                pv = prev[1]
-                # deserialized chunks can arrive read-only; if pv is not
-                # writeable, allocate (v may be read-only too — writing
-                # into it would raise)
-                out = pv if pv.flags.writeable else None
-                acc[k] = (start, _checked_add(pv, v, out=out))
-        return iter(acc.items())
-
-    folded = (
-        sc.range(0, n_tasks, numSlices=n_parts)
-        .mapPartitions(part_chunks)
-        .partitionBy(n_chunks, partitionFunc=lambda k: k)
-        .mapPartitions(fold_chunks, preservesPartitioning=True)
+    the same chunk pipeline (`_folded_chunks`), but the reduced array
+    leaves the job as a DISTRIBUTED long-form DataFrame of (idx, value)
+    rows — flat row-major index, elementwise sum — instead of a driver
+    collect. `ship_dtype` (default float64) names the numpy dtype
+    crossing the shuffle and the Python→JVM boundary: a caller whose
+    task values and partial sums fit a narrower integer type
+    accumulates and ships that type — 4x fewer shuffled bytes for int16
+    vs float64 — and the expansion casts to the float64 output column,
+    so the emitted rows are identical as long as the narrow type never
+    overflows (the caller's obligation). Each reduced chunk becomes ONE
+    (start, bytes) row and `mapInArrow` expands it to Arrow columns, so
+    driver memory is O(1) in the array size and the result can flow
+    straight to a parquet sink or any downstream plan. The collect twin
+    is faithful to the reference's return-to-caller semantics
+    (reference docs/src/index.md:22-46) but bounds the result by driver
+    memory; this one does not."""
+    folded = _folded_chunks(
+        spark, n_tasks, make_array, num_partitions, n_chunks
+    ).map(
         # one COMPACT row per chunk crosses the Python->JVM boundary:
-        # the raw float64 buffer as binary, never 625k boxed Python
-        # floats (a tolist()+posexplode variant measured 23.5 s at the
+        # the raw buffer as binary, never 625k boxed Python floats (a
+        # tolist()+posexplode variant measured 23.5 s at the
         # 10M-element shape vs ~2 s for this bytes+Arrow path)
-        .map(lambda kv: (int(kv[1][0]), bytearray(kv[1][1].tobytes())))
+        lambda sp: (sp[0], bytearray(sp[1].tobytes()))
     )
     chunk_df = spark.createDataFrame(folded, "start long, vals binary")
 

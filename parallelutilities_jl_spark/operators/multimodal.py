@@ -25,17 +25,17 @@ real parse; everything else → stub). Swapping the stub for the real
 external decoder changes nothing structurally: the UDF signatures,
 schemas and batch shapes are what a real deployment uses.
 
-Batch shape: every codec round trip is the same two stages, each one
-helper, so a head holds only its encoder call, its attestation predicate
-and its stats tuple.
-* `_encode_docs(docs, encode)` — (doc_id, text) → (asset_id, content)
-  in one Arrow-batched `mapInPandas` pass (the reference's `pmapbatch`:
-  a batch map over partitions, zero shuffles);
-* `_map_assets(assets, out_schema, label, rows)` — one `mapInPandas`
-  pass turning each asset's bytes into its output rows; a payload the
-  decoder rejects raises `ValueError` naming the codec label and the
-  asset id, and integer columns keep NULLs (dtypes derive from the
-  schema).
+Batch shape: every codec round trip is one helper,
+`_round_trip(docs, encode, out_schema, label, rows)`, so a head holds
+only its encoder, its attestation predicate and its stats tuple. It is
+ONE Arrow-batched `mapInPandas` pass (the reference's `pmapbatch`: a
+batch map over partitions, zero shuffles) that feeds `_encode_batches`
+((doc_id, text) → (asset_id, content)) straight into `_decode_batches`
+(bytes → output rows; a payload the decoder rejects raises `ValueError`
+naming the codec label and the asset id, and integer columns keep NULLs
+because dtypes derive from the schema). `_encode_docs` (the
+`synthesize_*` asset tables) and `_map_assets` (`decode_assets`,
+`extract_features`) run one of the two stages each.
 Binary payloads stay columnar (parquet BYTE_ARRAY) and are only
 materialized inside the Arrow batch being decoded;
 `spark.sql.files.maxPartitionBytes` bounds per-task memory — a 100 TB
@@ -61,16 +61,12 @@ FEATURE_DIM = 8
 _PD_DTYPES = {"int": "Int32", "long": "Int64", "bigint": "Int64"}
 
 
-def _encode_docs(
-    docs: DataFrame, encode, nonempty: bool = False
-) -> DataFrame:
-    """(doc_id, text) → (asset_id long, content binary) with
-    `encode(doc_id, text) -> bytes`, one Arrow-batched mapInPandas pass.
-    NULL text is excluded (a NULL payload cannot be encoded; every
-    multimodal oracle carries the same `text IS NOT NULL`), and empty
-    text too when `nonempty` — image/video encoders sample pixels from
-    the characters. Stateless, so it applies unchanged to a streaming
-    DataFrame."""
+def _docs_to_encode(docs: DataFrame, nonempty: bool) -> DataFrame:
+    """The (doc_id, text) rows an encoder may see: NULL text is
+    excluded (a NULL payload cannot be encoded; every multimodal oracle
+    carries the same `text IS NOT NULL`), and empty text too when
+    `nonempty` — image/video encoders sample pixels from the
+    characters."""
     from parallelutilities_jl_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(docs.sparkSession)
@@ -79,66 +75,100 @@ def _encode_docs(
     keep = F.col("text").isNotNull()
     if nonempty:
         keep = keep & (F.length("text") >= 1)
+    return docs.filter(keep).select("doc_id", "text")
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "content": [
-                        encode(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
 
-    return docs.filter(keep).select("doc_id", "text").mapInPandas(
-        synth, "asset_id long, content binary"
+def _encode_batches(batches, encode):
+    """(doc_id, text) batches → (asset_id, content) batches with
+    `encode(doc_id, text) -> bytes` per row."""
+    for pdf in batches:
+        yield pd.DataFrame(
+            {
+                "asset_id": pdf["doc_id"],
+                "content": [
+                    encode(int(i), t)
+                    for i, t in zip(pdf["doc_id"], pdf["text"])
+                ],
+            }
+        )
+
+
+def _decode_batches(batches, out_schema: str, label: str, rows, extra=()):
+    """(asset_id, content, *extra) batches → `out_schema` batches:
+    `rows(content, *extra_values)` returns the asset's output tuples
+    (every `out_schema` column after the leading asset_id), or None
+    when the payload fails to parse or attest. The asset id is
+    prepended to each tuple and each column is built with the pandas
+    dtype its `out_schema` type implies (`_PD_DTYPES`)."""
+    fields = [f.split() for f in out_schema.split(",")]
+    dtypes = [(name, _PD_DTYPES.get(typ)) for name, typ in fields]
+    for pdf in batches:
+        ids, out = [], []
+        for aid, c, *x in zip(
+            pdf["asset_id"], pdf["content"], *(pdf[e] for e in extra)
+        ):
+            rs = rows(bytes(c), *x)
+            # explicit raise, not assert: survives python -O and names
+            # the offending asset instead of an opaque TypeError deep in
+            # the Arrow batch (we wrote these bytes — a None here means
+            # the synthesizer or the decoder regressed)
+            if rs is None:
+                raise ValueError(f"invalid {label} payload for asset {aid}")
+            ids += [aid] * len(rs)
+            out += rs
+        cols = [ids, *zip(*out)] if out else [()] * len(dtypes)
+        yield pd.DataFrame(
+            {
+                name: pd.array(list(v), dtype=dt) if dt else list(v)
+                for (name, dt), v in zip(dtypes, cols)
+            }
+        )
+
+
+def _encode_docs(
+    docs: DataFrame, encode, nonempty: bool = False
+) -> DataFrame:
+    """(doc_id, text) → (asset_id long, content binary) with
+    `encode(doc_id, text) -> bytes`, one Arrow-batched mapInPandas pass
+    over `_docs_to_encode`'s rows. Stateless, so it applies unchanged
+    to a streaming DataFrame."""
+    return _docs_to_encode(docs, nonempty).mapInPandas(
+        lambda batches: _encode_batches(batches, encode),
+        "asset_id long, content binary",
     )
 
 
 def _map_assets(
     assets: DataFrame, out_schema: str, label: str, rows, extra=()
 ) -> DataFrame:
-    """One mapInPandas pass over (asset_id, content, *extra) assets:
-    `rows(content, *extra_values)` returns the asset's output tuples
-    (every `out_schema` column after the leading asset_id), or None
-    when the payload fails to parse or attest. The helper prepends the
-    asset id to each tuple and builds each column with the pandas dtype
-    its `out_schema` type implies (`_PD_DTYPES`)."""
+    """One mapInPandas pass of `_decode_batches` over (asset_id,
+    content, *extra) assets."""
     from parallelutilities_jl_spark.session import ensure_package_on_executors
 
     ensure_package_on_executors(assets.sparkSession)
-    fields = [f.split() for f in out_schema.split(",")]
-    dtypes = [(name, _PD_DTYPES.get(typ)) for name, typ in fields]
+    return assets.mapInPandas(
+        lambda batches: _decode_batches(
+            batches, out_schema, label, rows, extra
+        ),
+        out_schema,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, out = [], []
-            for aid, c, *x in zip(
-                pdf["asset_id"], pdf["content"], *(pdf[e] for e in extra)
-            ):
-                rs = rows(bytes(c), *x)
-                # explicit raise, not assert: survives python -O and
-                # names the offending asset instead of an opaque
-                # TypeError deep in the Arrow batch (we wrote these
-                # bytes — a None here means the synthesizer or the
-                # decoder regressed)
-                if rs is None:
-                    raise ValueError(
-                        f"invalid {label} payload for asset {aid}"
-                    )
-                ids += [aid] * len(rs)
-                out += rs
-            cols = [ids, *zip(*out)] if out else [()] * len(dtypes)
-            yield pd.DataFrame(
-                {
-                    name: pd.array(list(v), dtype=dt) if dt else list(v)
-                    for (name, dt), v in zip(dtypes, cols)
-                }
-            )
 
-    return assets.mapInPandas(run, out_schema)
+def _round_trip(
+    docs: DataFrame, encode, out_schema: str, label: str, rows, *,
+    nonempty: bool = False,
+) -> DataFrame:
+    """`_map_assets(_encode_docs(docs, encode, nonempty), out_schema,
+    label, rows)` as ONE mapInPandas pass: each batch's encoded bytes
+    go straight into the decoder, in the same Python worker. Two
+    chained passes would hold two Python workers per task and send
+    every payload Python → JVM → Python between them."""
+    return _docs_to_encode(docs, nonempty).mapInPandas(
+        lambda batches: _decode_batches(
+            _encode_batches(batches, encode), out_schema, label, rows
+        ),
+        out_schema,
+    )
 
 
 def _wav_fmt_data(
@@ -470,8 +500,7 @@ def _media_content(doc_id: int, text: str) -> bytes:
 def synthesize_media_from_docs(docs: DataFrame) -> DataFrame:
     """The (doc_id, text) → real-mixed-media mapInPandas transform,
     shared by the batch path and the streaming ingest parity test
-    (stateless, so it applies unchanged to a streaming DataFrame —
-    the `synthesize_bmp_from_docs` pattern for all three modalities).
+    (stateless, so it applies unchanged to a streaming DataFrame).
     Empty text is kept for audio only (an empty data chunk is a valid
     WAV); the modality tag is a column op on the asset id."""
     src = docs.filter((F.col("doc_id") % 3 == 1) | (F.length("text") >= 1))
@@ -550,8 +579,9 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat. The oracle never sees the bytes: it predicts every field from
     the same parquet inputs (doc_id, UTF-8 text bytes), so a decoder
     that misreads any header offset or sample byte hash-mismatches.
-    Scale shape: two chained mapInPandas passes, zero shuffles —
-    embarrassingly parallel per Arrow batch, the per-blob decode shape
+    Scale shape: one mapInPandas pass (`_round_trip`: encode and
+    decode in the same Python worker), zero shuffles — embarrassingly
+    parallel per Arrow batch, the per-blob decode shape
     a 100 TB media corpus needs."""
 
     def rows(c: bytes):
@@ -561,8 +591,9 @@ def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             m["n_frames"], m["peak_abs"],
         )]
 
-    return _map_assets(
-        synthesize_wav_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _wav_container_bytes,
         "asset_id long, n_bytes long, sample_rate int, n_channels int, "
         "bits int, n_frames int, peak_abs int",
         "WAV",
@@ -608,13 +639,9 @@ def q_multimodal_g711_decode(
     emits exact integer stats (peak, sum, energy) over the EXPANDED
     samples. The oracle replays the full G.711 expansion arithmetic
     per byte in SQL — a wrong complement, segment shift, or sign
-    convention in either law hash-mismatches. Scale shape: two chained
-    mapInPandas passes, zero shuffles; the expansion is one 256-entry
+    convention in either law hash-mismatches. Scale shape: one
+    mapInPandas pass, zero shuffles; the expansion is one 256-entry
     table gather per Arrow batch."""
-    assets = _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"),
-        _g711_wav_container_bytes,
-    )
 
     def rows(c: bytes):
         m = _decode_wav(c)
@@ -629,8 +656,9 @@ def q_multimodal_g711_decode(
         )
         return [(law, len(c), m["sample_rate"], m["n_frames"], *stats)]
 
-    return _map_assets(
-        assets,
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _g711_wav_container_bytes,
         "asset_id long, law string, n_bytes long, sample_rate int, "
         "n_frames int, peak_abs int, sample_sum long, energy_sum long",
         "G.711",
@@ -705,8 +733,8 @@ def q_multimodal_flac_decode(
     gate — and odd doc_ids VERBATIM, with identical decoded output
     because the format is lossless. The oracle replays every stat from
     the parquet hex; a wrong predictor sign, Rice zigzag, or CRC slip
-    hash-mismatches. Scale shape: two chained mapInPandas passes,
-    zero shuffles."""
+    hash-mismatches. Scale shape: one mapInPandas pass, zero
+    shuffles."""
     from parallelutilities_jl_spark.operators.flac import (
         decode_flac,
         encode_flac,
@@ -728,8 +756,9 @@ def q_multimodal_flac_decode(
             m["sample_sum"],
         )]
 
-    return _map_assets(
-        _encode_docs(load_table_parallel(spark, sf_dir, "documents"), encode),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        encode,
         "asset_id long, sample_rate int, n_channels int, bits int, "
         "n_samples int, n_frames int, peak_abs int, sample_sum long",
         "FLAC",
@@ -787,7 +816,7 @@ def q_multimodal_mp4_probe(
     16.16-fixed dimensions, exact stsz byte totals, mdat payload size.
     The oracle replays every field from the parquet inputs — a wrong
     box offset, fixed-point shift, or stsz summation hash-mismatches.
-    Scale shape: two chained mapInPandas passes, zero shuffles."""
+    Scale shape: one mapInPandas pass, zero shuffles."""
     from parallelutilities_jl_spark.operators.mp4 import encode_mp4, probe_mp4
 
     def encode(i: int, t: str) -> bytes:
@@ -804,8 +833,9 @@ def q_multimodal_mp4_probe(
             "height", "n_samples", "media_bytes", "mdat_bytes",
         ))]
 
-    return _map_assets(
-        _encode_docs(load_table_parallel(spark, sf_dir, "documents"), encode),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        encode,
         "asset_id long, brand string, timescale int, duration long, "
         "n_tracks int, width int, height int, n_samples int, "
         "media_bytes long, mdat_bytes long",
@@ -875,7 +905,7 @@ def q_multimodal_wav_energy_env(
     (f+1)·n div {WAV_ENV_FRAMES}] (1-based); short streams leave
     leading frames empty with energy 0. Energies are exact: n <= 64
     samples × 32768² < 2^37 per frame. Scale shape: one mapInPandas
-    pass after the synthesizer, zero shuffles — the per-blob decode
+    pass for encode and decode, zero shuffles — the per-blob decode
     shape at any corpus size."""
     import numpy as np
 
@@ -890,8 +920,9 @@ def q_multimodal_wav_energy_env(
         segs = [s64[f * n // nf : (f + 1) * n // nf] for f in range(nf)]
         return [(n, *(int((seg * seg).sum()) for seg in segs))]
 
-    feats = _map_assets(
-        synthesize_wav_assets(spark, sf_dir),
+    feats = _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _wav_container_bytes,
         "asset_id long, n_samples long, "
         + ", ".join(f"e{f} long" for f in range(nf)),
         "WAV",
@@ -957,7 +988,7 @@ def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reconstructs every sample from the UTF-8 hex (shared
     `_wav_sample_ctes`) and replays the same pair algebra — a
     misdecoded sample or frame boundary hash-mismatches. One
-    mapInPandas pass after the synthesizer, zero shuffles."""
+    mapInPandas pass for encode and decode, zero shuffles."""
     nf = WAV_ENV_FRAMES
 
     def rows(c: bytes):
@@ -978,8 +1009,9 @@ def q_multimodal_wav_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return [(n, *zcs, sum(zcs))]
 
-    return _map_assets(
-        synthesize_wav_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _wav_container_bytes,
         "asset_id long, n_samples long, "
         + ", ".join(f"zc{f} long" for f in range(nf))
         + ", zc_total long",
@@ -1248,13 +1280,6 @@ def _bmp_content(doc_id: int, text: str) -> bytes:
     return _bmp_bytes(_bmp_pixel_vals(text, w * h), w, h)
 
 
-def synthesize_bmp_from_docs(docs: DataFrame) -> DataFrame:
-    """The (doc_id, text) → real-BMP mapInPandas transform, shared by
-    the batch path and the streaming ingest parity test (stateless, so
-    it applies unchanged to a streaming DataFrame)."""
-    return _encode_docs(docs, _bmp_content, nonempty=True)
-
-
 def synthesize_bmp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build REAL 24-bit BMP payloads from the documents fixture
     (mapInPandas, Arrow-batched): per-doc dims from `_bmp_dims`, pixel
@@ -1263,8 +1288,10 @@ def synthesize_bmp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte is written per the BMP spec — `_decode_bmp` parses it back
     with no knowledge of doc_id/text, the image analog of
     `synthesize_wav_assets`."""
-    return synthesize_bmp_from_docs(
-        load_table_parallel(spark, sf_dir, "documents")
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _bmp_content,
+        nonempty=True,
     )
 
 
@@ -1277,8 +1304,8 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid. `luma_weighted` = Σ (i+1)·luma_i over TOP-LEFT row-major i
     catches any pixel permutation (forgotten bottom-up un-flip,
     swapped channels, mis-padded rows); the oracle predicts every
-    field from the parquet inputs alone. Scale shape: two chained
-    mapInPandas passes, zero shuffles — the per-blob decode shape a
+    field from the parquet inputs alone. Scale shape: one mapInPandas
+    pass, zero shuffles — the per-blob decode shape a
     100 TB image corpus needs."""
 
     def rows(c: bytes):
@@ -1288,12 +1315,14 @@ def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             *_luma_stats(m["luma"]),
         )]
 
-    return _map_assets(
-        synthesize_bmp_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _bmp_content,
         "asset_id long, n_bytes long, width int, height int, "
         "row_stride int, " + _LUMA_STATS_SCHEMA,
         "BMP",
         rows,
+        nonempty=True,
     )
 
 
@@ -1358,8 +1387,8 @@ def q_multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the RESAMPLED grid (Σ luma and Σ (i+1)·luma over the new row-major
     order), so a wrong source-index mapping, a flipped grid, or a
     mis-rounded dimension hash-mismatches. The oracle replays the
-    integer mapping from the parquet inputs alone. Scale shape: two
-    chained mapInPandas passes, zero shuffles."""
+    integer mapping from the parquet inputs alone. Scale shape: one
+    mapInPandas pass, zero shuffles."""
 
     def rows(c: bytes):
         m = _decode_bmp(c)
@@ -1368,12 +1397,14 @@ def q_multimodal_bmp_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         out, nw, nh = _nn_resize_luma(m["luma"], m["width"], m["height"])
         return [(m["width"], m["height"], nw, nh, len(out), *_luma_sums(out))]
 
-    return _map_assets(
-        synthesize_bmp_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _bmp_content,
         "asset_id long, width int, height int, new_w int, new_h int, "
         "r_n_pixels long, r_luma_sum long, r_luma_weighted long",
         "BMP",
         rows,
+        nonempty=True,
     )
 
 
@@ -1417,7 +1448,7 @@ def q_multimodal_image_features(
     gradient energies Σ|l[y][x+1]-l[y][x]| / Σ|l[y+1][x]-l[y][x]|, the
     cheap texture/brightness signals an image curation pipeline
     filters on. Every output replays exactly in DuckDB from the
-    parquet inputs. Scale shape: two chained mapInPandas passes, zero
+    parquet inputs. Scale shape: one mapInPandas pass, zero
     shuffles."""
     import numpy as np
 
@@ -1438,12 +1469,14 @@ def q_multimodal_image_features(
             int(np.abs(np.diff(g, axis=0)).sum()),
         )]
 
-    return _map_assets(
-        synthesize_bmp_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _bmp_content,
         "asset_id long, q00 long, q01 long, q10 long, q11 long, "
         "grad_h long, grad_v long",
         "BMP",
         rows,
+        nonempty=True,
     )
 
 
@@ -1767,12 +1800,14 @@ def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, or any LZW mis-decode hash-mismatches the oracle, which
     replays every frame from the parquet inputs alone (frame f = the
     sampled codepoints rotated by {GIF_FRAME_SHIFT}·f). Scale shape:
-    two chained mapInPandas passes, zero shuffles."""
-    return _map_assets(
-        synthesize_gif_assets(spark, sf_dir),
+    one mapInPandas pass, zero shuffles."""
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _gif_content,
         _GIF_OUT_SCHEMA,
         "GIF",
         _gif_frame_rows,
+        nonempty=True,
     )
 
 
@@ -1788,11 +1823,13 @@ def q_multimodal_gif_frame_sample(
     a video curation pipeline runs, with the kept frames' real pixel
     statistics on the output so sampling the wrong frames is
     hash-visible."""
-    return _map_assets(
-        synthesize_gif_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _gif_content,
         _GIF_OUT_SCHEMA,
         "GIF",
         lambda c: _gif_frame_rows(c, every_k=GIF_SAMPLE_EVERY),
+        nonempty=True,
     )
 
 
@@ -2007,13 +2044,16 @@ def synthesize_png_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     base values sampled from the text characters, one filter type per
     scanline (r % 5) so decoding exercises every de-filter path."""
 
-    def encode(i: int, t: str) -> bytes:
-        w, h = _png_dims(i)
-        return _png_bytes(_bmp_pixel_vals(t, w * h), w, h)
-
     return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"), encode, nonempty=True
+        load_table_parallel(spark, sf_dir, "documents"),
+        _png_content,
+        nonempty=True,
     )
+
+
+def _png_content(doc_id: int, text: str) -> bytes:
+    w, h = _png_dims(doc_id)
+    return _png_bytes(_bmp_pixel_vals(text, w * h), w, h)
 
 
 def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2027,8 +2067,7 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic pre-compression size h·(1+3w) (the compressed IDAT
     size is zlib-version-dependent, so it is deliberately NOT an
     output). The oracle predicts every field from the parquet inputs
-    alone. Scale shape: two chained mapInPandas passes, zero
-    shuffles."""
+    alone. Scale shape: one mapInPandas pass, zero shuffles."""
 
     def rows(c: bytes):
         m = _decode_png(c)
@@ -2037,12 +2076,14 @@ def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             *_luma_stats(m["luma"]),
         )]
 
-    return _map_assets(
-        synthesize_png_assets(spark, sf_dir),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _png_content,
         "asset_id long, n_raw_bytes long, width int, height int, "
         "filter_mask int, " + _LUMA_STATS_SCHEMA,
         "PNG",
         rows,
+        nonempty=True,
     )
 
 
@@ -2151,15 +2192,18 @@ def synthesize_jpeg_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc block grid from `_jpg_dims`, one SOLID even-valued block
     per sampled text codepoint (`encode_jpeg_gray`) — fully conformant
     streams whose decoded pixels are exactly predictable."""
+    return _encode_docs(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _jpeg_content,
+        nonempty=True,
+    )
+
+
+def _jpeg_content(doc_id: int, text: str) -> bytes:
     from parallelutilities_jl_spark.operators.jpeg import encode_jpeg_gray
 
-    def encode(i: int, t: str) -> bytes:
-        bw, bh = _jpg_dims(i)
-        return encode_jpeg_gray(_bmp_pixel_vals(t, bw * bh), bw, bh)
-
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"), encode, nonempty=True
-    )
+    bw, bh = _jpg_dims(doc_id)
+    return encode_jpeg_gray(_bmp_pixel_vals(text, bw * bh), bw, bh)
 
 
 def _jpeg_gray_rows(content: bytes, progressive: bool = False):
@@ -2211,13 +2255,15 @@ def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "uncompressed GIF" trick), so the oracle replays every decoded
     pixel in closed form from the parquet inputs; the general
     entropy/AC machinery is pinned by tests/test_jpeg_codec.py against
-    arbitrary coefficients. Scale shape: two chained mapInPandas
-    passes, zero shuffles."""
-    return _map_assets(
-        synthesize_jpeg_assets(spark, sf_dir),
+    arbitrary coefficients. Scale shape: one mapInPandas pass, zero
+    shuffles."""
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        _jpeg_content,
         _JPEG_GRAY_SCHEMA,
         "JPEG",
         _jpeg_gray_rows,
+        nonempty=True,
     )
 
 
@@ -2237,7 +2283,7 @@ def q_multimodal_jpeg_prog_decode(
     the two container classes must agree bit-for-bit. The decoder must
     also ATTEST the progressive path ran (`m["progressive"]`), so a
     silent fallback to the baseline scan loop cannot fake a pass.
-    Scale shape: two chained mapInPandas passes, zero shuffles."""
+    Scale shape: one mapInPandas pass, zero shuffles."""
     from parallelutilities_jl_spark.operators.jpeg import (
         encode_jpeg_prog_gray,
     )
@@ -2249,15 +2295,13 @@ def q_multimodal_jpeg_prog_decode(
             restart_interval=2 if i % 3 == 0 else 0,
         )
 
-    return _map_assets(
-        _encode_docs(
-            load_table_parallel(spark, sf_dir, "documents"),
-            encode,
-            nonempty=True,
-        ),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        encode,
         _JPEG_GRAY_SCHEMA,
         "progressive JPEG",
         lambda c: _jpeg_gray_rows(c, progressive=True),
+        nonempty=True,
     )
 
 
@@ -2281,16 +2325,14 @@ def q_multimodal_jpeg_color_decode(
         cr = [255 - v for v in y]
         return encode_jpeg_color(y, cb, cr, bw, bh)
 
-    return _map_assets(
-        _encode_docs(
-            load_table_parallel(spark, sf_dir, "documents"),
-            encode,
-            nonempty=True,
-        ),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        encode,
         "asset_id long, width int, height int, n_blocks int, "
         + _JPEG_COLOR_STATS_SCHEMA,
         "color JPEG",
         _jpeg_color_rows,
+        nonempty=True,
     )
 
 
@@ -2327,16 +2369,14 @@ def q_multimodal_jpeg420_decode(
 
     # the decoder's block count is the MCU count here; n_components is
     # attested by `_jpeg_color_rows` but not part of this head's output
-    return _map_assets(
-        _encode_docs(
-            load_table_parallel(spark, sf_dir, "documents"),
-            encode,
-            nonempty=True,
-        ),
+    return _round_trip(
+        load_table_parallel(spark, sf_dir, "documents"),
+        encode,
         "asset_id long, width int, height int, n_mcus int, "
         + _JPEG_COLOR_STATS_SCHEMA,
         "4:2:0 JPEG",
         _jpeg_color_rows,
+        nonempty=True,
     ).drop("n_components")
 
 
@@ -2467,8 +2507,8 @@ FROM blk GROUP BY asset_id
 
 def decode_census_from_docs(docs: DataFrame) -> DataFrame:
     """Decode-on-ingest census: (doc_id, text) → real BMP → strict
-    parse → per-(width, height) asset counts + exact luma totals. The
-    synth/decode stages are stateless mapInPandas and the tail is one
+    parse → per-(width, height) asset counts + exact luma totals. Synth
+    and decode are one stateless mapInPandas pass and the tail is one
     keyed agg, so the SAME function runs on a batch frame and on a
     streaming DataFrame (complete output mode) — the decode-on-arrival
     shape a multimodal ingest pipeline runs; stream ≡ batch is pinned
@@ -2480,12 +2520,14 @@ def decode_census_from_docs(docs: DataFrame) -> DataFrame:
             (m["width"], m["height"], *_luma_sums(m["luma"]))
         ]
 
-    per = _map_assets(
-        synthesize_bmp_from_docs(docs),
+    per = _round_trip(
+        docs,
+        _bmp_content,
         "asset_id long, width int, height int, luma_sum long, "
         "luma_weighted long",
         "BMP",
         rows,
+        nonempty=True,
     )
     return per.groupBy("width", "height").agg(
         F.count(F.lit(1)).alias("n_assets"),
@@ -2500,7 +2542,7 @@ def q_multimodal_decode_census(
     """Batch anchor of the decode-on-ingest census (the streaming twin
     runs the identical function over a file-source stream): real BMP
     synth → strict parse → per-(width, height) counts and exact luma
-    totals. One keyed agg after two zero-shuffle mapInPandas passes."""
+    totals. One keyed agg after one zero-shuffle mapInPandas pass."""
     return decode_census_from_docs(
         load_table_parallel(spark, sf_dir, "documents")
     )
@@ -3080,14 +3122,18 @@ def synthesize_bmp_gray_assets(
     make integer luma exactly the sampled codepoint (mod 256), so the
     oracle can replay the grid from the text alone while the Spark
     side goes through the full encode → strict-parse round trip."""
-    g = DHASH_GRID
-    docs = load_table_parallel(spark, sf_dir, "documents").filter(
+    return _encode_docs(_dhash_docs(spark, sf_dir), _bmp_gray_content)
+
+
+def _dhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table_parallel(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.length("text") >= DHASH_MIN_LEN)
     )
-    return _encode_docs(
-        docs,
-        lambda _i, t: _bmp_bytes(_bmp_pixel_vals(t, g * g), g, g, gray=True),
-    )
+
+
+def _bmp_gray_content(doc_id: int, text: str) -> bytes:
+    g = DHASH_GRID
+    return _bmp_bytes(_bmp_pixel_vals(text, g * g), g, g, gray=True)
 
 
 def q_multimodal_dhash_near_dup(
@@ -3113,8 +3159,8 @@ def q_multimodal_dhash_near_dup(
     deployment swaps only the synthesizer for its blob store read;
     decoder and everything downstream are unchanged.
 
-    Scale shape: synth + decode are two chained zero-shuffle
-    mapInPandas passes; banding + bucket-capped self-join + bit_count
+    Scale shape: synth + decode are one zero-shuffle mapInPandas
+    pass; banding + bucket-capped self-join + bit_count
     verify is exactly the audited simhash_near_dup plan with a 14-bit
     key space (4x fewer hot buckets than the 8-bit simhash bands)."""
     g = DHASH_GRID
@@ -3131,8 +3177,9 @@ def q_multimodal_dhash_near_dup(
         f"acc + IF(element_at(hs, {li} + 1) < element_at(hs, {li} + 2), "
         f"shiftleft(1L, CAST(b AS INT)), 0L))"
     )
-    fp = _map_assets(
-        synthesize_bmp_gray_assets(spark, sf_dir),
+    fp = _round_trip(
+        _dhash_docs(spark, sf_dir),
+        _bmp_gray_content,
         "asset_id long, hs array<bigint>",
         "gray BMP",
         grid,

@@ -75,9 +75,10 @@ def test_dedup_scales_linearly(spark, fn, data_ratio, max_ratio):
     ],
 )
 def test_new_decode_heads_scale_linearly(spark, qname):
-    """Round-16 codec heads: per-doc mapInPandas chains must stay
-    ~linear in documents (10x rows sf0.01 -> sf0.1; the loose 35x
-    bound only trips a driver-side collect or quadratic creep)."""
+    """Round-16 codec heads: one per-doc mapInPandas pass (encode and
+    decode fused) must stay ~linear in documents (10x rows sf0.01 ->
+    sf0.1; the loose 35x bound only trips a driver-side collect or
+    quadratic creep)."""
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[qname]

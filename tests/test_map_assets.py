@@ -1,7 +1,8 @@
-"""The shared decode pass `_map_assets`: a payload its decoder rejects
-(truncated, or a valid container that fails the head's attestation)
-must raise a ValueError naming the codec label and the asset id, and
-integer stats the decoder leaves as None must come out NULL."""
+"""The shared decode pass `_map_assets` and the fused encode+decode
+pass `_round_trip`: a payload its decoder rejects (truncated, or a
+valid container that fails the head's attestation) must raise a
+ValueError naming the codec label and the asset id, and integer stats
+the decoder leaves as None must come out NULL."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ from parallelutilities_jl_spark.operators.multimodal import (
     _g711_samples,
     _jpeg_gray_rows,
     _map_assets,
+    _round_trip,
     _wav_container_bytes,
 )
 
@@ -56,6 +58,24 @@ def test_rejected_payload_names_label_and_asset(spark, label, payload, rows):
     with pytest.raises((PythonException, Py4JJavaError)) as ei:
         df.collect()
     assert f"invalid {label} payload for asset 4242" in str(ei.value)
+
+
+def test_fused_round_trip_names_label_and_asset(spark):
+    # the encoder's bytes go straight into the decoder in one pass: a
+    # valid PCM16 WAV fails the G.711 attestation all the same
+    docs = spark.createDataFrame(
+        [(4242, "hello world")], "doc_id long, text string"
+    )
+    df = _round_trip(
+        docs,
+        _wav_container_bytes,
+        "asset_id long, x int",
+        "G.711",
+        lambda c: None if _g711_samples(c) is None else [(0,)],
+    )
+    with pytest.raises((PythonException, Py4JJavaError)) as ei:
+        df.collect()
+    assert "invalid G.711 payload for asset 4242" in str(ei.value)
 
 
 def test_none_stats_stay_null_with_schema_types(spark):

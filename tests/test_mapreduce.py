@@ -312,6 +312,81 @@ def test_dense_elsum_shared_make_array_is_not_written(spark, twin):
     assert vals == [8.0] * 12
 
 
+def test_partition_sum_holds_two_arrays():
+    # the in-place combine holds the accumulator and the array being
+    # added, never a third: no earlier make_array result may still be
+    # alive when the next one is built, and the traced peak stays under
+    # three arrays (the previous array, kept until its name was rebound,
+    # made three)
+    import gc
+    import tracemalloc
+    import weakref
+
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import _partition_sum
+
+    shape = (256, 1024)  # 2 MiB of float64
+    nbytes = np.dtype(np.float64).itemsize * shape[0] * shape[1]
+    made = []
+
+    def gen(i):
+        gc.collect()
+        assert [r for r in made if r() is not None] == []
+        a = np.full(shape, float(i))
+        made.append(weakref.ref(a))
+        return a
+
+    tracemalloc.start()
+    try:
+        acc = _partition_sum(gen, range(6))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 2.5 * nbytes
+    assert acc.dtype == np.float64 and np.all(acc == 15.0)
+    assert all(acc is not r() for r in made)
+
+
+def test_partition_sum_promotes_like_np_add():
+    # an int8 first array followed by float64 ones sums to float64, as
+    # np.add promotes; the narrow first array is never written
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import _partition_sum
+
+    first = np.full((3, 4), 3, dtype=np.int8)
+
+    def gen(i):
+        return first if i == 0 else np.full((3, 4), 0.5)
+
+    acc = _partition_sum(gen, range(3))
+    assert acc.dtype == np.float64
+    assert np.all(acc == 4.0)
+    assert np.all(first == 3)
+
+
+@pytest.mark.parametrize("n_tasks", [0, -2])
+@pytest.mark.parametrize("twin", ["collect", "sink"])
+def test_dense_elsum_rejects_fewer_than_one_task(spark, twin, n_tasks):
+    # an elementwise sum over no arrays has no shape to return (the
+    # reference's mapreduce over an empty collection without `init` is
+    # an error too); n_tasks=0 used to die in a ZeroDivisionError
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
+    )
+
+    twin_fn = {
+        "collect": pmapreduce_dense_elsum,
+        "sink": pmapreduce_dense_elsum_long,
+    }[twin]
+    with pytest.raises(ValueError, match="n_tasks"):
+        twin_fn(spark, n_tasks, lambda i: np.ones((2, 3)))
+
+
 def test_flip_swaps_arguments():
     from parallelutilities_jl_spark.operators.reductions import ReduceOp, flip
 

@@ -169,7 +169,7 @@ QUERIES = (
     # one-scan one-row-aggregate planners (expected ~flat to ~linear)
     "packing_capacity_plan",
     "embedding_dim_plan",
-    # round-14 real-codec round trips: two chained mapInPandas passes,
+    # round-14 real-codec round trips: one mapInPandas pass each,
     # zero shuffles — expected embarrassingly-parallel ~linear
     "multimodal_bmp_decode",
     "multimodal_png_decode",
