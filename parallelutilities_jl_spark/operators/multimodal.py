@@ -26,16 +26,20 @@ external decoder changes nothing structurally: the UDF signatures,
 schemas and batch shapes are what a real deployment uses.
 
 Batch shape: every codec round trip is one helper,
-`_round_trip(docs, encode, out_schema, label, rows)`, so a head holds
-only its encoder, its attestation predicate and its stats tuple. It is
-ONE Arrow-batched `mapInPandas` pass (the reference's `pmapbatch`: a
-batch map over partitions, zero shuffles) that feeds `_encode_batches`
-((doc_id, text) → (asset_id, content)) straight into `_decode_batches`
-(bytes → output rows; a payload the decoder rejects raises `ValueError`
-naming the codec label and the asset id, and integer columns keep NULLs
-because dtypes derive from the schema). `_encode_docs` (the
-`synthesize_*` asset tables) and `_map_assets` (`decode_assets`,
-`extract_features`) run one of the two stages each.
+`_round_trip(docs, encode, out_schema, label, rows, extra=())`, so a
+head holds only its encoder, its attestation predicate and its stats
+tuple. It is ONE Arrow-batched `mapInPandas` pass (the reference's
+`pmapbatch`: a batch map over partitions, zero shuffles) that feeds
+`_encode_batches` ((doc_id, text, *extra) → (asset_id, content,
+*extra)) straight into `_decode_batches` (bytes → output rows; a
+payload the decoder rejects raises `ValueError` naming the codec label
+and the asset id, and integer columns keep NULLs because dtypes derive
+from the schema). The mixed-media heads pass `extra=("modality",)` so
+the decoder dispatches on the modality tag. Each stage also runs alone
+where its input or output really is a table: `_map_assets`
+(`decode_assets`) decodes the files read back from a binaryFile
+landing, and `synthesize_media_from_docs` encodes the containers the
+landing writer stores.
 Binary payloads stay columnar (parquet BYTE_ARRAY) and are only
 materialized inside the Arrow batch being decoded;
 `spark.sql.files.maxPartitionBytes` bounds per-task memory — a 100 TB
@@ -61,11 +65,13 @@ FEATURE_DIM = 8
 _PD_DTYPES = {"int": "Int32", "long": "Int64", "bigint": "Int64"}
 
 
-def _docs_to_encode(docs: DataFrame, nonempty: bool) -> DataFrame:
-    """The (doc_id, text) rows an encoder may see: NULL text is
-    excluded (a NULL payload cannot be encoded; every multimodal oracle
-    carries the same `text IS NOT NULL`), and empty text too when
-    `nonempty` — image/video encoders sample pixels from the
+def _docs_to_encode(
+    docs: DataFrame, nonempty: bool, extra=()
+) -> DataFrame:
+    """The (doc_id, text, *extra) rows an encoder may see: NULL text
+    is excluded (a NULL payload cannot be encoded; every multimodal
+    oracle carries the same `text IS NOT NULL`), and empty text too
+    when `nonempty` — image/video encoders sample pixels from the
     characters."""
     from parallelutilities_jl_spark.session import ensure_package_on_executors
 
@@ -75,12 +81,13 @@ def _docs_to_encode(docs: DataFrame, nonempty: bool) -> DataFrame:
     keep = F.col("text").isNotNull()
     if nonempty:
         keep = keep & (F.length("text") >= 1)
-    return docs.filter(keep).select("doc_id", "text")
+    return docs.filter(keep).select("doc_id", "text", *extra)
 
 
-def _encode_batches(batches, encode):
-    """(doc_id, text) batches → (asset_id, content) batches with
-    `encode(doc_id, text) -> bytes` per row."""
+def _encode_batches(batches, encode, extra=()):
+    """(doc_id, text, *extra) batches → (asset_id, content, *extra)
+    batches with `encode(doc_id, text) -> bytes` per row; the extra
+    columns pass through unchanged."""
     for pdf in batches:
         yield pd.DataFrame(
             {
@@ -89,6 +96,7 @@ def _encode_batches(batches, encode):
                     encode(int(i), t)
                     for i, t in zip(pdf["doc_id"], pdf["text"])
                 ],
+                **{e: pdf[e] for e in extra},
             }
         )
 
@@ -125,19 +133,6 @@ def _decode_batches(batches, out_schema: str, label: str, rows, extra=()):
         )
 
 
-def _encode_docs(
-    docs: DataFrame, encode, nonempty: bool = False
-) -> DataFrame:
-    """(doc_id, text) → (asset_id long, content binary) with
-    `encode(doc_id, text) -> bytes`, one Arrow-batched mapInPandas pass
-    over `_docs_to_encode`'s rows. Stateless, so it applies unchanged
-    to a streaming DataFrame."""
-    return _docs_to_encode(docs, nonempty).mapInPandas(
-        lambda batches: _encode_batches(batches, encode),
-        "asset_id long, content binary",
-    )
-
-
 def _map_assets(
     assets: DataFrame, out_schema: str, label: str, rows, extra=()
 ) -> DataFrame:
@@ -156,16 +151,19 @@ def _map_assets(
 
 def _round_trip(
     docs: DataFrame, encode, out_schema: str, label: str, rows, *,
-    nonempty: bool = False,
+    nonempty: bool = False, extra=(),
 ) -> DataFrame:
-    """`_map_assets(_encode_docs(docs, encode, nonempty), out_schema,
-    label, rows)` as ONE mapInPandas pass: each batch's encoded bytes
-    go straight into the decoder, in the same Python worker. Two
-    chained passes would hold two Python workers per task and send
-    every payload Python → JVM → Python between them."""
-    return _docs_to_encode(docs, nonempty).mapInPandas(
+    """Encode each of `_docs_to_encode`'s rows and decode it with
+    `rows(content, *extra_values)` in ONE mapInPandas pass: each
+    batch's encoded bytes go straight into the decoder, in the same
+    Python worker. Two chained passes would hold two Python workers
+    per task and send every payload Python → JVM → Python between
+    them. Stateless, so it applies unchanged to a streaming
+    DataFrame."""
+    return _docs_to_encode(docs, nonempty, extra).mapInPandas(
         lambda batches: _decode_batches(
-            _encode_batches(batches, encode), out_schema, label, rows
+            _encode_batches(batches, encode, extra),
+            out_schema, label, rows, extra,
         ),
         out_schema,
     )
@@ -463,10 +461,10 @@ def _media_features(content: bytes, modality: str) -> list[float]:
     return _features_stub(content)
 
 
-def _modality_col(id_col: str = "doc_id") -> F.Column:
+def _modality_col() -> F.Column:
     return (
-        F.when(F.col(id_col) % 3 == 0, "image")
-        .when(F.col(id_col) % 3 == 1, "audio")
+        F.when(F.col("doc_id") % 3 == 0, "image")
+        .when(F.col("doc_id") % 3 == 1, "audio")
         .otherwise("video")
     )
 
@@ -490,39 +488,41 @@ def _media_content(doc_id: int, text: str) -> bytes:
     """One REAL container per document, picked by its modality tag:
     image → 24-bit BMP (`_bmp_content`), audio → RIFF/WAVE PCM16
     (`_wav_container_bytes`), video → animated GIF89a (`_gif_content`,
-    full LZW). Each is the single-modality synthesizer's own encoder, so
-    every decoded field stays first-principles oracle-predictable."""
+    full LZW). Each is the single-modality head's own encoder, so every
+    decoded field stays first-principles oracle-predictable."""
     return (_bmp_content, _wav_container_bytes, _gif_content)[doc_id % 3](
         doc_id, text
     )
 
 
+def _media_docs(docs: DataFrame) -> DataFrame:
+    """The documents the mixed-media heads encode, tagged with their
+    modality (a column op on the doc id). Image/video synthesis
+    samples pixel values from the text characters, so empty-text docs
+    are excluded for those modalities; audio keeps them (an empty data
+    chunk is a valid WAV). The oracles' `_M_IMG`/`_M_AUD`/`_M_VID`
+    carry the same predicate."""
+    return docs.filter(
+        (F.col("doc_id") % 3 == 1) | (F.length("text") >= 1)
+    ).withColumn("modality", _modality_col())
+
+
 def synthesize_media_from_docs(docs: DataFrame) -> DataFrame:
-    """The (doc_id, text) → real-mixed-media mapInPandas transform,
-    shared by the batch path and the streaming ingest parity test
-    (stateless, so it applies unchanged to a streaming DataFrame).
-    Empty text is kept for audio only (an empty data chunk is a valid
-    WAV); the modality tag is a column op on the asset id."""
-    src = docs.filter((F.col("doc_id") % 3 == 1) | (F.length("text") >= 1))
-    return _encode_docs(src, _media_content).select(
-        "asset_id", _modality_col("asset_id").alias("modality"), "content"
-    )
-
-
-def synthesize_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL mixed-modality asset table (round-15: retires the
-    raw-text payloads on the decode path): every row's content is a
-    genuine container for its modality, built by `_media_content` in
-    one Arrow-batched mapInPandas pass. Image/video synthesis samples
-    pixel values from the text characters, so empty-text docs are
-    excluded for those modalities (audio keeps them: an empty data
-    chunk is a valid WAV) — the oracles carry the same predicate.
-    `synthesize_assets` (raw text bytes) remains the fixture for the
-    byte-plumbing queries (binary_stats / arrow_hist / shard manifest),
-    where the payload bytes themselves are the subject."""
-    return synthesize_media_from_docs(
-        load_table_parallel(spark, sf_dir, "documents")
-    )
+    """(doc_id, text) → (asset_id, modality, content): one REAL
+    container per `_media_docs` row, encoded by `_media_content` in one
+    Arrow-batched mapInPandas pass. This is the asset table the
+    binaryFile landing stores (`sources.binary_assets`); the decode
+    heads fuse the same encode into their decode pass
+    (`_decoded_media`). The byte-plumbing queries (binary_stats /
+    arrow_hist / shard manifest) use `synthesize_assets` (raw text
+    bytes) instead, because there the payload bytes themselves are the
+    subject. Stateless, so it applies unchanged to a streaming
+    DataFrame."""
+    extra = ("modality",)
+    return _docs_to_encode(_media_docs(docs), False, extra).mapInPandas(
+        lambda batches: _encode_batches(batches, _media_content, extra),
+        "asset_id long, content binary, modality string",
+    ).select("asset_id", "modality", "content")
 
 
 # synthesized-WAV payload bound: data chunk = first this-many UTF-8
@@ -535,9 +535,9 @@ def _wav_container_bytes(doc_id: int, text: str) -> bytes:
     """REAL RIFF/WAVE PCM16 container for one document: mono 16-bit,
     sample_rate = 8000 + (doc_id % 4)·8000, data chunk = first
     `WAV_DATA_CAP` UTF-8 bytes of the text zero-padded to whole
-    samples. Shared by `synthesize_wav_assets` and the mixed-modality
-    `synthesize_media_assets` so the audio payload algebra (and its
-    oracle) has exactly one definition."""
+    samples. Shared by `multimodal_wav_decode` and the mixed-modality
+    `_media_content` so the audio payload algebra (and its oracle) has
+    exactly one definition."""
     import struct
 
     sr = 8000 + (doc_id % 4) * 8000
@@ -556,24 +556,10 @@ def _wav_container_bytes(doc_id: int, text: str) -> bytes:
     return hdr + raw
 
 
-def synthesize_wav_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build REAL RIFF/WAVE PCM16 payloads from the documents fixture
-    (mapInPandas, Arrow-batched): mono 16-bit, sample_rate = 8000 +
-    (doc_id % 4)·8000, data chunk = first `WAV_DATA_CAP` UTF-8 bytes of
-    the text zero-padded to an even length. Every byte of the container
-    is written by `struct.pack` per the RIFF spec — `_decode_wav` then
-    parses it back with no knowledge of doc_id, so the decode query is
-    a genuine encode→decode round trip whose outputs an oracle can
-    still predict from first principles."""
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"), _wav_container_bytes
-    )
-
-
 def q_multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL codec round trip (the query that retired the
     repo's last decode stand-in): synthesize a valid PCM16 WAV per
-    document (`synthesize_wav_assets`), then parse the BYTES back with
+    document (`_wav_container_bytes`), then parse the BYTES back with
     the pure-Python RIFF walker `_decode_wav` — header fields, frame
     count from data-chunk/block-align math, and the max-|sample| PCM16
     stat. The oracle never sees the bytes: it predicts every field from
@@ -1280,21 +1266,6 @@ def _bmp_content(doc_id: int, text: str) -> bytes:
     return _bmp_bytes(_bmp_pixel_vals(text, w * h), w, h)
 
 
-def synthesize_bmp_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build REAL 24-bit BMP payloads from the documents fixture
-    (mapInPandas, Arrow-batched): per-doc dims from `_bmp_dims`, pixel
-    base values sampled from the text characters, channels twisted
-    (R=v, G=2v%256, B=3v%256) so channel order is load-bearing. Every
-    byte is written per the BMP spec — `_decode_bmp` parses it back
-    with no knowledge of doc_id/text, the image analog of
-    `synthesize_wav_assets`."""
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"),
-        _bmp_content,
-        nonempty=True,
-    )
-
-
 def q_multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL image-codec round trip (the query that retires
     the image decode stand-in): synthesize a valid 24-bit BMP per
@@ -1750,19 +1721,6 @@ def _gif_dims(doc_id: int) -> tuple[int, int, int]:
     return _dims_of(_GIF_WHN, doc_id)
 
 
-def synthesize_gif_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build REAL animated GIF payloads from the documents fixture:
-    per-doc dims + frame count from `_gif_dims`; frame f's pixel i is
-    the sampled codepoint value rotated by {GIF_FRAME_SHIFT}·f (mod
-    256), so frames are distinct yet the oracle replays every one from
-    the text alone."""
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"),
-        _gif_content,
-        nonempty=True,
-    )
-
-
 def _gif_content(doc_id: int, text: str) -> bytes:
     w, h, nf = _gif_dims(doc_id)
     base_vals = _bmp_pixel_vals(text, w * h)
@@ -2038,19 +1996,6 @@ def _decode_png(content: bytes) -> dict | None:
     }
 
 
-def synthesize_png_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build REAL truecolor PNG payloads from the documents fixture
-    (mapInPandas, Arrow-batched): per-doc dims from `_png_dims`, pixel
-    base values sampled from the text characters, one filter type per
-    scanline (r % 5) so decoding exercises every de-filter path."""
-
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"),
-        _png_content,
-        nonempty=True,
-    )
-
-
 def _png_content(doc_id: int, text: str) -> bytes:
     w, h = _png_dims(doc_id)
     return _png_bytes(_bmp_pixel_vals(text, w * h), w, h)
@@ -2118,22 +2063,15 @@ GROUP BY l.asset_id
 def media_decode_census_from_docs(docs: DataFrame) -> DataFrame:
     """Mixed-modality decode-on-ingest census: (doc_id, text) → real
     BMP/WAV/GIF container by modality → real decode → per-(modality,
-    width, height) asset counts + total decoded frames. Both stages
-    are stateless mapInPandas and the tail is one keyed agg, so the
-    SAME function runs on a batch frame and on a streaming DataFrame
-    (complete output mode) — the full-pipeline extension of the
-    BMP-only `decode_census_from_docs`; stream ≡ batch pinned by
-    tests/test_streaming_decode.py. Audio rows group into one
-    NULL-dims row whose frames_total is the PCM sample count; a
+    width, height) asset counts + total decoded frames. Synth and
+    decode are one stateless mapInPandas pass and the tail is one
+    keyed agg (`media_census`), so the SAME function runs on a batch
+    frame and on a streaming DataFrame (complete output mode) — the
+    full-pipeline extension of the BMP-only `decode_census_from_docs`;
+    stream ≡ batch pinned by tests/test_streaming_decode.py. A
     misdecode in any of the three codecs moves a count between groups
     and hash-mismatches."""
-    dec = decode_assets(synthesize_media_from_docs(docs))
-    return dec.groupBy("modality", "width", "height").agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        F.sum(F.coalesce(F.col("n_frames"), F.lit(0)))
-        .cast("long")
-        .alias("frames_total"),
-    )
+    return media_census(_decoded_media(docs))
 
 
 def q_multimodal_media_census(
@@ -2185,18 +2123,6 @@ _JPG_BWH = ((2, 2), (1, 3))
 
 def _jpg_dims(doc_id: int) -> tuple[int, int]:
     return _dims_of(_JPG_BWH, doc_id)
-
-
-def synthesize_jpeg_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build REAL baseline JPEG payloads from the documents fixture:
-    per-doc block grid from `_jpg_dims`, one SOLID even-valued block
-    per sampled text codepoint (`encode_jpeg_gray`) — fully conformant
-    streams whose decoded pixels are exactly predictable."""
-    return _encode_docs(
-        load_table_parallel(spark, sf_dir, "documents"),
-        _jpeg_content,
-        nonempty=True,
-    )
 
 
 def _jpeg_content(doc_id: int, text: str) -> bytes:
@@ -2559,54 +2485,68 @@ FROM lum GROUP BY w, h
 """
 
 
+_MEDIA_META_SCHEMA = (
+    "asset_id long, modality string, n_bytes long, width int, "
+    "height int, sample_rate int, n_frames int"
+)
+
+
+def _media_meta_rows(c: bytes, m: str):
+    """One mixed-media asset → its `_MEDIA_META_SCHEMA` row (after
+    asset_id). Dispatch on claimed modality FIRST, container sniff
+    second: only audio rows may take the real WAV decoder, only image
+    rows the real BMP/PNG/JPEG decoders, only video rows the real GIF
+    decoder. An image/video blob that happens to be a structurally
+    valid RIFF/WAVE container must NOT get WAV metadata (NULL
+    width/height) — the row's output contract follows its modality,
+    and rows whose bytes are not a valid container for their modality
+    fall back to the documented stand-in."""
+    if m == "audio" and (wav := _decode_wav(c)) is not None:
+        meta = (None, None, wav["sample_rate"], wav["n_frames"])
+    elif m == "image" and (img := _decode_image_any(c)) is not None:
+        meta = (img["width"], img["height"], None, None)
+    elif m == "video" and (gif := _decode_gif(c)) is not None:
+        meta = (gif["width"], gif["height"], None, gif["n_frames"])
+    else:
+        s = _decode_stub(c, m)
+        meta = tuple(
+            s[k] for k in ("width", "height", "sample_rate", "n_frames")
+        )
+    return [(m, len(c), *meta)]
+
+
 def decode_assets(assets: DataFrame) -> DataFrame:
-    """mapInPandas decode: (asset_id, modality, content) → + decoded
-    metadata columns. Arrow-batched; per-batch Python, not per-row."""
-
-    def rows(c: bytes, m: str):
-        # dispatch on claimed modality FIRST, container sniff second:
-        # only audio rows may take the real WAV decoder, only image rows
-        # the real BMP/PNG/JPEG decoders, only video rows the real GIF
-        # decoder. An image/video blob that happens to be a structurally
-        # valid RIFF/WAVE container must NOT get WAV metadata (NULL
-        # width/height) — the row's output contract follows its
-        # modality, and rows whose bytes are not a valid container for
-        # their modality fall back to the documented stand-in
-        if m == "audio" and (wav := _decode_wav(c)) is not None:
-            meta = (None, None, wav["sample_rate"], wav["n_frames"])
-        elif m == "image" and (img := _decode_image_any(c)) is not None:
-            meta = (img["width"], img["height"], None, None)
-        elif m == "video" and (gif := _decode_gif(c)) is not None:
-            meta = (gif["width"], gif["height"], None, gif["n_frames"])
-        else:
-            s = _decode_stub(c, m)
-            meta = tuple(
-                s[k] for k in ("width", "height", "sample_rate", "n_frames")
-            )
-        return [(m, len(c), *meta)]
-
+    """mapInPandas decode of an asset table: (asset_id, modality,
+    content) → `_MEDIA_META_SCHEMA`. Arrow-batched; per-batch Python,
+    not per-row."""
     return _map_assets(
-        assets,
-        "asset_id long, modality string, n_bytes long, width int, "
-        "height int, sample_rate int, n_frames int",
-        "media",
-        rows,
+        assets, _MEDIA_META_SCHEMA, "media", _media_meta_rows,
         extra=("modality",),
     )
 
 
-def extract_features(assets: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction → array<double> embedding column:
-    REAL per-modality statistics of the DECODED content
-    (`_media_features` — luma histogram / PCM frame energies /
-    per-frame luma sums), sha256 fallback only for containers outside
-    the stdlib codecs. One Arrow-batched pass, zero shuffles."""
-    return _map_assets(
-        assets,
-        "asset_id long, features array<double>",
-        "media",
-        lambda c, m: [(_media_features(c, m),)],
-        extra=("modality",),
+def _decoded_media(docs: DataFrame) -> DataFrame:
+    """`decode_assets(synthesize_media_from_docs(docs))` as ONE
+    mapInPandas pass (`_round_trip`): the decoded-media frame the
+    mixed-media decode heads share."""
+    return _round_trip(
+        _media_docs(docs), _media_content, _MEDIA_META_SCHEMA, "media",
+        _media_meta_rows, extra=("modality",),
+    )
+
+
+def media_census(decoded: DataFrame) -> DataFrame:
+    """Per-(modality, width, height) asset counts + total decoded
+    frames of a `_MEDIA_META_SCHEMA` frame: the tail shared by the
+    in-flight census (`media_decode_census_from_docs`) and its
+    files-on-disk twin (`multimodal_binaryfile_census`), which check
+    against one oracle. Audio rows group into one NULL-dims row whose
+    frames_total is the PCM sample count."""
+    return decoded.groupBy("modality", "width", "height").agg(
+        F.count(F.lit(1)).alias("n_assets"),
+        F.sum(F.coalesce(F.col("n_frames"), F.lit(0)))
+        .cast("long")
+        .alias("frames_total"),
     )
 
 
@@ -2707,29 +2647,38 @@ MEDIA_SAMPLE_EVERY = 2  # GIF spec max is 4 frames, so every-2 is non-trivial
 
 
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full decode pipeline over the REAL mixed-modality asset
-    table (round-15: every row is a genuine BMP / WAV / GIF container
-    and every metadata field comes out of its real stdlib decoder —
-    the stub now only backstops containers the repo cannot parse).
+    """The full decode pipeline over the REAL mixed-modality documents
+    (round-15: every row is a genuine BMP / WAV / GIF container and
+    every metadata field comes out of its real stdlib decoder — the
+    stub now only backstops containers the repo cannot parse).
     n_bytes is projected away: the LZW-compressed GIF payload length is
     not first-principles predictable, and the decode METADATA is the
-    query's subject. Scale shape: two chained mapInPandas passes, zero
-    shuffles."""
-    dec = decode_assets(synthesize_media_assets(spark, sf_dir))
+    query's subject. Scale shape: one mapInPandas pass
+    (`_decoded_media`: encode and decode in the same Python worker),
+    zero shuffles."""
+    dec = _decoded_media(load_table_parallel(spark, sf_dir, "documents"))
     return dec.select(
         "asset_id", "modality", "width", "height", "sample_rate", "n_frames"
     )
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL feature extraction over the mixed-modality table: decoded
-    luma histogram (image) / PCM frame energies (audio) / per-frame
-    luma sums (video), flattened to scalar columns f0..f{FEATURE_DIM-1}
-    (the `minhash_signature` h0..h3 pattern) so the driver's pandas
-    canonicalizer can sort/hash the result — raw array<double> columns
-    are unhashable there. The internal API (`extract_features`) still
-    returns the array form."""
-    feats = extract_features(synthesize_media_assets(spark, sf_dir))
+    """REAL feature extraction over the mixed-modality documents:
+    decoded luma histogram (image) / PCM frame energies (audio) /
+    per-frame luma sums (video) from `_media_features`, sha256 fallback
+    only for containers outside the stdlib codecs, flattened to scalar
+    columns f0..f{FEATURE_DIM-1} (the `minhash_signature` h0..h3
+    pattern) so the oracle comparison's pandas canonicalizer can
+    sort/hash the result — raw array<double> columns are unhashable
+    there. Scale shape: one mapInPandas pass, zero shuffles."""
+    feats = _round_trip(
+        _media_docs(load_table_parallel(spark, sf_dir, "documents")),
+        _media_content,
+        "asset_id long, features array<double>",
+        "media",
+        lambda c, m: [(_media_features(c, m),)],
+        extra=("modality",),
+    )
     return feats.select(
         "asset_id",
         *[F.col("features")[i].alias(f"f{i}") for i in range(FEATURE_DIM)],
@@ -2742,7 +2691,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sequence+explode plan itself stays pure column ops — no second
     decode until a downstream consumer fetches the frame)."""
     return frame_sample(
-        decode_assets(synthesize_media_assets(spark, sf_dir)),
+        _decoded_media(load_table_parallel(spark, sf_dir, "documents")),
         every_k=MEDIA_SAMPLE_EVERY,
     )
 
@@ -2751,7 +2700,9 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode → image filter → aspect-preserving resize plan over the
     REAL decoded BMP dims (the pixel resample itself is
     `multimodal_bmp_resize`; this is the dimension-planning stage)."""
-    return resize_plan(decode_assets(synthesize_media_assets(spark, sf_dir)))
+    return resize_plan(
+        _decoded_media(load_table_parallel(spark, sf_dir, "documents"))
+    )
 
 
 # First-principles oracles for the REAL mixed-modality pipeline: every
@@ -2760,9 +2711,9 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # single-modality oracles) — the synthesized container bytes are never
 # consulted, so any encoder/decoder misparse hash-mismatches.
 
-# modality membership predicates, aligned with `synthesize_media_assets`'
-# filter (image/video sample pixels from the text, so they need length>=1;
-# an empty-text WAV is valid)
+# modality membership predicates, aligned with `_media_docs`' filter
+# (image/video sample pixels from the text, so they need length>=1; an
+# empty-text WAV is valid)
 _M_IMG = "text IS NOT NULL AND length(text) >= 1 AND doc_id % 3 = 0"
 _M_AUD = "text IS NOT NULL AND doc_id % 3 = 1"
 _M_VID = "text IS NOT NULL AND length(text) >= 1 AND doc_id % 3 = 2"
@@ -3113,18 +3064,6 @@ DHASH_HAM_MAX = 6
 DHASH_MIN_LEN = 64  # assets shorter than one grid of samples skip
 
 
-def synthesize_bmp_gray_assets(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """REAL {DHASH_GRID}x{DHASH_GRID} grayscale BMPs for the
-    image-modality documents (doc_id % 3 == 0, text length >=
-    {DHASH_MIN_LEN}): the dHash fixture tier. Gray pixels (v, v, v)
-    make integer luma exactly the sampled codepoint (mod 256), so the
-    oracle can replay the grid from the text alone while the Spark
-    side goes through the full encode → strict-parse round trip."""
-    return _encode_docs(_dhash_docs(spark, sf_dir), _bmp_gray_content)
-
-
 def _dhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table_parallel(spark, sf_dir, "documents").filter(
         (F.col("doc_id") % 3 == 0) & (F.length("text") >= DHASH_MIN_LEN)
@@ -3150,7 +3089,7 @@ def q_multimodal_dhash_near_dup(
 
     DECODE IS REAL (round-13 verdict item 2): each image-modality doc
     is synthesized as a genuine 24-bit grayscale BMP
-    (`synthesize_bmp_gray_assets`) and the luma grid comes from
+    (`_bmp_gray_content`) and the luma grid comes from
     `_decode_bmp`'s strict header + pixel parse — header offsets,
     bottom-up row un-flip, 4-byte stride un-pad, and the integer luma
     reduction all sit ON the fingerprint path, so a misparse changes

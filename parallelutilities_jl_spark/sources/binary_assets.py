@@ -272,13 +272,8 @@ def q_multimodal_binaryfile_census(
     loop is on the correctness path."""
     from parallelutilities_jl_spark.operators.multimodal import (
         decode_assets,
+        media_census,
     )
 
     landing = materialize_media_dir(spark, sf_dir)
-    dec = decode_assets(read_media_dir(spark, landing))
-    return dec.groupBy("modality", "width", "height").agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        F.sum(F.coalesce(F.col("n_frames"), F.lit(0)))
-        .cast("long")
-        .alias("frames_total"),
-    )
+    return media_census(decode_assets(read_media_dir(spark, landing)))

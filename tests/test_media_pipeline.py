@@ -1,6 +1,6 @@
-"""Round-15 pins for the REAL mixed-modality pipeline: every row of
-`synthesize_media_assets` must decode through its modality's REAL
-stdlib codec (never `_decode_stub`), and `extract_features` must return
+"""Round-15 pins for the REAL mixed-modality pipeline: every asset of
+`multimodal_decode` must decode through its modality's REAL stdlib
+codec (never `_decode_stub`), and `multimodal_features` must return
 decoded-content statistics (never the sha256 fallback) for those rows.
 
 The oracle parity suite proves end-to-end value equality; these tests
@@ -16,7 +16,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_media_decode_matches_geometry_specs(spark):
-    rows = mm.decode_assets(mm.synthesize_media_assets(spark, SF)).collect()
+    rows = mm.q_multimodal_decode(spark, SF).collect()
     assert rows, "empty media asset table"
     seen = set()
     for r in rows:
@@ -41,10 +41,8 @@ def test_media_decode_matches_geometry_specs(spark):
 
 def test_media_features_are_decoded_statistics(spark):
     feats = {
-        r.asset_id: r.features
-        for r in mm.extract_features(
-            mm.synthesize_media_assets(spark, SF)
-        ).collect()
+        r.asset_id: [r[f"f{i}"] for i in range(mm.FEATURE_DIM)]
+        for r in mm.q_multimodal_features(spark, SF).collect()
     }
     assert feats
     docs = {

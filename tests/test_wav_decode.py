@@ -7,7 +7,6 @@ import struct
 
 from parallelutilities_jl_spark.operators.multimodal import (
     _decode_wav,
-    synthesize_wav_assets,
     q_multimodal_wav_decode,
 )
 
