@@ -29,7 +29,21 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_returned_items(tune_runtime(spark), "/root/testdata/sf0.001")
 
 
+# Every module that contributes registered heads. An import failure
+# propagates: a broken module must fail `queries()` loudly rather than
+# silently drop its heads from the registry.
+_REGISTRY_MODULES = (
+    "operators.mapreduce", "operators.reductions", "operators.dedup",
+    "operators.similarity", "operators.text", "operators.multimodal",
+    "operators.joins", "operators.pipeline", "operators.clustering",
+    "operators.sketches", "operators.layout", "operators.retrieval",
+    "streaming.windows", "streaming.stateful", "streaming.sinks",
+)
+
+
 def _registries():
+    import importlib
+
     from parallelutilities_jl_spark.plans import queries as plan_q
     from parallelutilities_jl_spark.operators import relational
 
@@ -37,40 +51,9 @@ def _registries():
         (plan_q.QUERIES, plan_q.oracle_queries()),
         (relational.QUERIES, relational.ORACLES),
     ]
-    for name in ("mapreduce", "reductions", "dedup", "similarity", "text",
-                 "multimodal", "joins", "pipeline", "clustering",
-                 "sketches", "layout", "retrieval"):
-        try:
-            import importlib
-
-            m = importlib.import_module(
-                f"parallelutilities_jl_spark.operators.{name}"
-            )
-            mods.append((getattr(m, "QUERIES", {}), getattr(m, "ORACLES", {})))
-        except ImportError:
-            continue
-    try:
-        from parallelutilities_jl_spark.streaming import windows as sw
-
-        mods.append((getattr(sw, "QUERIES", {}), getattr(sw, "ORACLES", {})))
-    except ImportError:
-        pass
-    try:
-        from parallelutilities_jl_spark.streaming import stateful as sst
-
-        mods.append(
-            (getattr(sst, "QUERIES", {}), getattr(sst, "ORACLES", {}))
-        )
-    except ImportError:
-        pass
-    try:
-        from parallelutilities_jl_spark.streaming import sinks as ssk
-
-        mods.append(
-            (getattr(ssk, "QUERIES", {}), getattr(ssk, "ORACLES", {}))
-        )
-    except ImportError:
-        pass
+    for name in _REGISTRY_MODULES:
+        m = importlib.import_module(f"parallelutilities_jl_spark.{name}")
+        mods.append((m.QUERIES, m.ORACLES))
     return mods
 
 
@@ -248,7 +231,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
+    out: dict[str, str | None] = {}
     for _, oracles in _registries():
-        out.update({k: v for k, v in oracles.items() if v is not None})
-    return out
+        for k, v in oracles.items():
+            if k in out:
+                raise ValueError(f"duplicate oracle name {k}")
+            out[k] = v
+    return {k: v for k, v in out.items() if v is not None}

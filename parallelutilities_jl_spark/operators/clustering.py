@@ -362,48 +362,12 @@ def _two_level_pick(
     """(vec_id, cluster): the hierarchical pick against a fitted model —
     nearest super-group, then nearest centroid within it. Shared by
     `kmeans_assign_two_level` and the scaled SemDeDup path."""
-    import math
-
-    if not centroids:  # empty corpus: same contract as _assign
-        return _assign(emb, centroids)
-    if len(centroids) >= TWO_LEVEL_JOIN_MIN_K:
-        # large-model regime: the literal expression is a planning-time
-        # bomb (size ∝ k_eff·dim); the row-identical broadcast-join
-        # path keeps the plan constant-size (see TWO_LEVEL_JOIN_MIN_K)
-        return _two_level_join(emb, centroids, nprobe=1)
-    n_groups = max(1, int(math.isqrt(len(centroids))))
-    groups = _group_centroids(centroids, n_groups)
-    # super-centroid = mean of its member centroids (recomputed exactly
-    # from the final grouping, on the integer grid, so expression and
-    # grouping agree and the oracle replays the identical doubles)
-    supers = _super_centroids(centroids, groups)
-    super_entries = []
-    for g in sorted(groups):
-        sc = supers[g]
-        super_entries.append(
-            F.struct(
-                _sq_dist(sc).alias("d"),
-                F.lit(g).cast("long").alias("cid"),
-            )
-        )
-    picked = F.array_min(F.array(*super_entries)).getField("cid")
-    within = None
-    for g in sorted(groups):
-        entries = [
-            F.struct(
-                _sq_dist(centroids[c]).alias("d"),
-                F.lit(c).cast("long").alias("cid"),
-            )
-            for c in sorted(groups[g])
-        ]
-        best_in_g = F.array_min(F.array(*entries)).getField("cid")
-        within = (
-            F.when(F.col("sg") == g, best_in_g)
-            if within is None
-            else within.when(F.col("sg") == g, best_in_g)
-        )
-    return emb.select("vec_id", "emb", picked.alias("sg")).select(
-        "vec_id", within.alias("cluster")
+    return _two_level(
+        emb,
+        centroids,
+        1,
+        lambda entries: F.array_min(entries).getField("cid"),
+        explode=False,
     )
 
 
@@ -419,25 +383,54 @@ def _two_level_probes(
     still meet in a shared probe cell. Still O(√k) per row — the
     runner-up comes from the already-matched super-group's CASE
     branch, never a flat scan over k."""
+    # array_sort on struct(d, cid) = ascending (d, cid) — the same
+    # (distance, id) tiebreak ROW_NUMBER uses in the SQL replay
+    return _two_level(
+        emb,
+        centroids,
+        nprobe,
+        lambda entries: F.transform(
+            F.slice(F.array_sort(entries), 1, nprobe),
+            lambda s: s.getField("cid"),
+        ),
+        explode=True,
+    )
+
+
+def _two_level(
+    emb: DataFrame,
+    centroids: dict[int, list[float]],
+    nprobe: int,
+    in_group,
+    explode: bool,
+) -> DataFrame:
+    """The two-level builder behind `_two_level_pick` and
+    `_two_level_probes`: group the centroids, pick the nearest
+    super-centroid (`sg`), then apply `in_group` to that group's
+    array of struct(d, cid) entries — a cid, or an array of cids that
+    `explode` turns into one row each."""
     import math
 
     if not centroids:  # empty corpus: same contract as _assign
         return _assign(emb, centroids)
     if len(centroids) >= TWO_LEVEL_JOIN_MIN_K:
-        # large-model regime — see TWO_LEVEL_JOIN_MIN_K / _two_level_join
+        # large-model regime: the literal expression is a planning-time
+        # bomb (size ∝ k_eff·dim); the row-identical broadcast-join
+        # path keeps the plan constant-size (see TWO_LEVEL_JOIN_MIN_K)
         return _two_level_join(emb, centroids, nprobe=nprobe)
     n_groups = max(1, int(math.isqrt(len(centroids))))
     groups = _group_centroids(centroids, n_groups)
+    # super-centroid = mean of its member centroids (recomputed exactly
+    # from the final grouping, on the integer grid, so expression and
+    # grouping agree and the oracle replays the identical doubles)
     supers = _super_centroids(centroids, groups)
-    super_entries = []
-    for g in sorted(groups):
-        sc = supers[g]
-        super_entries.append(
-            F.struct(
-                _sq_dist(sc).alias("d"),
-                F.lit(g).cast("long").alias("cid"),
-            )
+    super_entries = [
+        F.struct(
+            _sq_dist(supers[g]).alias("d"),
+            F.lit(g).cast("long").alias("cid"),
         )
+        for g in sorted(groups)
+    ]
     picked = F.array_min(F.array(*super_entries)).getField("cid")
     within = None
     for g in sorted(groups):
@@ -448,19 +441,15 @@ def _two_level_probes(
             )
             for c in sorted(groups[g])
         ]
-        # array_sort on struct(d, cid) = ascending (d, cid) — the same
-        # (distance, id) tiebreak ROW_NUMBER uses in the SQL replay
-        top_in_g = F.transform(
-            F.slice(F.array_sort(F.array(*entries)), 1, nprobe),
-            lambda s: s.getField("cid"),
-        )
+        best = in_group(F.array(*entries))
         within = (
-            F.when(F.col("sg") == g, top_in_g)
+            F.when(F.col("sg") == g, best)
             if within is None
-            else within.when(F.col("sg") == g, top_in_g)
+            else within.when(F.col("sg") == g, best)
         )
+    cluster = F.explode(within) if explode else within
     return emb.select("vec_id", "emb", picked.alias("sg")).select(
-        "vec_id", F.explode(within).alias("cluster")
+        "vec_id", cluster.alias("cluster")
     )
 
 
@@ -481,14 +470,15 @@ def _two_level_probes(
 TWO_LEVEL_JOIN_MIN_K = 64
 
 
-def _sq_dist_col(cent_col: F.Column) -> F.Column:
-    """`_sq_dist` with the centroid as a COLUMN (join path) instead of
-    a literal array — identical per-term floor-quantized int64 math,
-    so both paths produce the same exact integers."""
+def _sq_dist_col(a: F.Column, b: F.Column) -> F.Column:
+    """`_sq_dist` between two array<double> COLUMNS (join paths, PQ
+    codebook rows, exact re-rank) instead of a column and a literal —
+    identical per-term floor-quantized int64 math, so every path
+    produces the same exact integers."""
     return F.aggregate(
         F.zip_with(
-            F.col("emb"),
-            cent_col,
+            a,
+            b,
             lambda x, c: F.floor(
                 ((x - c) * (x - c)) * F.lit(float(DOT_SCALE))
             ),
@@ -562,7 +552,7 @@ def _assign_join(
         .agg(
             F.min(
                 F.struct(
-                    _sq_dist_col(F.col("cent")).alias("d"),
+                    _sq_dist_col(F.col("emb"), F.col("cent")).alias("d"),
                     F.col("cid").alias("cid"),
                 )
             ).alias("m")
@@ -620,7 +610,7 @@ def _two_level_join(
         .agg(
             F.min(
                 F.struct(
-                    _sq_dist_col(F.col("scent")).alias("d"),
+                    _sq_dist_col(F.col("emb"), F.col("scent")).alias("d"),
                     F.col("sg").alias("g"),
                 )
             ).alias("m")
@@ -631,7 +621,8 @@ def _two_level_join(
         cent_df_b, "sg"
     )
     scored = F.struct(
-        _sq_dist_col(F.col("cent")).alias("d"), F.col("cid").alias("cid")
+        _sq_dist_col(F.col("emb"), F.col("cent")).alias("d"),
+        F.col("cid").alias("cid"),
     )
     if nprobe == 1:
         return (
@@ -1357,24 +1348,6 @@ PQ_TOP_K = 3
 PQ_MEAN_SCALE = int(1e12)
 
 
-def _pq_sq_dist(sub: F.Column, cent: list[float]) -> F.Column:
-    """Quantized squared L2 between a subvector Column and a literal
-    sub-centroid — same exact-int64 fold as `_sq_dist`, over
-    PQ_SUBDIM dims."""
-    lit = F.array(*[F.lit(float(v)) for v in cent])
-    return F.aggregate(
-        F.zip_with(
-            sub,
-            lit,
-            lambda x, c: F.floor(
-                ((x - c) * (x - c)) * F.lit(float(DOT_SCALE))
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_codes_col(cb: dict) -> F.Column:
     """array<long> of PQ_M codes for the row's `sub0..sub{M-1}` slice
     columns: nearest sub-centroid per subspace, ties to the lowest code
@@ -1383,7 +1356,10 @@ def _pq_codes_col(cb: dict) -> F.Column:
     for s in range(PQ_M):
         entries = [
             F.struct(
-                _pq_sq_dist(F.col(f"sub{s}"), cb[(ss, cid)]).alias("d"),
+                _sq_dist_col(
+                    F.col(f"sub{s}"),
+                    F.array(*[F.lit(float(v)) for v in cb[(ss, cid)]]),
+                ).alias("d"),
                 F.lit(cid).cast("long").alias("cid"),
             )
             for (ss, cid) in sorted(cb)
@@ -1397,7 +1373,7 @@ def _pq_cb_df(spark: SparkSession, cb: dict) -> DataFrame:
     """The fitted codebook as DATA — a one-row broadcastable frame
     whose `cbs` column holds every (s, code, sub-centroid) entry,
     sorted by (s, code). Round-16 optimization: embedding the codebook
-    as literal expressions (`_pq_codes_col` / per-entry `_pq_sq_dist`
+    as literal expressions (`_pq_codes_col`'s per-entry literal-array
     folds) made every q_ann_pq_* plan carry thousands of literal
     nodes, and Catalyst re-analyzed them on EVERY query build —
     measured 2.5 s of driver time per bench rep against 0.5 s of
@@ -1412,23 +1388,6 @@ def _pq_cb_df(spark: SparkSession, cb: dict) -> DataFrame:
     return spark.createDataFrame(
         [(entries,)],
         "cbs array<struct<s: long, code: long, cent: array<double>>>",
-    )
-
-
-def _pq_hof_dist(sub: F.Column, cent: F.Column) -> F.Column:
-    """Quantized squared L2 between two array<double> COLUMNS — the
-    column-column twin of `_pq_sq_dist` (identical lambda, identical
-    fold, bit-identical int64)."""
-    return F.aggregate(
-        F.zip_with(
-            sub,
-            cent,
-            lambda x, c: F.floor(
-                ((x - c) * (x - c)) * F.lit(float(DOT_SCALE))
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
 
 
@@ -1495,7 +1454,7 @@ def q_ann_pq_topk(
         F.col("cbs"),
         lambda e: F.struct(
             e.getField("s").alias("s"),
-            _pq_hof_dist(sub_of(e), e.getField("cent")).alias("d"),
+            _sq_dist_col(sub_of(e), e.getField("cent")).alias("d"),
             e.getField("code").alias("code"),
         ),
     )
@@ -1526,7 +1485,7 @@ def q_ann_pq_topk(
                     lambda e: F.struct(
                         e.getField("s").alias("s"),
                         e.getField("code").alias("code"),
-                        _pq_hof_dist(sub_of(e), e.getField("cent")).alias(
+                        _sq_dist_col(sub_of(e), e.getField("cent")).alias(
                             "ld"
                         ),
                     ),
@@ -1650,17 +1609,7 @@ def q_ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_double(spark, sf_dir).select("vec_id", "emb")
     qe = emb.select(F.col("vec_id").alias("qid"), F.col("emb").alias("qe"))
     ce = emb.select(F.col("vec_id").alias("cid"), F.col("emb").alias("ce"))
-    edist = F.aggregate(
-        F.zip_with(
-            F.col("qe"),
-            F.col("ce"),
-            lambda x, y: F.floor(
-                ((x - y) * (x - y)) * F.lit(float(DOT_SCALE))
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    edist = _sq_dist_col(F.col("qe"), F.col("ce"))
     from pyspark.sql.window import Window as W
 
     scored = (

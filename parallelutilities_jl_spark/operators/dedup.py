@@ -67,77 +67,35 @@ MAX_LSH_BUCKET = 2_000  # band-bucket join (candidate_pairs)
 # ---------------------------------------------------------------------------
 
 
-def shingle_docs(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, sh): distinct word k-gram shingles per document."""
-    docs = load_table_parallel(spark, sf_dir, "documents")
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shs): each document's DISTINCT word {SHINGLE_K}-gram
+    shingle set as a per-row array, from any (doc_id, text) frame — the
+    one shingle definition every MinHash/Jaccard frame builds on. A
+    narrow map (distinctness is per-doc, so array_distinct does it
+    map-side; a global .distinct() would shuffle the whole shingle
+    table), hence stream-safe."""
     ws = TH.words(F.col("text"))
-    # dedup within the array before exploding: distinctness is per-doc,
-    # so array_distinct does it map-side — no shuffle at all (a global
-    # .distinct() here would shuffle the whole shingle table)
     return (
         docs.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= k)
+        .filter(F.size("ws") >= SHINGLE_K)
         .select(
             "doc_id",
-            F.explode(F.array_distinct(TH.shingles(F.col("ws"), k))).alias("sh"),
+            F.array_distinct(TH.shingles(F.col("ws"), SHINGLE_K)).alias(
+                "shs"
+            ),
         )
     )
 
 
-def minhash_signatures(sh_df: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
-    """One row per doc with h0..h{n-1} min-hash columns — a single
-    map-side-combinable pass. One md5 per shingle; the i-th 'hash
-    function' is an XOR permutation of its 60-bit prefix (16× less
-    hashing than salted-md5-per-function, and long-MIN beats
-    string-MIN in the agg)."""
-    hashed = sh_df.select("doc_id", TH.md5_int60(F.col("sh")).alias("h"))
-    aggs = [
-        F.min(F.col("h").bitwiseXOR(F.lit(TH.MINHASH_XOR_SALTS[i]))).alias(
-            f"h{i}"
-        )
-        for i in range(n_hashes)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def shingle_arrays(
-    spark: SparkSession, sf_dir: str, k: int = SHINGLE_K
-) -> DataFrame:
-    """(doc_id, shs): each document's DISTINCT shingle set as a per-row
-    array — a narrow map over the corpus scan (the zero-shuffle form of
-    `shingle_docs`; explode it when a shingle-keyed shuffle is actually
-    needed, e.g. document-frequency caps)."""
-    docs = load_table_parallel(spark, sf_dir, "documents")
-    ws = TH.words(F.col("text"))
-    return (
-        docs.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= k)
-        .select(
-            "doc_id",
-            F.array_distinct(TH.shingles(F.col("ws"), k)).alias("shs"),
-        )
-    )
-
-
-def minhash_per_doc(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = SHINGLE_K,
-    n_hashes: int = N_HASHES,
-) -> DataFrame:
-    """(doc_id, shs, n, h0..h{n-1}) — the full per-document dedup state
-    (distinct shingle set, its size, and the min-hash signature) as a
-    ZERO-SHUFFLE narrow map: shingling, hashing, and the per-salt min
-    folds all happen inside the document row with higher-order
-    functions. The explode + groupBy(doc_id) shape this replaces paid a
-    corpus-sized exchange to reassemble state that never had to leave
-    the row (same md5-once/XOR-permutation scheme; bit-identical
-    signatures — the tools/exp_simhash_zeroshuffle.py precedent, last
-    present at commit 3cac22f)."""
-    base = shingle_arrays(spark, sf_dir, k)
-    # bind the hashed array in its own projection so the n_hashes min
+def _with_signature(sets: DataFrame) -> DataFrame:
+    """(doc_id, shs, n, h0..h{N_HASHES-1}): a (doc_id, shs) frame plus
+    the set size and the min-hash signature, computed inside the row —
+    one md5 per shingle, then per-salt XOR + min folds. The one
+    signature expression; callers that need only the signature drop
+    `shs` and `n`, and column pruning removes them from the plan."""
+    # bind the hashed array in its own projection so the N_HASHES min
     # folds read it instead of re-hashing every shingle per salt
-    hdf = base.select(
+    hdf = sets.select(
         "doc_id",
         "shs",
         F.transform(F.col("shs"), lambda sh: TH.md5_int60(sh)).alias("hs"),
@@ -155,8 +113,53 @@ def minhash_per_doc(
         "doc_id",
         "shs",
         F.size("shs").cast("long").alias("n"),
-        *[mh(i) for i in range(n_hashes)],
+        *[mh(i) for i in range(N_HASHES)],
     )
+
+
+def shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shs) over the `documents` fixture — `shingle_sets` on
+    the corpus scan (explode it when a shingle-keyed shuffle is
+    actually needed, e.g. document-frequency caps)."""
+    return shingle_sets(load_table_parallel(spark, sf_dir, "documents"))
+
+
+def minhash_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shs, n, h0..h{N_HASHES-1}) — the full per-document dedup
+    state (distinct shingle set, its size, and the min-hash signature)
+    as a ZERO-SHUFFLE narrow map: shingling, hashing, and the per-salt
+    min folds all happen inside the document row with higher-order
+    functions. The explode + groupBy(doc_id) shape this replaces paid a
+    corpus-sized exchange to reassemble state that never had to leave
+    the row (same md5-once/XOR-permutation scheme; bit-identical
+    signatures — the tools/exp_simhash_zeroshuffle.py precedent, last
+    present at commit 3cac22f)."""
+    return _with_signature(shingle_arrays(spark, sf_dir))
+
+
+def shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh): distinct word shingles per document, one row each."""
+    return shingle_arrays(spark, sf_dir).select(
+        "doc_id", F.explode("shs").alias("sh")
+    )
+
+
+def minhash_signatures(sh_df: DataFrame) -> DataFrame:
+    """One row per doc with h0..h{N_HASHES-1} min-hash columns — the
+    explode + groupBy(doc_id) form of `_with_signature`, kept as the
+    reference the in-row signature is checked against. A single
+    map-side-combinable pass. One md5 per shingle; the i-th 'hash
+    function' is an XOR permutation of its 60-bit prefix (16× less
+    hashing than salted-md5-per-function, and long-MIN beats
+    string-MIN in the agg)."""
+    hashed = sh_df.select("doc_id", TH.md5_int60(F.col("sh")).alias("h"))
+    aggs = [
+        F.min(F.col("h").bitwiseXOR(F.lit(TH.MINHASH_XOR_SALTS[i]))).alias(
+            f"h{i}"
+        )
+        for i in range(N_HASHES)
+    ]
+    return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_bands(
@@ -266,6 +269,149 @@ def candidate_pairs(
     )
 
 
+def _minhash_candidates(spark: SparkSession, sf_dir: str):
+    """The MinHash candidate-verify frame shared by `minhash_near_dup`,
+    `containment_dups` and `dedup_eval_confusion`: LSH candidate pairs
+    (doc_a < doc_b) with each side's shingle set and size (`shs_a`,
+    `na`, `shs_b`, `nb`) and signature (`ah0..`, `bh0..`; column
+    pruning drops them where unread). Returns (frame, ni) where `ni` is
+    the exact intersection size |A∩B| as a column expression, not a
+    frame column, so a caller that reads it twice in one projection
+    keeps it inline like any other expression.
+
+    `minhash_per_doc` is a zero-shuffle narrow map, so the only
+    exchanges are the LSH bucket join and the candidate verify join.
+    The per-doc frame is checkpointed once (eagerly) and reused by
+    banding, both sides of the candidate join and the verify; at
+    cluster scale the same role is played by checkpointing it to
+    parquet.
+
+    Verify shape: the full shingle arrays ride the candidate join and
+    the intersection is a per-pair array_intersect, not the
+    count-based intersection of `ngram_jaccard_pairs`: measured duel
+    (tools/exp_confusion_verify.py at commit 3cac22f), arrays 4.5 s vs
+    counts 9.0 s at
+    the 10× tier (2.1 vs 2.0 at sf0.1). The difference from the
+    jaccard case: there the candidates COME FROM the shingle
+    self-join, so the group count is free; here the LSH candidate set
+    is independent of the shingle stream, so the count costs two extra
+    candidate×shingle joins that scale with Σ_cand |shingles| —
+    strictly more exchanged bytes than one array column over the
+    (bucket-capped) candidate rows."""
+    per_doc = minhash_per_doc(spark, sf_dir).localCheckpoint()
+    cands = candidate_pairs(lsh_bands(per_doc))
+
+    def side(s: str) -> DataFrame:
+        return per_doc.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("shs").alias(f"shs_{s}"),
+            F.col("n").alias(f"n{s}"),
+            *[F.col(f"h{i}").alias(f"{s}h{i}") for i in range(N_HASHES)],
+        )
+
+    ni = F.size(F.array_intersect("shs_a", "shs_b")).cast("long")
+    return cands.join(side("a"), "doc_a").join(side("b"), "doc_b"), ni
+
+
+def _exact_jaccard_pairs(
+    spark: SparkSession, sf_dir: str, num: int, den: int
+) -> DataFrame:
+    """(doc_a, doc_b, na, nb, ni): every pair sharing a cold shingle
+    (document frequency ≤ NGRAM_MAX_DF, read when this runs) with both
+    set sizes and the EXACT full-set intersection size, already cut by
+    the τ-pushdown bound for Jaccard ≥ τ = num/den. The exact-Jaccard
+    generator shared by `ngram_jaccard_pairs` (τ = 3/10) and
+    `dedup_threshold_sensitivity` (τ = 1/10); each keeps only its own
+    exact predicate and projection.
+
+    Candidate generation drops shingles with df > NGRAM_MAX_DF before
+    the self-join (a hot shingle is a quadratic bucket; fixture max df
+    is 7, so nothing is dropped at test scale). Because each
+    document's shingle set is distinct, the candidate self-join's group
+    count per (doc_a, doc_b) IS |A∩B| over cold shingles — no per-pair
+    array shuffle. The hot remainder |A∩B over hot shingles| rides as
+    an array_intersect of the per-doc HOT-ONLY arrays (bounded: only
+    shingles with df > NGRAM_MAX_DF exist in them, and such
+    stopword-like shingles are few by construction). This replaced a
+    verify stage that equi-joined the FULL shingle arrays onto every
+    candidate pair: at the 10× stress tier (~1000× qualifying pairs)
+    the array-carrying joins dominated wall
+    (tools/stress_fingerprints.py; identical output asserted)."""
+    per = shingle_arrays(spark, sf_dir).select(
+        "doc_id", "shs", F.size("shs").cast("long").alias("n")
+    ).localCheckpoint()  # one narrow pass feeds dfreq, candidates, hot sets
+    sh = per.select("doc_id", F.explode("shs").alias("sh"))
+    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
+    cold_keys = dfreq.filter(F.col("df") <= NGRAM_MAX_DF).select("sh")
+    hot_keys = dfreq.filter(F.col("df") > NGRAM_MAX_DF).select("sh")
+    sh_cold = sh.join(cold_keys, "sh", "left_semi")
+    # per-doc hot-only shingle arrays (empty for docs with none) — the
+    # only arrays any pair ever carries, bounded by the hot-key count
+    hot_per_doc = (
+        sh.join(F.broadcast(hot_keys), "sh", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_list("sh").alias("hot_shs"))
+    )
+    sa = sh_cold.alias("sa")
+    sb = sh_cold.alias("sb")
+    pairs = (
+        sa.join(
+            sb,
+            (F.col("sa.sh") == F.col("sb.sh"))
+            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
+        )
+        .select(
+            F.col("sa.doc_id").alias("doc_a"),
+            F.col("sb.doc_id").alias("doc_b"),
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("ni_cold"))  # == |A∩B|_cold exactly
+    )
+    scal = per.select("doc_id", "n")
+    ha = hot_per_doc.select(
+        F.col("doc_id").alias("doc_a"), F.col("hot_shs").alias("hot_a")
+    )
+    hb = hot_per_doc.select(
+        F.col("doc_id").alias("doc_b"), F.col("hot_shs").alias("hot_b")
+    )
+    empty = F.array().cast("array<string>")
+    ni = F.col("ni_cold") + F.size(
+        F.array_intersect(
+            F.coalesce(F.col("hot_a"), empty),
+            F.coalesce(F.col("hot_b"), empty),
+        )
+    ).cast("long")
+    # τ-PUSHDOWN below the scoring joins (round-12): j ≥ τ needs
+    # |A∩B| ≥ τ/(1+τ)·(|A|+|B|), and |A∩B| can never exceed
+    # ni_ub = min(ni_cold + #hot_keys, na, nb) (every non-cold
+    # intersection member is a hot shingle, globally few by
+    # construction). Pairs failing the bound are dropped HERE, on
+    # scalar columns only, so the hot-array joins and the caller's
+    # exact score run over SURVIVORS rather than the full candidate
+    # set — at production scale wall tracks the output, not the
+    # candidate fan-out. The comparison is the exact integer
+    # cross-multiply, so the bound can never round a true survivor
+    # away; the caller's exact predicate decides, and the output is
+    # identical (pinned by the DuckDB oracles, whose SQL has no
+    # pushdown).
+    hcnt = hot_keys.agg(F.count(F.lit(1)).alias("hot_total"))
+    ni_ub = F.least(
+        F.col("ni_cold") + F.col("hot_total"), F.col("na"), F.col("nb")
+    )
+    return (
+        pairs.join(scal.select(F.col("doc_id").alias("doc_a"),
+                               F.col("n").alias("na")), "doc_a")
+        .join(scal.select(F.col("doc_id").alias("doc_b"),
+                          F.col("n").alias("nb")), "doc_b")
+        .crossJoin(F.broadcast(hcnt))  # one global scalar
+        .filter((den + num) * ni_ub >= num * (F.col("na") + F.col("nb")))
+        .join(ha, "doc_a", "left")
+        .join(hb, "doc_b", "left")
+        .withColumn("ni", ni)
+        .drop("ni_cold", "hot_total", "hot_a", "hot_b")
+    )
+
+
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -348,33 +494,12 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs, exact-Jaccard verified at ≥ 0.3.
-
-    The signature mins AND the verify-stage shingle arrays/sizes come
-    out of `minhash_per_doc` — a zero-shuffle narrow map, so the only
-    exchanges left in the whole pipeline are the LSH bucket join and
-    the candidate verify join. The per-doc table is checkpointed and
-    reused by banding, both sides of the candidate join, and the
-    verify; at cluster scale the same role is played by checkpointing
-    it to parquet."""
-    per_doc = minhash_per_doc(spark, sf_dir).localCheckpoint()
-    cands = candidate_pairs(lsh_bands(per_doc))
-    aa = per_doc.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("n").alias("na"),
-    )
-    bb = per_doc.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("n").alias("nb"),
-    )
-    ni = F.size(F.array_intersect("shs_a", "shs_b")).cast("long")
+    """MinHash-LSH near-dup pairs, exact-Jaccard verified at ≥ 0.3 on
+    the `_minhash_candidates` frame (which holds the scale shape)."""
+    cands, ni = _minhash_candidates(spark, sf_dir)
     jac = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
     return (
-        cands.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .withColumn("ni", ni)
+        cands.withColumn("ni", ni)
         .filter(jac >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -400,50 +525,16 @@ def q_dedup_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     is WITHIN-candidate recall (pairs LSH never surfaces are unseen by
     construction — that generator-recall tradeoff is the banding
     parameter, measured separately by `ngram_jaccard_pairs`)."""
-    per_doc = minhash_per_doc(spark, sf_dir).localCheckpoint(eager=False)
-    cands = candidate_pairs(lsh_bands(per_doc))
-    # Verify shape: the full shingle arrays ride the candidate join and
-    # the intersection is a per-pair array_intersect. The round-7 judge
-    # proposed the count-based intersection that rewrote
-    # `ngram_jaccard_pairs`; measured duel (tools/exp_confusion_verify.py
-    # at commit 3cac22f) says NO here: arrays 4.5 s vs counts 9.0 s at the 10× tier (2.1 vs
-    # 2.0 at sf0.1). The difference from the jaccard case: there the
-    # candidates COME FROM the shingle self-join, so the group count is
-    # free; here the LSH candidate set is independent of the shingle
-    # stream, so the count costs two extra candidate×shingle joins that
-    # scale with Σ_cand |shingles| — strictly more exchanged bytes than
-    # one array column over the (bucket-capped) candidate rows.
-    aa = per_doc.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("n").alias("na"),
-        *[F.col(f"h{i}").alias(f"ah{i}") for i in range(N_HASHES)],
-    )
-    bb = per_doc.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("n").alias("nb"),
-        *[F.col(f"h{i}").alias(f"bh{i}") for i in range(N_HASHES)],
-    )
     matches = sum(
         (F.col(f"ah{i}") == F.col(f"bh{i}")).cast("long")
         for i in range(N_HASHES)
     )
-    ni = F.size(F.array_intersect("shs_a", "shs_b")).cast("long")
-    j = (
-        cands.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .select(
-            matches.alias("m"),
-            ni.alias("ni"),
-            (F.col("na") + F.col("nb") - ni).alias("un"),
-        )
-        .select(
-            (F.col("m") * _EVAL_DEN >= _EVAL_NUM * N_HASHES).alias("pred"),
-            (F.col("ni") * _EVAL_DEN >= _EVAL_NUM * F.col("un")).alias(
-                "truth"
-            ),
-        )
+    cands, ni = _minhash_candidates(spark, sf_dir)
+    j = cands.select(
+        (matches * _EVAL_DEN >= _EVAL_NUM * N_HASHES).alias("pred"),
+        (ni * _EVAL_DEN >= _EVAL_NUM * (F.col("na") + F.col("nb") - ni)).alias(
+            "truth"
+        ),
     )
 
     def cnt(p: bool, t: bool) -> F.Column:
@@ -533,33 +624,17 @@ def q_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment 1.0); excising such subset-duplication is a standard
     LLM-corpus step alongside Jaccard dedup.
 
-    Same scale shape as `minhash_near_dup`: one zero-shuffle
-    `minhash_per_doc` map feeding signatures, banding, and verify;
-    banded bucket self-join for candidates; exact set math on
-    candidates only.
+    Same `_minhash_candidates` frame as `minhash_near_dup` (scale
+    shape there): exact set math on LSH candidates only.
     (LSH banding recalls high-Jaccard pairs best, so low-Jaccard/
     high-containment pairs with very lopsided sizes may be missed by
     the bands — the standard mitigation at scale is re-banding on the
     smaller doc's signature prefix; the fixture's near-dup pairs are
     size-balanced enough that banding recalls them.)"""
-    per_doc = minhash_per_doc(spark, sf_dir).localCheckpoint()
-    cands = candidate_pairs(lsh_bands(per_doc))
-    aa = per_doc.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("n").alias("na"),
-    )
-    bb = per_doc.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("n").alias("nb"),
-    )
-    ni = F.size(F.array_intersect("shs_a", "shs_b")).cast("long")
+    cands, ni = _minhash_candidates(spark, sf_dir)
     cont = F.col("ni").cast("double") / F.least("na", "nb")
     return (
-        cands.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .withColumn("ni", ni)
+        cands.withColumn("ni", ni)
         .filter(cont >= CONTAINMENT_THRESHOLD)
         .select(
             "doc_a",
@@ -578,100 +653,16 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard for every pair sharing a (non-hot) shingle —
-    the ground-truth tier LSH approximates; j ≥ 0.3.
-
-    Candidate generation drops shingles with document frequency above
-    NGRAM_MAX_DF before the self-join (a hot shingle is a quadratic
-    bucket; fixture max df is 7, so nothing is dropped at test scale).
-    The Jaccard is EXACT: because each document's shingle set is
-    distinct, the candidate self-join's group count per (doc_a, doc_b)
-    IS |A∩B| over cold shingles — no per-pair array shuffle. The hot
-    remainder |A∩B over hot shingles| rides as an array_intersect of
-    the per-doc HOT-ONLY arrays (bounded: only shingles with
-    df > {NGRAM_MAX_DF} exist in them, and such stopword-like shingles
-    are few by construction), and |A∪B| = na + nb − |A∩B| from scalar
-    set sizes. This replaced a verify stage that equi-joined the FULL
-    shingle arrays onto every candidate pair: at the 10× stress tier
-    (~1000× qualifying pairs) the array-carrying joins dominated wall
-    (tools/stress_fingerprints.py; identical output asserted)."""
-    per = shingle_arrays(spark, sf_dir).select(
-        "doc_id", "shs", F.size("shs").cast("long").alias("n")
-    ).localCheckpoint()  # one narrow pass feeds dfreq, candidates, hot sets
-    sh = per.select("doc_id", F.explode("shs").alias("sh"))
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    cold_keys = dfreq.filter(F.col("df") <= NGRAM_MAX_DF).select("sh")
-    hot_keys = dfreq.filter(F.col("df") > NGRAM_MAX_DF).select("sh")
-    sh_cold = sh.join(cold_keys, "sh", "left_semi")
-    # per-doc hot-only shingle arrays (empty for docs with none) — the
-    # only arrays any pair ever carries, bounded by the hot-key count
-    hot_per_doc = (
-        sh.join(F.broadcast(hot_keys), "sh", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("sh").alias("hot_shs"))
-    )
-    sa = sh_cold.alias("sa")
-    sb = sh_cold.alias("sb")
-    pairs = (
-        sa.join(
-            sb,
-            (F.col("sa.sh") == F.col("sb.sh"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        )
-        .select(
-            F.col("sa.doc_id").alias("doc_a"),
-            F.col("sb.doc_id").alias("doc_b"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("ni_cold"))  # == |A∩B|_cold exactly
-    )
-    scal = per.select("doc_id", "n")
-    ha = hot_per_doc.select(
-        F.col("doc_id").alias("doc_a"), F.col("hot_shs").alias("hot_a")
-    )
-    hb = hot_per_doc.select(
-        F.col("doc_id").alias("doc_b"), F.col("hot_shs").alias("hot_b")
-    )
-    empty = F.array().cast("array<string>")
-    ni = F.col("ni_cold") + F.size(
-        F.array_intersect(
-            F.coalesce(F.col("hot_a"), empty),
-            F.coalesce(F.col("hot_b"), empty),
-        )
-    ).cast("long")
+    """Exact n-gram Jaccard for every pair sharing a cold shingle — the
+    ground-truth tier LSH approximates; j ≥ 0.3. The pairs and their
+    exact |A∩B| come from `_exact_jaccard_pairs` (df cap, hot-shingle
+    remainder and τ-pushdown are documented there); |A∪B| =
+    na + nb − |A∩B| from scalar set sizes."""
     jac = F.col("ni").cast("double") / (
         F.col("na") + F.col("nb") - F.col("ni")
     )
-    # τ-PUSHDOWN below the scoring joins (round-12): j ≥ τ needs
-    # |A∩B| ≥ τ/(1+τ)·(|A|+|B|), and |A∩B| can never exceed
-    # ni_ub = min(ni_cold + #hot_keys, na, nb) (every non-cold
-    # intersection member is a hot shingle, globally few by
-    # construction). Pairs failing the bound are dropped HERE, on
-    # scalar columns only, so the hot-array joins and the exact score
-    # run over SURVIVORS rather than the full candidate set — at
-    # production scale wall tracks the output, not the candidate
-    # fan-out. The comparison is the exact integer cross-multiply
-    # (τ = _EVAL_NUM/_EVAL_DEN), so the bound can never round a true
-    # survivor away; the exact jac ≥ τ filter below is unchanged and
-    # the output is identical (pinned by the DuckDB oracle, whose SQL
-    # has no pushdown).
-    hcnt = hot_keys.agg(F.count(F.lit(1)).alias("hot_total"))
-    ni_ub = F.least(
-        F.col("ni_cold") + F.col("hot_total"), F.col("na"), F.col("nb")
-    )
     return (
-        pairs.join(scal.select(F.col("doc_id").alias("doc_a"),
-                               F.col("n").alias("na")), "doc_a")
-        .join(scal.select(F.col("doc_id").alias("doc_b"),
-                          F.col("n").alias("nb")), "doc_b")
-        .crossJoin(F.broadcast(hcnt))  # one global scalar
-        .filter(
-            (_EVAL_DEN + _EVAL_NUM) * ni_ub
-            >= _EVAL_NUM * (F.col("na") + F.col("nb"))
-        )
-        .join(ha, "doc_a", "left")
-        .join(hb, "doc_b", "left")
-        .withColumn("ni", ni)
+        _exact_jaccard_pairs(spark, sf_dir, _EVAL_NUM, _EVAL_DEN)
         .filter(jac >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
@@ -856,81 +847,23 @@ def q_dedup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame
     `ngram_jaccard_pairs` would emit at that τ, pre-computed in one
     pass instead of nine).
 
-    Same exact-count machinery as `ngram_jaccard_pairs` (cold-shingle
-    group counts + hot-array remainder, τ-pushdown on scalar columns),
-    with the pushdown at the LOWEST studied decile (1/10) — the census
-    is inherently output-bound at τ=0.1, the honest cost of asking
-    about τ=0.1. Each pair's decile is the exact integer
+    Same exact-count generator as `ngram_jaccard_pairs`
+    (`_exact_jaccard_pairs`: cold-shingle group counts + hot-array
+    remainder, τ-pushdown on scalar columns), with the pushdown at the
+    LOWEST studied decile (1/10) — the census is inherently
+    output-bound at τ=0.1, the honest cost of asking about τ=0.1.
+    Each pair's decile is the exact integer
     least(9, 10·|A∩B| div |A∪B|) — no float compare at any bucket
     boundary — and the per-decile totals are cumulative counts over
     the ≤9-row decile histogram, emitted for all nine τ values via a
     generator over one aggregated row (no spine join).
 
-    Scale shape: identical to `ngram_jaccard_pairs` until the scored
-    frame; everything after is a ≤9-column aggregate. The doc census
-    explodes each surviving pair to its two endpoints (2× survivors)
-    into a doc-keyed max — bounded by the survivor count."""
-    per = shingle_arrays(spark, sf_dir).select(
-        "doc_id", "shs", F.size("shs").cast("long").alias("n")
-    ).localCheckpoint()
-    sh = per.select("doc_id", F.explode("shs").alias("sh"))
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    cold_keys = dfreq.filter(F.col("df") <= NGRAM_MAX_DF).select("sh")
-    hot_keys = dfreq.filter(F.col("df") > NGRAM_MAX_DF).select("sh")
-    sh_cold = sh.join(cold_keys, "sh", "left_semi")
-    hot_per_doc = (
-        sh.join(F.broadcast(hot_keys), "sh", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("sh").alias("hot_shs"))
-    )
-    sa = sh_cold.alias("sa")
-    sb = sh_cold.alias("sb")
-    pairs = (
-        sa.join(
-            sb,
-            (F.col("sa.sh") == F.col("sb.sh"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        )
-        .select(
-            F.col("sa.doc_id").alias("doc_a"),
-            F.col("sb.doc_id").alias("doc_b"),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("ni_cold"))
-    )
-    scal = per.select("doc_id", "n")
-    ha = hot_per_doc.select(
-        F.col("doc_id").alias("doc_a"), F.col("hot_shs").alias("hot_a")
-    )
-    hb = hot_per_doc.select(
-        F.col("doc_id").alias("doc_b"), F.col("hot_shs").alias("hot_b")
-    )
-    empty = F.array().cast("array<string>")
-    ni = F.col("ni_cold") + F.size(
-        F.array_intersect(
-            F.coalesce(F.col("hot_a"), empty),
-            F.coalesce(F.col("hot_b"), empty),
-        )
-    ).cast("long")
-    hcnt = hot_keys.agg(F.count(F.lit(1)).alias("hot_total"))
-    ni_ub = F.least(
-        F.col("ni_cold") + F.col("hot_total"), F.col("na"), F.col("nb")
-    )
+    Scale shape: the shared generator, then a ≤9-column aggregate.
+    The doc census explodes each surviving pair to its two endpoints
+    (2× survivors) into a doc-keyed max — bounded by the survivor
+    count."""
     scored = (
-        pairs.join(
-            scal.select(F.col("doc_id").alias("doc_a"),
-                        F.col("n").alias("na")), "doc_a")
-        .join(
-            scal.select(F.col("doc_id").alias("doc_b"),
-                        F.col("n").alias("nb")), "doc_b")
-        .crossJoin(F.broadcast(hcnt))
-        .filter(
-            (_SENS_DEN + _SENS_NUM) * ni_ub
-            >= _SENS_NUM * (F.col("na") + F.col("nb"))
-        )
-        .join(ha, "doc_a", "left")
-        .join(hb, "doc_b", "left")
-        .withColumn("ni", ni)
+        _exact_jaccard_pairs(spark, sf_dir, _SENS_NUM, _SENS_DEN)
         .withColumn("un", F.col("na") + F.col("nb") - F.col("ni"))
         .filter(F.col("ni") * _SENS_DEN >= F.col("un") * _SENS_NUM)
         .select(
@@ -1694,7 +1627,7 @@ def connected_components(
     )
 
 
-def _cc_loop(spark, und, labels, max_iters, spill, jumps: int = 1):
+def _cc_loop(spark, und, labels, max_iters, spill):
     """The propagation rounds of `connected_components` (split out so
     the caller can own spill-dir lifecycle in one try/finally). Returns
     (labels frame, converged flag)."""
@@ -1705,19 +1638,18 @@ def _cc_loop(spark, und, labels, max_iters, spill, jumps: int = 1):
             .groupBy("u")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        # one-hop neighbor min, then POINTER JUMPS: compose with the
-        # round-start label map `jumps` times (lbl ← labels[lbl].lbl,
-        # iterated). A label is always the id of a node in the same
-        # component (init = own id; min/composition preserve it), so
-        # every jump stays in-component and is non-increasing — the
-        # fixpoint argument is unchanged. jumps=1 reproduces the
-        # original hop+jump round (measured 15 → 13 rounds on the
-        # sf0.1 mutual-kNN graph, diameter ~14). MORE jumps were tried
-        # and REJECTED (round-16 optimization measurement): each extra
-        # jump join adds two exchanges of sequential stage latency per
-        # round, and composing with the round-START map has fast-
-        # diminishing shortcut value — jumps=3 measured the sf0.1
-        # mutual-kNN loop at 3.8 s vs 2.8 s for jumps=1.
+        # one-hop neighbor min, then ONE POINTER JUMP: compose with the
+        # round-start label map (lbl ← labels[lbl].lbl). A label is
+        # always the id of a node in the same component (init = own id;
+        # min/composition preserve it), so the jump stays in-component
+        # and is non-increasing — the fixpoint argument is unchanged.
+        # Measured 15 → 13 rounds on the sf0.1 mutual-kNN graph
+        # (diameter ~14). MORE jumps were tried and REJECTED (round-16
+        # optimization measurement): each extra jump join adds two
+        # exchanges of sequential stage latency per round, and
+        # composing with the round-START map has fast-diminishing
+        # shortcut value — 3 jumps measured the sf0.1 mutual-kNN loop
+        # at 3.8 s vs 2.8 s for one.
         cur = labels.join(nbr, labels.n == nbr.u, "left").select(
             "n",
             F.col("lbl").alias("prev"),
@@ -1725,17 +1657,14 @@ def _cc_loop(spark, und, labels, max_iters, spill, jumps: int = 1):
                 "h"
             ),
         )
-        for j in range(jumps):
-            m = labels.select(
-                F.col("n").alias(f"m{j}"), F.col("lbl").alias(f"ml{j}")
-            )
-            cur = cur.join(m, cur.h == F.col(f"m{j}"), "left").select(
-                "n",
-                "prev",
-                F.least(
-                    F.col("h"), F.coalesce(F.col(f"ml{j}"), F.col("h"))
-                ).alias("h"),
-            )
+        m = labels.select(F.col("n").alias("m"), F.col("lbl").alias("ml"))
+        cur = cur.join(m, cur.h == F.col("m"), "left").select(
+            "n",
+            "prev",
+            F.least(F.col("h"), F.coalesce(F.col("ml"), F.col("h"))).alias(
+                "h"
+            ),
+        )
         # the did-it-change flag rides INSIDE the frame the round
         # checkpoints anyway, so convergence detection is a predicate
         # count over checkpointed blocks — not the extra shuffle join
@@ -2314,31 +2243,7 @@ def sig_frame(docs: DataFrame) -> DataFrame:
     `minhash_per_doc` scheme without its shingle-set columns) — narrow
     ops only, so it is STREAM-SAFE: the streaming ingest-dedup operator
     applies it to a readStream of documents unchanged."""
-    ws = TH.words(F.col("text"))
-    base = (
-        docs.select("doc_id", ws.alias("ws"))
-        .filter(F.size("ws") >= SHINGLE_K)
-        .select(
-            "doc_id",
-            F.array_distinct(TH.shingles(F.col("ws"), SHINGLE_K)).alias(
-                "shs"
-            ),
-        )
-    )
-    hdf = base.select(
-        "doc_id",
-        F.transform(F.col("shs"), lambda sh: TH.md5_int60(sh)).alias("hs"),
-    )
-
-    def mh(i: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: h.bitwiseXOR(F.lit(TH.MINHASH_XOR_SALTS[i])),
-            )
-        ).alias(f"h{i}")
-
-    return hdf.select("doc_id", *[mh(i) for i in range(N_HASHES)])
+    return _with_signature(shingle_sets(docs)).drop("shs", "n")
 
 
 def q_stream_sig_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

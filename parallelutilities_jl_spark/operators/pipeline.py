@@ -1155,16 +1155,21 @@ def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     card is the showcase that the per-source statistics compose
     WITHOUT a new corpus pass.
 
-    Concurrency (round-16 optimization): `dedup_rate_by_source` runs
-    its connected-components propagation EAGERLY at build time (a
-    sequence of small bounded shuffles that underfills the cluster),
-    while the other four components are lazy until the caller's one
-    action. Serially that is dead time; instead the four lazy
-    components materialize (localCheckpoint, S rows each) on a second
-    job-submitting thread WHILE the CC loop runs — Spark schedules
-    jobs from both threads onto the same executor pool, so the
-    tokenize/quality scans soak the cores the propagation rounds
-    leave idle. The final action then only joins five S-row frames.
+    Concurrency (round-16 optimization): `dedup_rate_by_source` builds
+    its dup components EAGERLY at build time — the MinHash candidate
+    and verify jobs, then `connected_components` — while the other
+    four components are lazy until the caller's one action. On the
+    fixtures the dup graph is tiny (sf0.1: 256 pairs, 512 directed
+    edge rows, below `_CC_TINY_MAX_ROWS` = 4096), so the components
+    come from ONE single-task union-find and no propagation round
+    runs; only past that gate does CC become a sequence of small
+    bounded shuffles that underfills the cluster. Either way the
+    build-time jobs leave cores idle, so the four lazy components
+    materialize (localCheckpoint, S rows each) on a second
+    job-submitting thread WHILE they run — Spark schedules jobs from
+    both threads onto the same executor pool. Whether the overlap
+    still pays on the tiny-graph path is unmeasured. The final action
+    then only joins five S-row frames.
     Results are unchanged (same component frames, same join), and the
     four-way lazy subtree still shares its tokenize exchange via AQE
     stage reuse because it stays ONE plan."""

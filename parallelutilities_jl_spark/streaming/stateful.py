@@ -412,16 +412,16 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sig_dedup_stream(grouped_stream, n_hashes: int | None = None):
+def sig_dedup_stream(grouped_stream):
     """Streaming ingest near-dup screen: the stateful half of
     `dedup.q_stream_sig_dedup` (which is its registered, oracle-checked
     batch parity — see its docstring for the semantics).
 
-    Input: a stream of (band, key, doc_id, h0..h{n-1}) band rows
+    Input: a stream of (band, key, doc_id, h0..h{N_HASHES-1}) band rows
     (build with `dedup.sig_frame` + `dedup.lsh_bands`, both narrow /
     stream-safe), grouped by (band, key). State per bucket is the
     first STREAM_STATE_CAP arrivals' signatures — two flat arrays,
-    O(cap·n_hashes) longs FOREVER, the property that makes this safe
+    O(cap·N_HASHES) longs FOREVER, the property that makes this safe
     on an unbounded ingest stream. Each arriving doc (processed in
     doc_id order within the trigger, so batch-boundary placement never
     changes results) is compared against the stored earlier docs;
@@ -437,7 +437,7 @@ def sig_dedup_stream(grouped_stream, n_hashes: int | None = None):
         STREAM_STATE_CAP,
     )
 
-    n = n_hashes or N_HASHES
+    n = N_HASHES
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state):
         if state.exists:

@@ -74,3 +74,22 @@ def test_hot_shingle_correction_is_exact(spark, tiny_docs, monkeypatch):
         for r in D.q_ngram_jaccard_pairs(spark, tiny_docs).collect()
     }
     assert got == want and got
+
+
+def test_threshold_census_hot_path_matches_pairs(
+    spark, tiny_docs, monkeypatch
+):
+    """`dedup_threshold_sensitivity` shares the exact-Jaccard generator
+    with `ngram_jaccard_pairs`; on the same lowered-cap corpus its
+    τ = 0.3 row must count exactly the pairs the pair query emits, so
+    the census's hot-shingle remainder is exercised too."""
+    from parallelutilities_jl_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "NGRAM_MAX_DF", 3)
+    n_pairs = D.q_ngram_jaccard_pairs(spark, tiny_docs).count()
+    census = {
+        r["tau_e1"]: r["n_pairs"]
+        for r in D.q_dedup_threshold_sensitivity(spark, tiny_docs).collect()
+    }
+    assert n_pairs > 0
+    assert census[3] == n_pairs
