@@ -276,8 +276,8 @@ def _minhash_candidates(spark: SparkSession, sf_dir: str):
     `na`, `shs_b`, `nb`) and signature (`ah0..`, `bh0..`; column
     pruning drops them where unread). Returns (frame, ni) where `ni` is
     the exact intersection size |A∩B| as a column expression, not a
-    frame column, so a caller that reads it twice in one projection
-    keeps it inline like any other expression.
+    frame column; a caller that reads it more than once binds it in its
+    own projection (`dedup_eval_confusion`), so it is computed once.
 
     `minhash_per_doc` is a zero-shuffle narrow map, so the only
     exchanges are the LSH bucket join and the candidate verify join.
@@ -530,11 +530,17 @@ def q_dedup_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(N_HASHES)
     )
     cands, ni = _minhash_candidates(spark, sf_dir)
+    # `truth` reads ni twice: bound in its own projection, the
+    # array_intersect runs once per candidate pair, not twice
     j = cands.select(
         (matches * _EVAL_DEN >= _EVAL_NUM * N_HASHES).alias("pred"),
-        (ni * _EVAL_DEN >= _EVAL_NUM * (F.col("na") + F.col("nb") - ni)).alias(
-            "truth"
-        ),
+        "na", "nb", ni.alias("ni"),
+    ).select(
+        "pred",
+        (
+            F.col("ni") * _EVAL_DEN
+            >= _EVAL_NUM * (F.col("na") + F.col("nb") - F.col("ni"))
+        ).alias("truth"),
     )
 
     def cnt(p: bool, t: bool) -> F.Column:

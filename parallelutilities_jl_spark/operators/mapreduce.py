@@ -435,8 +435,12 @@ def pmapreduce_dense_elsum(
         sum(p.size for _, p in pieces),
         np.result_type(*{p.dtype for _, p in pieces}),
     )
-    for start, p in pieces:
+    # drop each collected piece once it is copied: the driver holds the
+    # output plus the pieces not yet copied, not two whole arrays
+    while pieces:
+        start, p = pieces.pop()
         out[start : start + p.size] = p
+        del p
     return out.reshape(shape.value)
 
 

@@ -1172,8 +1172,12 @@ def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     then only joins five S-row frames.
     Results are unchanged (same component frames, same join), and the
     four-way lazy subtree still shares its tokenize exchange via AQE
-    stage reuse because it stays ONE plan."""
-    import threading
+    stage reuse because it stays ONE plan. The side thread is an
+    `InheritableThread`, so its checkpoint job carries the caller's
+    local properties (job group, description, scheduler pool), like
+    the main-thread jobs."""
+    from pyspark import InheritableThread
+
     from parallelutilities_jl_spark.operators.dedup import (
         q_dedup_rate_by_source,
     )
@@ -1206,7 +1210,7 @@ def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         except BaseException as e:  # propagate to the caller thread
             box["err"] = e
 
-    t = threading.Thread(
+    t = InheritableThread(
         target=_materialize_rest, name="card_lazy_components"
     )
     t.start()

@@ -9,6 +9,9 @@ Local-mode defaults mirror what we would set on a real cluster:
 * Arrow enabled for every Pandas-UDF exchange.
 * Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle.
+* One Python worker pool per session: RDD functions carry the same
+  executor environment as the SQL/Arrow runners (`_WORKER_ENV`), so
+  both run on one pyspark daemon and its reused workers.
 
 Importing this module inside a PySpark task on CPython < 3.12 also
 installs a stat-checked `zipimporter.invalidate_caches` in that worker
@@ -26,6 +29,17 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The environment every Python task of the session runs under. PySpark
+# keys its worker daemon on (python exec, modules, task environment).
+# The SQL/Arrow runners (`mapInPandas`, `applyInPandas`, ...) add
+# SPARK_SIMPLIFIED_TRACEBACK=1 to the function's environment when
+# `spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled` is on
+# (the default); the RDD runner adds nothing. Without this entry an RDD
+# job (the dense-elsum twins, the cluster probe, `createDataFrame` over
+# an RDD) forks a second daemon with its own set of reused workers
+# beside the Arrow one: two pools, each up to one worker per core.
+_WORKER_ENV = {"SPARK_SIMPLIFIED_TRACEBACK": "1"}
 
 
 def get_spark(
@@ -55,6 +69,8 @@ def get_spark(
         # sizes explicit so partition counts are predictable at any SF.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
+    for k, v in _WORKER_ENV.items():
+        builder = builder.config(f"spark.executorEnv.{k}", v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
@@ -107,6 +123,8 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # the SQL runners' half of `_WORKER_ENV`
+    "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled": "true",
 }
 
 
@@ -117,9 +135,13 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     default-config session it turns on AQE partition coalescing and
     rights-sizes `shuffle.partitions` to the session's core count — at
     small scale factors Spark's 200-partition default makes every
-    exchange latency-bound (200 near-empty tasks per shuffle)."""
+    exchange latency-bound (200 near-empty tasks per shuffle). It also
+    puts `_WORKER_ENV` into the context's task environment, which every
+    RDD function wrapped from then on carries, so RDD and Arrow tasks
+    share one worker pool."""
     if getattr(spark, "_pu_tuned", False):
         return spark
+    spark.sparkContext.environment.update(_WORKER_ENV)
     conf = dict(_RUNTIME_CONF)
     conf["spark.sql.shuffle.partitions"] = str(
         spark.sparkContext.defaultParallelism

@@ -129,3 +129,16 @@ def test_no_scale_antipatterns_in_any_plan(spark, sf_dir):
     assert not unexpected_eager, (
         f"queries now execute eagerly at plan time: {sorted(unexpected_eager)}"
     )
+
+
+def test_confusion_intersects_each_candidate_pair_once(spark, sf_dir):
+    # `dedup_eval_confusion` reads the exact intersection size twice in
+    # its `truth` predicate; the optimized plan must compute the
+    # per-pair array_intersect once, not once per read
+    from parallelutilities_jl_spark.operators.dedup import (
+        q_dedup_eval_confusion,
+    )
+
+    df = q_dedup_eval_confusion(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_intersect(") == 1, plan

@@ -1,6 +1,8 @@
 """`tune_runtime` on a session that refuses a runtime conf: the other
 confs are still applied, the refusal is reported as a RuntimeWarning
-naming the key, value and error, and the session is marked tuned."""
+naming the key, value and error, and the session is marked tuned. The
+one-pool worker environment lands in the context's task environment
+either way."""
 
 from __future__ import annotations
 
@@ -25,7 +27,10 @@ class _Conf:
 
 def test_refused_conf_warns_and_the_rest_are_set():
     spark = SimpleNamespace(
-        conf=_Conf(), sparkContext=SimpleNamespace(defaultParallelism=4)
+        conf=_Conf(),
+        sparkContext=SimpleNamespace(
+            defaultParallelism=4, environment={"PYTHONHASHSEED": "0"}
+        ),
     )
     with pytest.warns(RuntimeWarning) as rec:
         assert tune_runtime(spark) is spark
@@ -35,4 +40,14 @@ def test_refused_conf_warns_and_the_rest_are_set():
     want = {k: v for k, v in _RUNTIME_CONF.items() if k != REFUSED}
     want["spark.sql.shuffle.partitions"] = "4"
     assert spark.conf.values == want
+    assert spark.sparkContext.environment == {
+        "PYTHONHASHSEED": "0",
+        "SPARK_SIMPLIFIED_TRACEBACK": "1",
+    }
+    assert (
+        spark.conf.values[
+            "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
+        ]
+        == "true"
+    )
     assert spark._pu_tuned

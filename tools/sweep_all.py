@@ -78,36 +78,35 @@ def main() -> None:
     print(f"TOTAL {total:.1f}s over {len(rows)} queries")
     slow = sorted(rows, key=lambda r: -r[1])[:15]
     print("slowest:", json.dumps(slow))
-    _record_local_sweep(rows)
+    if only is None:
+        _record_local_sweep(rows)
     spark.stop()
 
 
 def _record_local_sweep(rows) -> None:
-    """Merge this sweep's outcomes into SWEEP_LOCAL.json (repo root).
+    """Rewrite SWEEP_LOCAL.json (repo root) from a full-registry sweep.
     attestation_report.py reads it so a query whose newest driver
     CORRECTNESS row postdates the artifact can still show its local
     sweep evidence instead of a stale `queued` — the round-11/12
-    staleness the round-12 verdict flagged. Partial sweeps merge
-    per-name; the full registry run refreshes everything."""
+    staleness the round-12 verdict flagged. Only a full-registry run
+    writes the tracked file, so it always holds one whole sweep; a
+    partial sweep (named queries) only prints its rows."""
     import datetime
 
     path = os.path.join(ROOT, "SWEEP_LOCAL.json")
-    try:
-        with open(path) as f:
-            state = json.load(f)
-    except Exception:
-        state = {}
     when = datetime.datetime.now(datetime.timezone.utc).isoformat(
         timespec="seconds"
     )
-    for name, dt, status, err in rows:
-        state[name] = {
+    state = {
+        name: {
             "status": status,
             "sf_dir": SF_DIR,
             "when": when,
             "secs": dt,
             **({"err": err} if err else {}),
         }
+        for name, dt, status, err in rows
+    }
     with open(path, "w") as f:
         json.dump(state, f, indent=0, sort_keys=True)
         f.write("\n")
