@@ -30,7 +30,6 @@ from __future__ import annotations
 from typing import Callable, Optional, Sequence
 
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -292,208 +291,182 @@ def _checked_add(a, b, out=None):
                 f"dense-elsum partial sum bound [{lo}, {hi}] exceeds the "
                 f"safe headroom of {dt} ([{info.min // 2}, "
                 f"{info.max // 2}]) — the narrow accumulation dtype is "
-                "too small for these values; use a wider ship dtype."
+                "too small for these values; accumulate in a wider dtype."
             )
     return np.add(a, b, out=out)
 
 
+def _add_into(acc, m):
+    """`acc + m` through `_checked_add`, written into `acc` when `acc` is
+    writeable and already has the sum's dtype, else into a new array (a
+    wider `m` promotes, as `np.add` would; a deserialized `acc` can be
+    read-only)."""
+    import numpy as np
+
+    if acc.flags.writeable and np.result_type(acc, m) == acc.dtype:
+        return _checked_add(acc, m, out=acc)
+    return _checked_add(acc, m)
+
+
 def _partition_sum(make_array, ids):
-    """Elementwise sum of `make_array(i)` over one partition's `ids`
-    (None for an empty partition), in place like the reference's
-    `broadcastinplace` (src/reductionfunctions.jl:69-71): at most two
-    arrays are alive at once, the accumulator this function owns and
-    the array just generated, which is dropped before the next
-    `make_array` call. The first array is copied into the accumulator,
-    so an array `make_array` returned is never written — a caller may
-    hand out one shared or read-only array for every task. A wider
-    operand promotes the accumulator (int8 then float64 sums to
-    float64, as `np.add` would)."""
+    """Elementwise sum of `make_array(i)` over `ids` (None for no ids),
+    in place like the reference's `broadcastinplace`
+    (src/reductionfunctions.jl:69-71): at most two arrays are alive at
+    once, the accumulator this function owns and the array just
+    generated, which is dropped before the next `make_array` call. The
+    first array is copied into the accumulator, so an array `make_array`
+    returned is never written — a caller may hand out one shared or
+    read-only array for every task. A wider operand promotes the
+    accumulator (int8 then float64 sums to float64, as `np.add` would)."""
     import numpy as np
 
     acc = None
     for i in ids:
         m = make_array(i)
-        if acc is None:
-            acc = np.array(m, copy=True)
-        elif np.result_type(acc, m) == acc.dtype:
-            _checked_add(acc, m, out=acc)
-        else:
-            acc = _checked_add(acc, m)
+        acc = np.array(m, copy=True) if acc is None else _add_into(acc, m)
         del m
     return acc
 
 
-class _FirstValue(AccumulatorParam):
-    """Accumulator that keeps the first non-None value a task adds."""
+def _fold(arrays):
+    """Elementwise sum of a non-empty list of owned arrays, emptying the
+    list as it adds so each array is dropped once it is added."""
+    acc = arrays.pop()
+    while arrays:
+        acc = _add_into(acc, arrays.pop())
+    return acc
 
-    def zero(self, value):
+
+def _host_fold(make_array, ids, threads):
+    """One host's elementwise sum of `make_array(i)` over `ids` (None for
+    no ids), the reference's local and per-host stages
+    (src/trees.jl:42-137): thread j of k = min(len(ids), threads, usable
+    cores) folds `ids[j::k]` with `_partition_sum`, so each thread holds
+    two arrays, and the k partials then add in place."""
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    ids = list(ids)
+    k = min(len(ids), threads, len(os.sched_getaffinity(0)))
+    if k == 0:
         return None
+    with ThreadPoolExecutor(k) as pool:
+        partials = list(
+            pool.map(lambda j: _partition_sum(make_array, ids[j::k]), range(k))
+        )
+    return _fold(partials)
 
-    def addInPlace(self, a, b):
-        return b if a is None else a
+
+def _host_slots(sc) -> tuple[int, int]:
+    """(hosts, threads per host) of the dense-elsum host stage: one host
+    task per registered executor, each on its share of
+    `defaultParallelism`. Local mode registers no executor, so it is one
+    host on every core."""
+    hosts = max(1, sc._jsc.sc().getExecutorIds().size())
+    return hosts, max(1, sc.defaultParallelism // hosts)
 
 
-def _folded_chunks(
-    spark: SparkSession,
-    n_tasks: int,
-    make_array,
-    num_partitions: int | None,
-    n_chunks: int | None,
-    shape=None,
-):
-    """The chunk pipeline of both dense-elsum twins: an RDD of (flat
-    start offset, summed piece), one record per chunk. Each map partition sums its tasks (`_partition_sum`) and
-    slices the flat partial into `n_chunks` contiguous pieces; the
-    pieces shuffle by chunk id and every reduce task adds its chunk's
-    pieces, so every core sums its own slice of the array concurrently
-    and no process ever serializes or adds a whole array. A `shape`
-    accumulator (`_FirstValue`) receives each partial's shape once."""
-    import numpy as np
-
+def _host_partials(spark: SparkSession, n_tasks: int, make_array):
+    """The host stage both dense-elsum twins share: an RDD of one summed
+    partial per host (`_host_fold`), never an array per task."""
     from parallelutilities_jl_spark.session import ensure_package_on_executors
 
     if n_tasks < 1:
         # the reference's mapreduce over an empty collection without
         # `init` is an error too; there is no array to return
         raise ValueError(f"n_tasks must be >= 1, got {n_tasks}")
-    # the chunk folds call `_checked_add`, which cloudpickle ships by
+    # the host tasks call `_host_fold`, which cloudpickle ships by
     # reference to this module
     ensure_package_on_executors(spark)
     sc = spark.sparkContext
-    n_parts = num_partitions or min(n_tasks, sc.defaultParallelism)
-    n_chunks = n_chunks or n_parts
+    hosts, threads = _host_slots(sc)
 
-    def part_chunks(it):
-        acc = _partition_sum(make_array, it)
-        if acc is None:
-            return
-        if shape is not None:
-            shape.add(acc.shape)
-        flat = acc.reshape(-1)
-        bounds = np.linspace(0, flat.size, n_chunks + 1, dtype=np.int64)
-        for k in range(n_chunks):
-            piece = flat[bounds[k] : bounds[k + 1]]
-            if piece.size:
-                yield (int(k), (int(bounds[k]), piece))
+    def host_stage(it):
+        acc = _host_fold(make_array, it, threads)
+        if acc is not None:
+            yield acc
 
-    # partitionBy + in-partition fold, not reduceByKey: every chunk key is
-    # unique within a map partition, so reduceByKey's map-side combine is a
-    # pure overhead pass (dict build + re-pickle of every 2.5 MB piece —
-    # measured ~1.5× slower at the 80 MB-per-task shape).
-    def fold_chunks(it):
-        acc = {}
-        for k, (start, v) in it:
-            prev = acc.get(k)
-            if prev is None:
-                acc[k] = (start, v)
-            else:
-                pv = prev[1]
-                # deserialized chunks can arrive read-only; if pv is not
-                # writeable, allocate (v may be read-only too — writing
-                # into it would raise)
-                out = pv if pv.flags.writeable else None
-                acc[k] = (start, _checked_add(pv, v, out=out))
-        return iter(acc.values())
-
-    return (
-        sc.range(0, n_tasks, numSlices=n_parts)
-        .mapPartitions(part_chunks)
-        .partitionBy(n_chunks, partitionFunc=lambda k: k)
-        .mapPartitions(fold_chunks)
-    )
+    return sc.range(0, n_tasks, numSlices=hosts).mapPartitions(host_stage)
 
 
-def pmapreduce_dense_elsum(
-    spark: SparkSession,
-    n_tasks: int,
-    make_array,
-    *,
-    num_partitions: int | None = None,
-    n_chunks: int | None = None,
-):
+def pmapreduce_dense_elsum(spark: SparkSession, n_tasks: int, make_array):
     """The reference's headline workload: `pmapreduce(f, elsum, 1:n)` over
     dense arrays (reference docs/src/index.md:22-46 — in-place elementwise
-    sum of one generated matrix per worker).
+    sum of one generated matrix per worker), reduced in the reference's
+    stages: every host sums its tasks on its cores (`_host_partials`),
+    and the driver adds the host partials. With one host that is one
+    array crossing to the driver, with no shuffle and no second output
+    buffer.
 
-    Spark rendering: generate + *accumulate locally inside each partition*
-    (the in-place combine of `broadcastinplace`), then combine the
-    per-partition partials **chunk-parallel** (`_folded_chunks`). (A
-    whole-array `treeReduce` was 3× slower at the reference's
-    80 MB-per-task shape: each combine round pickled and added full
-    arrays sequentially.) Driver work is one preallocated output that
-    each folded chunk fills at its start offset, reshaped to the shape
-    of the first partial. On a multi-node cluster the chunk shuffle is
-    the same per-host/cross-host staging the reference's segmented tree
-    builds by hand (reference src/trees.jl:42-137)."""
-    import numpy as np
-
-    shape = spark.sparkContext.accumulator(None, _FirstValue())
-    pieces = _folded_chunks(
-        spark, n_tasks, make_array, num_partitions, n_chunks, shape
-    ).collect()
-    out = np.empty(
-        sum(p.size for _, p in pieces),
-        np.result_type(*{p.dtype for _, p in pieces}),
-    )
-    # drop each collected piece once it is copied: the driver holds the
-    # output plus the pieces not yet copied, not two whole arrays
-    while pieces:
-        start, p = pieces.pop()
-        out[start : start + p.size] = p
-        del p
-    return out.reshape(shape.value)
+    `make_array` runs on up to k threads of a host at once (see
+    `_host_fold`): it must be thread-safe, and it should release the GIL,
+    as numpy's generators do. In local mode the one host task holds one
+    task slot while it uses k cores; Spark 4.1 refuses a stage-level
+    `TaskResourceRequests` in local mode."""
+    return _fold(_host_partials(spark, n_tasks, make_array).collect())
 
 
 def pmapreduce_dense_elsum_long(
-    spark: SparkSession,
-    n_tasks: int,
-    make_array,
-    *,
-    num_partitions: int | None = None,
-    n_chunks: int | None = None,
-    ship_dtype=None,
+    spark: SparkSession, n_tasks: int, make_array
 ) -> DataFrame:
-    """Sink twin of `pmapreduce_dense_elsum` (round-13 verdict item 5):
-    the same chunk pipeline (`_folded_chunks`), but the reduced array
-    leaves the job as a DISTRIBUTED long-form DataFrame of (idx, value)
-    rows — flat row-major index, elementwise sum — instead of a driver
-    collect. `ship_dtype` (default float64) names the numpy dtype
-    crossing the shuffle and the Python→JVM boundary: a caller whose
-    task values and partial sums fit a narrower integer type
-    accumulates and ships that type — 4x fewer shuffled bytes for int16
-    vs float64 — and the expansion casts to the float64 output column,
-    so the emitted rows are identical as long as the narrow type never
-    overflows (the caller's obligation). Each reduced chunk becomes ONE
-    (start, bytes) row and `mapInArrow` expands it to Arrow columns, so
-    driver memory is O(1) in the array size and the result can flow
-    straight to a parquet sink or any downstream plan. The collect twin
-    is faithful to the reference's return-to-caller semantics
-    (reference docs/src/index.md:22-46) but bounds the result by driver
-    memory; this one does not."""
-    folded = _folded_chunks(
-        spark, n_tasks, make_array, num_partitions, n_chunks
-    ).map(
-        # one COMPACT row per chunk crosses the Python->JVM boundary:
-        # the raw buffer as binary, never 625k boxed Python floats (a
-        # tolist()+posexplode variant measured 23.5 s at the
-        # 10M-element shape vs ~2 s for this bytes+Arrow path)
-        lambda sp: (sp[0], bytearray(sp[1].tobytes()))
-    )
-    chunk_df = spark.createDataFrame(folded, "start long, vals binary")
+    """Sink twin of `pmapreduce_dense_elsum`: the same host stage, but the
+    reduced array leaves the job as a DISTRIBUTED long-form DataFrame of
+    (idx, value) rows — flat row-major index, elementwise sum as float64
+    — instead of a driver collect. Each host partial splits into
+    `defaultParallelism` contiguous chunks, the chunks shuffle by chunk
+    id and each reduce task adds its chunk's pieces (the cross-host
+    stage). A reduced chunk is ONE (start, dtype, bytes) row in the
+    dtype it was accumulated in, and `mapInArrow` expands it to Arrow
+    columns, so driver memory is O(1) in the array size and the result
+    can flow straight to a parquet sink or any downstream plan.
 
-    nptype = ship_dtype if ship_dtype is not None else "float64"
+    As in the collect twin, `make_array` runs on up to k threads of a
+    host at once: it must be thread-safe, and it should release the GIL.
+    In local mode the one host task holds one task slot while it uses k
+    cores; Spark 4.1 refuses a stage-level `TaskResourceRequests` in
+    local mode."""
+    import numpy as np
+
+    n_chunks = spark.sparkContext.defaultParallelism
+
+    def split(acc):
+        flat = acc.reshape(-1)
+        bounds = np.linspace(0, flat.size, n_chunks + 1, dtype=np.int64)
+        for c in range(n_chunks):
+            if bounds[c] < bounds[c + 1]:
+                yield c, (int(bounds[c]), flat[bounds[c] : bounds[c + 1]])
+
+    # partitionBy + in-partition fold, not reduceByKey: every chunk key is
+    # unique within a host partial, so reduceByKey's map-side combine is a
+    # pure overhead pass
+    def fold_chunks(it):
+        acc = {}
+        for c, (start, v) in it:
+            prev = acc.get(c)
+            acc[c] = (start, v if prev is None else _add_into(prev[1], v))
+        # one COMPACT row per chunk crosses the Python->JVM boundary: the
+        # raw buffer as binary, never boxed Python floats (a
+        # tolist()+posexplode variant measured 23.5 s at the 10M-element
+        # shape vs ~2 s for this bytes+Arrow path)
+        for start, v in acc.values():
+            yield start, v.dtype.str, bytearray(v.tobytes())
+
+    chunks = (
+        _host_partials(spark, n_tasks, make_array)
+        .flatMap(split)
+        .partitionBy(n_chunks, partitionFunc=lambda c: c)
+        .mapPartitions(fold_chunks)
+    )
+    chunk_df = spark.createDataFrame(
+        chunks, "start long, dtype string, vals binary"
+    )
 
     def expand(batches):
-        import numpy as np
         import pyarrow as pa
 
         for batch in batches:
-            starts = batch.column(0).to_pylist()
-            bufs = batch.column(1).to_pylist()
-            for s0, b in zip(starts, bufs):
-                arr = np.frombuffer(b, dtype=np.dtype(nptype))
-                if arr.dtype != np.float64:
-                    arr = arr.astype(np.float64)
+            for s0, dt, b in zip(*(c.to_pylist() for c in batch.columns)):
+                arr = np.frombuffer(b, dtype=dt).astype(np.float64, copy=False)
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(
@@ -639,27 +612,8 @@ def q_dense_elsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver contract pins the oracle run to sf=0.01)."""
     import numpy as np
 
-    full = _sf_of(sf_dir) >= 0.1
-    shape = (10_000, 1_000) if full else (1_000, 1_000)
-    # map partitions sized WELL below the task count so cheap-to-generate
-    # arrays accumulate in-partition before the chunk shuffle — shuffle
-    # volume is n_parts × array_bytes, so 4 partitions ship 320 MB
-    # instead of 2.5 GB (the reference's per-host staging,
-    # src/trees.jl:42-137, plays the same role). Chunk count sized so
-    # each reduce slice is ~5 MB: a median-of-N sweep on local[32]
-    # showed 16 chunks ~2.6× faster than 32 at the 80 MB shape (fewer
-    # reduce tasks + fewer pickle frames beat extra add-parallelism,
-    # which is memory-bandwidth-bound anyway), and 4 map partitions both
-    # faster AND far tighter-variance than 8 under bench-sequence JVM
-    # pressure (median 1.17 s, max 1.34 s vs median 1.61 s, max 2.61 s).
-    par = spark.sparkContext.defaultParallelism
-    out = pmapreduce_dense_elsum(
-        spark,
-        32,
-        lambda i: np.ones(shape),
-        num_partitions=max(2, min(32, par // 8)) if full else None,
-        n_chunks=16 if full else 8,
-    )
+    shape = (10_000, 1_000) if _sf_of(sf_dir) >= 0.1 else (1_000, 1_000)
+    out = pmapreduce_dense_elsum(spark, 32, lambda i: np.ones(shape))
     return spark.createDataFrame(
         [
             (
@@ -685,31 +639,19 @@ def q_dense_elsum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     that shape)."""
     import numpy as np
 
-    full = _sf_of(sf_dir) >= 0.1
-    shape = (10_000, 1_000) if full else (100, 100)
+    shape = (10_000, 1_000) if _sf_of(sf_dir) >= 0.1 else (100, 100)
     npix = shape[0] * shape[1]
-    par = spark.sparkContext.defaultParallelism
 
     # (i·j) mod 13 == ((i mod 13)·(j mod 13)) mod 13, and every value
-    # and every 32-task partial sum is <= 12·32 = 384 — so the WHOLE
+    # and every 32-task partial sum is <= 12·32 = 384 — so the whole
     # pipeline (generate, in-place accumulate, chunk shuffle, Python->
-    # JVM handoff) runs in int16, 4x narrower than the float64 it used
-    # to ship (guide §2: shuffle fewer bytes / narrower types; round-16
-    # duel: 0.46 s vs 1.40 s cold / 0.50 s warm median at the bench
-    # shape). The expansion casts to the same float64 output column:
-    # identical (idx, value) rows, oracle-proven at both SFs.
+    # JVM handoff) runs in int16, 4x narrower than float64; the
+    # expansion casts to the same float64 output column.
     def gen(i):
         base = (np.arange(npix, dtype=np.int64) % 13).astype(np.int16)
         return ((base * np.int16(i % 13)) % np.int16(13)).reshape(shape)
 
-    return pmapreduce_dense_elsum_long(
-        spark,
-        32,
-        gen,
-        num_partitions=max(2, min(32, par // 8)) if full else None,
-        n_chunks=16 if full else 8,
-        ship_dtype="int16",
-    )
+    return pmapreduce_dense_elsum_long(spark, 32, gen)
 
 
 def ordered_array_fold(

@@ -148,7 +148,6 @@ def product_df(
     spark: SparkSession,
     spec: ProductSpec,
     np: Optional[int] = None,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """The product as a DataFrame: (i, c1..cN[, p]).
 
@@ -158,7 +157,7 @@ def product_df(
     `spark.range` — narrow, no shuffle; Catalyst prunes unused coordinate
     columns and pushes filters into the range scan.
     """
-    df = spark.range(0, spec.total, 1, num_partitions or min(spec.total or 1, 32))
+    df = spark.range(0, spec.total, 1, min(spec.total or 1, 32))
     i = F.col("id")
     cols = [i.alias("i"), *coord_exprs(spec, i)]
     if np is not None:
@@ -181,7 +180,6 @@ def zip_df(
     spark: SparkSession,
     ranges: Sequence[RangeSpec],
     np: Optional[int] = None,
-    num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """zip(ranges...) as a DataFrame: (i, z1..zK[, p]) — element-wise
     alignment (reference `zipsplit`, src/mapreduce.jl:45-78)."""
@@ -189,7 +187,7 @@ def zip_df(
     if len(lens) != 1:
         raise ValueError("zip requires equal-length ranges")
     n = lens.pop()
-    df = spark.range(0, n, 1, num_partitions or min(n or 1, 32))
+    df = spark.range(0, n, 1, min(n or 1, 32))
     i = F.col("id")
     cols = [i.alias("i")] + [
         range_value_expr(r, i).alias(f"z{k + 1}") for k, r in enumerate(ranges)

@@ -28,7 +28,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the process's usable cores unless SPARK_GRAFT_CPUS names a count
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 # The environment every Python task of the session runs under. PySpark
 # keys its worker daemon on (python exec, modules, task environment).

@@ -16,6 +16,28 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def test_default_cpus_are_the_usable_cores():
+    # with SPARK_GRAFT_CPUS unset, `get_spark()` (bench.py,
+    # tools/sweep_all.py) runs local[<usable cores>], not a fixed 32
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import os; from parallelutilities_jl_spark import session; "
+            "print(session.DEFAULT_CPUS, len(os.sched_getaffinity(0)))",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env=env,
+        cwd=REPO,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got, usable = proc.stdout.split()
+    assert got == usable
+
+
 @pytest.mark.slow
 def test_bench_cli_emits_single_json_line():
     env = dict(

@@ -130,31 +130,45 @@ def test_map_product_splits_descriptor_consistency(spark):
     ]
 
 
-@pytest.mark.parametrize("n_parts", [1, 4, 8])
-def test_pmapreduce_dense_elsum(spark, n_parts):
+def _slots(monkeypatch, hosts, threads):
+    """Run the dense-elsum host stage as `hosts` host tasks of `threads`
+    threads each, whatever the session's executors are."""
+    from parallelutilities_jl_spark.operators import mapreduce
+
+    monkeypatch.setattr(mapreduce, "_host_slots", lambda sc: (hosts, threads))
+
+
+@pytest.mark.parametrize("n_hosts", [1, 4, 8])
+def test_pmapreduce_dense_elsum(spark, monkeypatch, n_hosts):
     # reference docs/src/index.md:22-46 workload shape: per-task arrays,
-    # in-place elementwise sum; result invariant to partitioning
+    # in-place elementwise sum; result invariant to the host count, which
+    # in local mode takes the driver fold (collect) and the cross-host
+    # chunk fold (sink) through 1, 4 and 8 host partials
     import numpy as np
 
     from parallelutilities_jl_spark.operators.mapreduce import (
         pmapreduce_dense_elsum,
+        pmapreduce_dense_elsum_long,
     )
 
-    out = pmapreduce_dense_elsum(
-        spark,
-        10,
-        lambda i: np.full((20, 30), float(i)),
-        num_partitions=n_parts,
-    )
+    _slots(monkeypatch, n_hosts, 2)
+
+    def gen(i):
+        return np.full((20, 30), float(i))
+
+    out = pmapreduce_dense_elsum(spark, 10, gen)
     assert out.shape == (20, 30)
     assert np.all(out == sum(range(10)))
+    rows = pmapreduce_dense_elsum_long(spark, 10, gen).collect()
+    assert sorted(r["idx"] for r in rows) == list(range(600))
+    assert {r["value"] for r in rows} == {float(sum(range(10)))}
 
 
 def test_dense_elsum_long_narrow_dtype_identical(spark):
-    # round-16: the sink twin accumulates/ships int16 (4x fewer
-    # shuffled bytes) and casts to float64 only at the output column —
-    # rows must be identical to the float64 pipeline, and the
-    # periodic-base generation identity (i·j) mod 13 ==
+    # the sink twin accumulates and ships the int16 its generator
+    # returns (4x fewer shuffled bytes) and casts to float64 only at the
+    # output column — rows must be identical to the float64 pipeline,
+    # and the periodic-base generation identity (i·j) mod 13 ==
     # ((i mod 13)·(j mod 13)) mod 13 must hold exactly
     import numpy as np
 
@@ -177,14 +191,28 @@ def test_dense_elsum_long_narrow_dtype_identical(spark):
     def gen_i2(i):
         return ((base * np.int16(i % 13)) % np.int16(13)).reshape(20, 30)
 
-    ref = pmapreduce_dense_elsum_long(
-        spark, 10, gen_f8, num_partitions=4, n_chunks=4
-    ).collect()
-    got = pmapreduce_dense_elsum_long(
-        spark, 10, gen_i2, num_partitions=4, n_chunks=4,
-        ship_dtype="int16",
-    ).collect()
+    ref = pmapreduce_dense_elsum_long(spark, 10, gen_f8).collect()
+    got = pmapreduce_dense_elsum_long(spark, 10, gen_i2).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
+
+
+@pytest.mark.parametrize("dtype", ["float32", "int16", "int8"])
+def test_dense_elsum_long_decodes_the_accumulated_dtype(spark, dtype):
+    # each chunk row carries the dtype its pieces were summed in; a
+    # decoder fixed at float64 read the sum of two float32 ones as rows
+    # of 2.0000004768 and could not decode an int8 sum at all
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum_long,
+    )
+
+    rows = pmapreduce_dense_elsum_long(
+        spark, 2, lambda i: np.ones((2, 4), dtype=dtype)
+    ).collect()
+    assert sorted((r["idx"], r["value"]) for r in rows) == [
+        (j, 2.0) for j in range(8)
+    ]
 
 
 def test_dense_elsum_collect_narrow_dtype_identical(spark):
@@ -198,13 +226,9 @@ def test_dense_elsum_collect_narrow_dtype_identical(spark):
         pmapreduce_dense_elsum,
     )
 
-    ref = pmapreduce_dense_elsum(
-        spark, 10, lambda i: np.ones((20, 30)), num_partitions=4,
-        n_chunks=4,
-    )
+    ref = pmapreduce_dense_elsum(spark, 10, lambda i: np.ones((20, 30)))
     got = pmapreduce_dense_elsum(
-        spark, 10, lambda i: np.ones((20, 30), dtype=np.int8),
-        num_partitions=4, n_chunks=4,
+        spark, 10, lambda i: np.ones((20, 30), dtype=np.int8)
     )
     assert got.shape == ref.shape
     assert np.array_equal(got.astype(np.float64), ref)
@@ -228,8 +252,7 @@ def test_dense_elsum_int_overflow_raises(spark):
 
     with pytest.raises((PythonException, Py4JJavaError)) as ei:
         pmapreduce_dense_elsum(
-            spark, 10, lambda i: np.full((20, 30), 12, dtype=np.int8),
-            num_partitions=4, n_chunks=4,
+            spark, 10, lambda i: np.full((20, 30), 12, dtype=np.int8)
         )
     assert "headroom" in str(ei.value)
 
@@ -253,9 +276,11 @@ def test_checked_add_bounds_every_add():
 
 
 @pytest.mark.parametrize("twin", ["collect", "sink"])
-def test_dense_elsum_four_int8_partials_of_60_raise(spark, twin):
-    # the same counterexample end to end: one task per map partition,
-    # so four partials of 60 meet in the chunk fold of both twins
+def test_dense_elsum_four_int8_partials_of_60_raise(spark, monkeypatch, twin):
+    # the same counterexample end to end: four partials of 60 meet in
+    # the cross-host fold (the driver's for collect, the chunk fold for
+    # sink) of 4 hosts x 1 thread, and in the host fold of 1 host x 4
+    # threads
     import numpy as np
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import PythonException
@@ -268,17 +293,16 @@ def test_dense_elsum_four_int8_partials_of_60_raise(spark, twin):
     def gen(i):
         return np.full((4, 5), 60, dtype=np.int8)
 
-    with pytest.raises((PythonException, Py4JJavaError)) as ei:
-        if twin == "collect":
-            pmapreduce_dense_elsum(
-                spark, 4, gen, num_partitions=4, n_chunks=2
-            )
-        else:
-            pmapreduce_dense_elsum_long(
-                spark, 4, gen, num_partitions=4, n_chunks=2,
-                ship_dtype="int8",
-            ).collect()
-    assert "OverflowError" in str(ei.value)
+    for hosts, threads in ((4, 1), (1, 4)):
+        _slots(monkeypatch, hosts, threads)
+        with pytest.raises(
+            (OverflowError, PythonException, Py4JJavaError)
+        ) as ei:
+            if twin == "collect":
+                pmapreduce_dense_elsum(spark, 4, gen)
+            else:
+                pmapreduce_dense_elsum_long(spark, 4, gen).collect()
+        assert ei.type is OverflowError or "OverflowError" in str(ei.value)
 
 
 @pytest.mark.parametrize("twin", ["collect", "sink"])
@@ -299,15 +323,11 @@ def test_dense_elsum_shared_make_array_is_not_written(spark, twin):
         return shared
 
     if twin == "collect":
-        vals = pmapreduce_dense_elsum(
-            spark, 8, gen, num_partitions=2
-        ).reshape(-1).tolist()
+        vals = pmapreduce_dense_elsum(spark, 8, gen).reshape(-1).tolist()
     else:
         vals = [
             r["value"]
-            for r in pmapreduce_dense_elsum_long(
-                spark, 8, gen, num_partitions=2
-            ).collect()
+            for r in pmapreduce_dense_elsum_long(spark, 8, gen).collect()
         ]
     assert vals == [8.0] * 12
 
@@ -346,6 +366,31 @@ def test_partition_sum_holds_two_arrays():
     assert peak < 2.5 * nbytes
     assert acc.dtype == np.float64 and np.all(acc == 15.0)
     assert all(acc is not r() for r in made)
+
+
+def test_host_fold_holds_two_arrays_per_thread():
+    # the threaded host fold: each of its k threads holds its own
+    # accumulator and the array being added, and the k partials then add
+    # in place, so the traced peak stays under 2k + 0.5 arrays
+    import os
+    import tracemalloc
+
+    import numpy as np
+
+    from parallelutilities_jl_spark.operators.mapreduce import _host_fold
+
+    shape = (256, 1024)  # 2 MiB of float64
+    nbytes = np.dtype(np.float64).itemsize * shape[0] * shape[1]
+    k = min(3, len(os.sched_getaffinity(0)))
+
+    tracemalloc.start()
+    try:
+        acc = _host_fold(lambda i: np.full(shape, float(i)), range(12), 3)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < (2 * k + 0.5) * nbytes
+    assert acc.dtype == np.float64 and np.all(acc == float(sum(range(12))))
 
 
 def test_partition_sum_promotes_like_np_add():

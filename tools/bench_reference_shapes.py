@@ -9,7 +9,8 @@ and print one JSON line comparing wall time against the published number.
 Timings are warm (second run), matching the reference's
 after-precompilation methodology (docs/src/index.md:102). The published
 numbers come from 56 cores across 2 Broadwell nodes; this runs on
-local[32] — same per-task array shapes, fewer cores, no network.
+`get_spark()`'s local session (the usable cores, or SPARK_GRAFT_CPUS) —
+same per-task array shapes, fewer cores, no network.
 
 O(1) metadata rows (the ~100 ns `in`/`extrema` lookups): the Python
 descriptor analogs are measured here too; the distributed analogs are
@@ -50,16 +51,9 @@ def main() -> None:
 
     # docs/src/index.md:22-46 — f = ones(10_000, 1_000) per worker,
     # summed elementwise. ref: 2.17 s (+) / 1.79 s (elsum) on 56 cores.
-    # num_partitions < n_tasks: in-partition accumulation before the
-    # chunk shuffle (ship n_parts × 80 MB, not n_tasks × 80 MB) — the
-    # same two-level staging the reference's per-host tree performs
     def dense():
         return pmapreduce_dense_elsum(
-            spark,
-            32,
-            lambda i: np.ones((10_000, 1_000)),
-            num_partitions=4,
-            n_chunks=16,
+            spark, 32, lambda i: np.ones((10_000, 1_000))
         )
 
     dt, out = timed(dense)
@@ -72,22 +66,12 @@ def main() -> None:
 
     if os.environ.get("PU_BENCH_BIG"):
         # docs/src/index.md:72-99 — ones(10_000, 10_000) per worker on
-        # one 28-core node. ref: 10.11 s (+) / 7.26 s (elsum).
-        # 22.4 GB of partials makes this shape memory-bandwidth-bound on
-        # one box and highly run-to-run variable (page cache / JVM heap
-        # growth; observed 9-60 s for identical configs). Best observed
-        # floor: full-width generation (no serialized accumulate phase)
-        # with fine chunks so the 22 GB chunk shuffle spreads over all
-        # reducers. 4x16 (accumulate-first, tiny shuffle) floors at the
-        # same ~10 s — the two designs trade generation parallelism
-        # against shuffle volume and both sit near the box's bandwidth.
+        # one 28-core node. ref: 10.11 s (+) / 7.26 s (elsum). Each
+        # host thread holds two 800 MB arrays, so this needs about
+        # 1.6 GB per usable core.
         def dense_big():
             return pmapreduce_dense_elsum(
-                spark,
-                28,
-                lambda i: np.ones((10_000, 10_000)),
-                num_partitions=28,
-                n_chunks=128,
+                spark, 28, lambda i: np.ones((10_000, 10_000))
             )
 
         dt, out = timed(dense_big)
