@@ -30,6 +30,12 @@ from __future__ import annotations
 from typing import Callable, Optional, Sequence
 
 import pandas as pd
+from pyspark.serializers import (
+    FramedSerializer,
+    SpecialLengths,
+    read_int,
+    write_with_length,
+)
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -314,47 +320,136 @@ def _partition_sum(make_array, ids):
     (src/reductionfunctions.jl:69-71): at most two arrays are alive at
     once, the accumulator this function owns and the array just
     generated, which is dropped before the next `make_array` call. The
-    first array is copied into the accumulator, so an array `make_array`
-    returned is never written — a caller may hand out one shared or
-    read-only array for every task. A wider operand promotes the
-    accumulator (int8 then float64 sums to float64, as `np.add` would)."""
+    first array is copied into a C-ordered accumulator, so an array
+    `make_array` returned is never written — a caller may hand out one
+    shared or read-only array for every task. A wider operand promotes
+    the accumulator (int8 then float64 sums to float64, as `np.add`
+    would). `_host_fold` runs it when it has one thread."""
     import numpy as np
 
     acc = None
     for i in ids:
         m = make_array(i)
-        acc = np.array(m, copy=True) if acc is None else _add_into(acc, m)
+        acc = np.array(m, order="C") if acc is None else _add_into(acc, m)
         del m
     return acc
 
 
 def _fold(arrays):
-    """Elementwise sum of a non-empty list of owned arrays, emptying the
-    list as it adds so each array is dropped once it is added."""
-    acc = arrays.pop()
-    while arrays:
-        acc = _add_into(acc, arrays.pop())
+    """Elementwise sum of a non-empty iterable of owned arrays, in order.
+    Each array is dropped once it is added, so a lazy iterable keeps at
+    most two alive."""
+    it = iter(arrays)
+    acc = next(it)
+    for m in it:
+        acc = _add_into(acc, m)
+        del m
     return acc
+
+
+def _stripe(a, j, k):
+    """Row stripe j of k of `a`, as a view (a 0-d array is one row)."""
+    a = a.reshape(1) if a.ndim == 0 else a
+    n = a.shape[0]
+    return a[n * j // k : n * (j + 1) // k]
+
+
+def _add_stripes(steps, j, k):
+    """Thread j's share of one `_host_fold` round: stripe j of every
+    step, in id order. A step (src, out, m) writes `src + m` into `out`,
+    or copies `m` into `out` when src is None."""
+    import numpy as np
+
+    for src, out, m in steps:
+        if src is None:
+            np.copyto(_stripe(out, j, k), _stripe(m, j, k))
+        else:
+            _checked_add(
+                _stripe(src, j, k), _stripe(m, j, k), out=_stripe(out, j, k)
+            )
 
 
 def _host_fold(make_array, ids, threads):
     """One host's elementwise sum of `make_array(i)` over `ids` (None for
     no ids), the reference's local and per-host stages
-    (src/trees.jl:42-137): thread j of k = min(len(ids), threads, usable
-    cores) folds `ids[j::k]` with `_partition_sum`, so each thread holds
-    two arrays, and the k partials then add in place."""
+    (src/trees.jl:42-137), on k = min(len(ids), threads, usable cores)
+    threads that share one accumulator, as the reference sums in place
+    into one output (`broadcastinplace`, src/reductionfunctions.jl:69-71).
+    It runs in rounds of k ids. Thread j generates the array of
+    `ids[r·k + j]`; after a barrier, thread j adds row stripe j of every
+    array of the round, in id order, into the same stripe of the
+    accumulator; after a second barrier the round's arrays are dropped.
+    So at most k + 1 arrays are alive, no lock is taken (no two threads
+    write one stripe), and every element is summed in id order whatever
+    k is: the result is byte-identical to `functools.reduce(np.add, …)`
+    over the ids' arrays.
+
+    The accumulator is C-ordered and owned, so a `make_array` result is
+    never written. Each round's plan is made by one thread between the
+    barriers: it allocates the accumulator and, where a wider array
+    promotes the sum as `np.add` would, a promoted accumulator at that
+    array. An exception on any thread aborts both barriers and is
+    re-raised here, not the other threads' `BrokenBarrierError`. With
+    one thread this is `_partition_sum`."""
     import os
+    import threading
     from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
 
     ids = list(ids)
     k = min(len(ids), threads, len(os.sched_getaffinity(0)))
-    if k == 0:
-        return None
+    if k <= 1:
+        return _partition_sum(make_array, ids)
+    arrays = [None] * k  # this round's arrays, by thread
+    state = {"acc": None, "steps": ()}
+
+    def plan():
+        acc, steps = state["acc"], []
+        for m in arrays:
+            if m is None:  # the last round can be short
+                break
+            if acc is None:
+                acc = np.empty(m.shape, m.dtype)
+                steps.append((None, acc, m))
+                continue
+            if m.shape != acc.shape:
+                raise ValueError(
+                    f"make_array returned shape {m.shape}, not {acc.shape}"
+                )
+            dt = np.result_type(acc, m)
+            out = acc if dt == acc.dtype else np.empty(acc.shape, dt)
+            steps.append((acc, out, m))
+            acc = out
+        state["acc"], state["steps"] = acc, steps
+
+    def drop():
+        arrays[:] = [None] * k
+        state["steps"] = ()
+
+    generated = threading.Barrier(k, action=plan)
+    added = threading.Barrier(k, action=drop)
+
+    def run(j):
+        try:
+            for r in range(0, len(ids), k):
+                if r + j < len(ids):
+                    arrays[j] = np.asarray(make_array(ids[r + j]))
+                generated.wait()
+                _add_stripes(state["steps"], j, k)
+                added.wait()
+        except BaseException:
+            generated.abort()
+            added.abort()
+            raise
+
     with ThreadPoolExecutor(k) as pool:
-        partials = list(
-            pool.map(lambda j: _partition_sum(make_array, ids[j::k]), range(k))
-        )
-    return _fold(partials)
+        futures = [pool.submit(run, j) for j in range(k)]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        broken = threading.BrokenBarrierError
+        raise next((e for e in errors if not isinstance(e, broken)), errors[0])
+    return state["acc"]
 
 
 def _host_slots(sc) -> tuple[int, int]:
@@ -364,6 +459,73 @@ def _host_slots(sc) -> tuple[int, int]:
     host on every core."""
     hosts = max(1, sc._jsc.sc().getExecutorIds().size())
     return hosts, max(1, sc.defaultParallelism // hosts)
+
+
+def _frame_bytes() -> int:
+    """Largest frame of the collect twin's raw result path: 1 GiB, inside
+    the signed 32-bit length pyspark gives a frame (`write_int` packs
+    `!i`), so a partial of any size crosses in frames. A function, like
+    `_host_slots`, read on the driver when the job is built."""
+    return 1 << 30
+
+
+class _ArrayFrames(FramedSerializer):
+    """A stream of ndarrays as raw frames, with no pickle. Each array is a
+    header frame (the JSON of its `dtype.str` and shape), then its
+    C-order bytes as `memoryview` slices of at most `frame_bytes` each
+    (none for an empty array). `load_stream` reads each payload with
+    `readinto` straight into an `np.empty` of that dtype and shape, so
+    an array arrives writeable, with no unpickle and no second copy, and
+    the next array is not read until the caller asks for it."""
+
+    def __init__(self, frame_bytes: int):
+        self.frame_bytes = frame_bytes
+
+    def dump_stream(self, iterator, stream):
+        import json
+
+        import numpy as np
+
+        for a in iterator:
+            a = np.ascontiguousarray(a)
+            # raises TypeError for an object array, whose buffer holds
+            # pointers
+            buf = memoryview(a.reshape(-1).view(np.uint8))
+            head = json.dumps([a.dtype.str, a.shape]).encode()
+            write_with_length(head, stream)
+            for lo in range(0, buf.nbytes, self.frame_bytes):
+                write_with_length(buf[lo : lo + self.frame_bytes], stream)
+
+    def load_stream(self, stream):
+        while True:
+            try:
+                n = read_int(stream)
+            except EOFError:
+                return
+            if n == SpecialLengths.END_OF_DATA_SECTION:
+                return
+            # yielded unnamed, so this frame holds no array while the
+            # next one is read
+            yield self._read_array(stream, n)
+
+    @staticmethod
+    def _read_array(stream, head_len):
+        import json
+
+        import numpy as np
+
+        dtype, shape = json.loads(stream.read(head_len))
+        a = np.empty(shape, dtype)
+        buf = memoryview(a.reshape(-1).view(np.uint8))
+        pos = 0
+        while pos < buf.nbytes:
+            end = pos + read_int(stream)
+            while pos < end:
+                got = stream.readinto(buf[pos:end])
+                if not got:
+                    raise EOFError("array frame cut short")
+                pos += got
+        return a
 
 
 def _host_partials(spark: SparkSession, n_tasks: int, make_array):
@@ -393,23 +555,38 @@ def pmapreduce_dense_elsum(spark: SparkSession, n_tasks: int, make_array):
     """The reference's headline workload: `pmapreduce(f, elsum, 1:n)` over
     dense arrays (reference docs/src/index.md:22-46 — in-place elementwise
     sum of one generated matrix per worker), reduced in the reference's
-    stages: every host sums its tasks on its cores (`_host_partials`),
-    and the driver adds the host partials. With one host that is one
-    array crossing to the driver, with no shuffle and no second output
-    buffer.
+    stages: every host sums its tasks on its cores into one accumulator
+    (`_host_partials`), and the driver adds the host partials.
+
+    A host partial leaves its task as raw frames (`_ArrayFrames`), not a
+    pickle, and the driver folds the partials in partition order as they
+    come off the result socket, so it holds at most two arrays whatever
+    the host count. With one host that is one array crossing to the
+    driver, with no shuffle, no pickle and no second output buffer; the
+    returned array is writeable.
 
     `make_array` runs on up to k threads of a host at once (see
     `_host_fold`): it must be thread-safe, and it should release the GIL,
     as numpy's generators do. In local mode the one host task holds one
     task slot while it uses k cores; Spark 4.1 refuses a stage-level
     `TaskResourceRequests` in local mode."""
-    return _fold(_host_partials(spark, n_tasks, make_array).collect())
+    from pyspark.traceback_utils import SCCallSiteSync
+    from pyspark.util import _load_from_socket
+
+    frames = _ArrayFrames(_frame_bytes())
+    rdd = _host_partials(spark, n_tasks, make_array)._reserialize(frames)
+    sc = spark.sparkContext
+    # `collect()` without its `list(...)`: the partials are folded lazily
+    with SCCallSiteSync(sc):
+        sock_info = sc._jvm.PythonRDD.collectAndServe(rdd._jrdd.rdd())
+        return _fold(_load_from_socket(sock_info, frames))
 
 
 def pmapreduce_dense_elsum_long(
     spark: SparkSession, n_tasks: int, make_array
 ) -> DataFrame:
-    """Sink twin of `pmapreduce_dense_elsum`: the same host stage, but the
+    """Sink twin of `pmapreduce_dense_elsum`: the same host stage (k
+    threads of a host sum into one accumulator, `_host_fold`), but the
     reduced array leaves the job as a DISTRIBUTED long-form DataFrame of
     (idx, value) rows — flat row-major index, elementwise sum as float64
     — instead of a driver collect. Each host partial splits into

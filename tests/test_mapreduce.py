@@ -5,6 +5,7 @@ test/paralleltests.jl:488-590 and the np matrix in test/singlehost.jl:7-15).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -369,9 +370,10 @@ def test_partition_sum_holds_two_arrays():
 
 
 def test_host_fold_holds_two_arrays_per_thread():
-    # the threaded host fold: each of its k threads holds its own
-    # accumulator and the array being added, and the k partials then add
-    # in place, so the traced peak stays under 2k + 0.5 arrays
+    # the threaded host fold: its k threads share one accumulator and
+    # each holds the one array it generated, so k + 1 arrays are alive
+    # (`test_host_fold_holds_k_plus_one_arrays`), inside this looser
+    # bound of two arrays per thread
     import os
     import tracemalloc
 
@@ -391,6 +393,228 @@ def test_host_fold_holds_two_arrays_per_thread():
         tracemalloc.stop()
     assert peak < (2 * k + 0.5) * nbytes
     assert acc.dtype == np.float64 and np.all(acc == float(sum(range(12))))
+
+
+def test_host_fold_holds_k_plus_one_arrays():
+    # k threads generate one array each into the round, then add their
+    # stripes of it into ONE shared accumulator, and the round is dropped
+    # before the next is generated: k + 1 arrays, never 2k
+    import os
+    import tracemalloc
+
+    from parallelutilities_jl_spark.operators.mapreduce import _host_fold
+
+    shape = (256, 1024)  # 2 MiB of float64
+    nbytes = np.dtype(np.float64).itemsize * shape[0] * shape[1]
+    k = min(4, len(os.sched_getaffinity(0)))
+
+    tracemalloc.start()
+    try:
+        acc = _host_fold(lambda i: np.full(shape, float(i)), range(13), 4)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < (k + 1.5) * nbytes
+    assert acc.dtype == np.float64 and np.all(acc == float(sum(range(13))))
+
+
+def _order_sensitive(i):
+    # float64 arrays whose magnitudes differ by up to 1e8 between ids, so
+    # any reassociation of the sum changes low bits; odd ids are F-ordered
+    scale = 10.0 ** (i % 9 - 4)
+    a = np.random.default_rng(i).standard_normal((37, 11)) * scale
+    return np.asfortranarray(a) if i % 2 else a
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4])
+def test_host_fold_is_the_sequential_fold_bit_for_bit(k):
+    # every element is summed in id order whatever the thread count, so
+    # the result is byte-identical to the one-thread left fold, on every
+    # run (no lock decides an order); a short switch interval makes the
+    # threads interleave as often as they can
+    import functools
+    import sys
+
+    from parallelutilities_jl_spark.operators.mapreduce import _host_fold
+
+    ref = functools.reduce(np.add, map(_order_sensitive, range(13)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(5):
+            got = _host_fold(_order_sensitive, range(13), k)
+            assert got.dtype == ref.dtype and got.flags.c_contiguous
+            assert got.tobytes() == ref.tobytes()
+    finally:
+        sys.setswitchinterval(interval)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4])
+def test_host_fold_promotes_where_np_add_does(k):
+    # float32 adds stay float32 until the first float64 array, as in the
+    # left fold; a sum promoted up front would round differently
+    import functools
+
+    from parallelutilities_jl_spark.operators.mapreduce import _host_fold
+
+    dtypes = [np.int8, np.float32, np.float32, np.float32, np.float64, np.int8]
+
+    def gen(i):
+        return np.full((9, 4), 0.1 + i, dtype=dtypes[i % len(dtypes)])
+
+    ref = functools.reduce(np.add, map(gen, range(11)))
+    got = _host_fold(gen, range(11), k)
+    assert got.dtype == ref.dtype == np.float64
+    assert got.tobytes() == ref.tobytes()
+
+
+def _fold_in_thread(make_array, ids, threads):
+    """Run `_host_fold` on a side thread; return what it raised, after
+    failing the test if it has not finished within 60 s."""
+    import threading
+
+    from parallelutilities_jl_spark.operators.mapreduce import _host_fold
+
+    raised = []
+
+    def body():
+        try:
+            _host_fold(make_array, ids, threads)
+        except BaseException as e:  # noqa: BLE001 - handed to the test
+            raised.append(e)
+
+    t = threading.Thread(target=body, daemon=True)
+    t.start()
+    t.join(timeout=60)
+    assert not t.is_alive(), "the host fold hung"
+    return raised
+
+
+def test_host_fold_side_thread_error_surfaces():
+    # make_array raising on a thread other than the first aborts the
+    # round's barrier: the fold ends, and the error raised is the
+    # original one, not the other threads' BrokenBarrierError
+    def gen(i):
+        if i == 5:  # thread 1 of the second round
+            raise ValueError("make_array failed on id 5")
+        return np.ones((8, 5))
+
+    raised = _fold_in_thread(gen, range(8), 4)
+    assert len(raised) == 1 and type(raised[0]) is ValueError
+    assert "id 5" in str(raised[0])
+
+
+def test_host_fold_overflow_in_one_stripe_surfaces():
+    # only the last rows overflow int8, so only the last thread's
+    # stripe add raises; the others wait at the barrier and must be
+    # released, and the OverflowError itself must reach the caller
+    def gen(i):
+        a = np.zeros((8, 5), dtype=np.int8)
+        a[6:] = 60
+        return a
+
+    raised = _fold_in_thread(gen, range(4), 4)
+    assert len(raised) == 1 and type(raised[0]) is OverflowError
+    assert "headroom" in str(raised[0])
+
+
+def _frames(data):
+    """The (length, payload) frames of a byte stream."""
+    import struct
+
+    out, pos = [], 0
+    while pos < len(data):
+        (n,) = struct.unpack("!i", data[pos : pos + 4])
+        out.append(data[pos + 4 : pos + 4 + n])
+        pos += 4 + n
+    return out
+
+
+_FRAME_CASES = {
+    "f_order": lambda i: np.asfortranarray(
+        np.arange(60.0).reshape(6, 10) * (i + 1)
+    ),
+    "empty": lambda i: np.ones((0, 3)),
+    "float32": lambda i: np.full((5, 3), 0.1 * (i + 1), dtype=np.float32),
+    "int16": lambda i: np.full((5, 3), i, dtype=np.int16),
+    "int8": lambda i: np.full((5, 3), i, dtype=np.int8),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FRAME_CASES))
+def test_array_frames_round_trip(case):
+    # a header frame, then the C-order bytes in frames of at most
+    # frame_bytes (7 splits elements across frames), read back by
+    # readinto into a writeable array of the same dtype and shape
+    import io
+    import json
+
+    from parallelutilities_jl_spark.operators.mapreduce import _ArrayFrames
+
+    arrays = [_FRAME_CASES[case](i) for i in range(3)]
+    out = io.BytesIO()
+    _ArrayFrames(7).dump_stream(iter(arrays), out)
+    frames = _frames(out.getvalue())
+    pos = 0
+    for a in arrays:
+        dtype, shape = json.loads(frames[pos])
+        assert (dtype, tuple(shape)) == (a.dtype.str, a.shape)
+        n_data = -(-a.nbytes // 7)
+        data = frames[pos + 1 : pos + 1 + n_data]
+        assert all(0 < len(f) <= 7 for f in data)
+        assert b"".join(data) == np.ascontiguousarray(a).tobytes()
+        pos += 1 + n_data
+    assert pos == len(frames)
+    back = list(_ArrayFrames(7).load_stream(io.BytesIO(out.getvalue())))
+    assert len(back) == len(arrays)
+    for a, b in zip(arrays, back):
+        assert b.dtype == a.dtype and b.shape == a.shape
+        assert b.flags.writeable and b.flags.c_contiguous
+        assert np.array_equal(a, b)
+
+
+@pytest.mark.parametrize("case", sorted(_FRAME_CASES))
+def test_dense_elsum_collect_reassembles_frames(spark, monkeypatch, case):
+    # the collect twin end to end with 7-byte frames: every host partial
+    # crosses Python -> JVM -> driver in many frames and is rebuilt in
+    # place; the sum equals the left fold in dtype, shape and bytes
+    import functools
+
+    from parallelutilities_jl_spark.operators import mapreduce
+
+    gen = _FRAME_CASES[case]
+    monkeypatch.setattr(mapreduce, "_frame_bytes", lambda: 7)
+    _slots(monkeypatch, 2, 2)
+    out = mapreduce.pmapreduce_dense_elsum(spark, 6, gen)
+    ref = functools.reduce(np.add, map(gen, range(6)))
+    assert out.dtype == ref.dtype and out.shape == ref.shape
+    assert out.tobytes() == ref.tobytes()
+    assert out.flags.writeable
+
+
+def test_dense_elsum_driver_holds_two_arrays(spark, monkeypatch):
+    # the driver folds the host partials as they come off the result
+    # socket, in partition order, so it holds the accumulator and the
+    # partial being read: 8 hosts, yet under 2.5 arrays traced
+    import tracemalloc
+
+    from parallelutilities_jl_spark.operators.mapreduce import (
+        pmapreduce_dense_elsum,
+    )
+
+    shape = (512, 1024)  # 4 MiB of float64
+    nbytes = np.dtype(np.float64).itemsize * shape[0] * shape[1]
+    _slots(monkeypatch, 8, 2)
+    tracemalloc.start()
+    try:
+        out = pmapreduce_dense_elsum(
+            spark, 16, lambda i: np.full(shape, float(i))
+        )
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 2.5 * nbytes
+    assert np.all(out == float(sum(range(16))))
 
 
 def test_partition_sum_promotes_like_np_add():

@@ -6,6 +6,10 @@ and print one JSON line comparing wall time against the published number.
     python tools/bench_reference_shapes.py           # the 2-node shapes
     PU_BENCH_BIG=1 python tools/bench_reference_shapes.py   # + 28-core rows
 
+The dense-elsum row also carries `py_worker_vmhwm_mb`: the largest
+peak resident set among the session's Python workers after its warm
+run, read from /proc.
+
 Timings are warm (second run), matching the reference's
 after-precompilation methodology (docs/src/index.md:102). The published
 numbers come from 56 cores across 2 Broadwell nodes; this runs on
@@ -26,6 +30,43 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _vmhwm_kb(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmHWM:"):
+                    return int(line.split()[1])
+    except OSError:  # the process ended between listing and reading
+        pass
+    return 0
+
+
+def worker_peak_mb() -> float:
+    """Largest peak resident set (`VmHWM`) among the Python processes
+    under this one, the pyspark daemon and the workers it forked, read
+    from /proc as perfbench's process-tree metrics are."""
+    children: dict[int, list[tuple[int, str]]] = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue
+        # comm may hold spaces or parentheses: split after the last ')'
+        head, _, rest = raw.rpartition(")")
+        comm, ppid = head.partition("(")[2], int(rest.split()[1])
+        children.setdefault(ppid, []).append((int(name), comm))
+    peak, todo = 0, [os.getpid()]
+    while todo:
+        for pid, comm in children.get(todo.pop(), ()):
+            todo.append(pid)
+            if comm.startswith("python"):
+                peak = max(peak, _vmhwm_kb(pid))
+    return round(peak / 1024, 1)
 
 
 def timed(fn, reps: int = 1):
@@ -62,13 +103,15 @@ def main() -> None:
         "sec": round(dt, 3),
         "ref_sec": 2.17,
         "ref_config": "56 cores / 2 nodes",
+        # the host task's worker holds k + 1 arrays (see _host_fold)
+        "py_worker_vmhwm_mb": worker_peak_mb(),
     }
 
     if os.environ.get("PU_BENCH_BIG"):
         # docs/src/index.md:72-99 — ones(10_000, 10_000) per worker on
-        # one 28-core node. ref: 10.11 s (+) / 7.26 s (elsum). Each
-        # host thread holds two 800 MB arrays, so this needs about
-        # 1.6 GB per usable core.
+        # one 28-core node. ref: 10.11 s (+) / 7.26 s (elsum). The host
+        # task holds one 800 MB array per thread plus the accumulator,
+        # so this needs about 0.8 GB per usable core.
         def dense_big():
             return pmapreduce_dense_elsum(
                 spark, 28, lambda i: np.ones((10_000, 10_000))
