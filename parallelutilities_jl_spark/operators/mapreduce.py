@@ -302,13 +302,23 @@ def _checked_add(a, b, out=None):
     return np.add(a, b, out=out)
 
 
+def _same_shape(acc, m):
+    """Refuse an array whose shape is not the accumulator's. The
+    elementwise sum never broadcasts, on any path or thread count."""
+    if m.shape != acc.shape:
+        raise ValueError(
+            f"make_array returned shape {m.shape}, not {acc.shape}"
+        )
+
+
 def _add_into(acc, m):
     """`acc + m` through `_checked_add`, written into `acc` when `acc` is
     writeable and already has the sum's dtype, else into a new array (a
     wider `m` promotes, as `np.add` would; a deserialized `acc` can be
-    read-only)."""
+    read-only). The shapes must be equal (`_same_shape`)."""
     import numpy as np
 
+    _same_shape(acc, m)
     if acc.flags.writeable and np.result_type(acc, m) == acc.dtype:
         return _checked_add(acc, m, out=acc)
     return _checked_add(acc, m)
@@ -317,22 +327,13 @@ def _add_into(acc, m):
 def _partition_sum(make_array, ids):
     """Elementwise sum of `make_array(i)` over `ids` (None for no ids),
     in place like the reference's `broadcastinplace`
-    (src/reductionfunctions.jl:69-71): at most two arrays are alive at
-    once, the accumulator this function owns and the array just
-    generated, which is dropped before the next `make_array` call. The
-    first array is copied into a C-ordered accumulator, so an array
-    `make_array` returned is never written — a caller may hand out one
-    shared or read-only array for every task. A wider operand promotes
+    (src/reductionfunctions.jl:69-71): `_host_fold` on one thread, so at
+    most two arrays are alive at once, the accumulator and the array
+    just generated, which is dropped before the next `make_array` call.
+    A `make_array` result is never written, and a wider operand promotes
     the accumulator (int8 then float64 sums to float64, as `np.add`
-    would). `_host_fold` runs it when it has one thread."""
-    import numpy as np
-
-    acc = None
-    for i in ids:
-        m = make_array(i)
-        acc = np.array(m, order="C") if acc is None else _add_into(acc, m)
-        del m
-    return acc
+    would)."""
+    return _host_fold(make_array, ids, 1)
 
 
 def _fold(arrays):
@@ -354,10 +355,32 @@ def _stripe(a, j, k):
     return a[n * j // k : n * (j + 1) // k]
 
 
+def _plan_round(acc, arrays):
+    """The steps that add one `_host_fold` round's `arrays`, in id order,
+    to `acc` (None before the first round), and the accumulator they
+    leave. A step (src, out, m) writes `src + m` into `out`, or copies
+    `m` into `out` when src is None. The first array is copied into a new
+    C-ordered accumulator; where a wider array promotes the sum, as
+    `np.add` would, a promoted accumulator is allocated at that array."""
+    import numpy as np
+
+    steps = []
+    for m in arrays:
+        if acc is None:
+            acc = np.empty(m.shape, m.dtype)
+            steps.append((None, acc, m))
+            continue
+        _same_shape(acc, m)
+        dt = np.result_type(acc, m)
+        out = acc if dt == acc.dtype else np.empty(acc.shape, dt)
+        steps.append((acc, out, m))
+        acc = out
+    return acc, steps
+
+
 def _add_stripes(steps, j, k):
     """Thread j's share of one `_host_fold` round: stripe j of every
-    step, in id order. A step (src, out, m) writes `src + m` into `out`,
-    or copies `m` into `out` when src is None."""
+    step of `_plan_round`, in id order."""
     import numpy as np
 
     for src, out, m in steps:
@@ -376,80 +399,40 @@ def _host_fold(make_array, ids, threads):
     threads that share one accumulator, as the reference sums in place
     into one output (`broadcastinplace`, src/reductionfunctions.jl:69-71).
     It runs in rounds of k ids. Thread j generates the array of
-    `ids[r·k + j]`; after a barrier, thread j adds row stripe j of every
-    array of the round, in id order, into the same stripe of the
-    accumulator; after a second barrier the round's arrays are dropped.
+    `ids[r·k + j]`; once the round is generated, thread j adds row
+    stripe j of every array of the round, in id order, into the same
+    stripe of the accumulator; the round's arrays are dropped before the
+    next round is generated. The pool's `map` is the barrier between the
+    two phases, and it re-raises the first exception of either.
+
     So at most k + 1 arrays are alive, no lock is taken (no two threads
     write one stripe), and every element is summed in id order whatever
     k is: the result is byte-identical to `functools.reduce(np.add, …)`
-    over the ids' arrays.
-
-    The accumulator is C-ordered and owned, so a `make_array` result is
-    never written. Each round's plan is made by one thread between the
-    barriers: it allocates the accumulator and, where a wider array
-    promotes the sum as `np.add` would, a promoted accumulator at that
-    array. An exception on any thread aborts both barriers and is
-    re-raised here, not the other threads' `BrokenBarrierError`. With
-    one thread this is `_partition_sum`."""
+    over the ids' arrays, which must all have one shape. The accumulator
+    is C-ordered and owned, so a `make_array` result is never written.
+    `_checked_add` bounds each stripe's add, so with k > 1 it can accept
+    an integer sum that the one-thread bound refuses, never one that
+    wraps."""
     import os
-    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     import numpy as np
 
     ids = list(ids)
+    if not ids:
+        return None
     k = min(len(ids), threads, len(os.sched_getaffinity(0)))
-    if k <= 1:
-        return _partition_sum(make_array, ids)
-    arrays = [None] * k  # this round's arrays, by thread
-    state = {"acc": None, "steps": ()}
-
-    def plan():
-        acc, steps = state["acc"], []
-        for m in arrays:
-            if m is None:  # the last round can be short
-                break
-            if acc is None:
-                acc = np.empty(m.shape, m.dtype)
-                steps.append((None, acc, m))
-                continue
-            if m.shape != acc.shape:
-                raise ValueError(
-                    f"make_array returned shape {m.shape}, not {acc.shape}"
-                )
-            dt = np.result_type(acc, m)
-            out = acc if dt == acc.dtype else np.empty(acc.shape, dt)
-            steps.append((acc, out, m))
-            acc = out
-        state["acc"], state["steps"] = acc, steps
-
-    def drop():
-        arrays[:] = [None] * k
-        state["steps"] = ()
-
-    generated = threading.Barrier(k, action=plan)
-    added = threading.Barrier(k, action=drop)
-
-    def run(j):
-        try:
-            for r in range(0, len(ids), k):
-                if r + j < len(ids):
-                    arrays[j] = np.asarray(make_array(ids[r + j]))
-                generated.wait()
-                _add_stripes(state["steps"], j, k)
-                added.wait()
-        except BaseException:
-            generated.abort()
-            added.abort()
-            raise
-
+    acc = None
     with ThreadPoolExecutor(k) as pool:
-        futures = [pool.submit(run, j) for j in range(k)]
-    errors = [f.exception() for f in futures if f.exception() is not None]
-    if errors:
-        broken = threading.BrokenBarrierError
-        raise next((e for e in errors if not isinstance(e, broken)), errors[0])
-    return state["acc"]
+        for r in range(0, len(ids), k):
+            arrays = list(
+                pool.map(lambda i: np.asarray(make_array(i)), ids[r : r + k])
+            )
+            acc, steps = _plan_round(acc, arrays)
+            del arrays
+            list(pool.map(lambda j: _add_stripes(steps, j, k), range(k)))
+            del steps
+    return acc
 
 
 def _host_slots(sc) -> tuple[int, int]:
@@ -461,25 +444,17 @@ def _host_slots(sc) -> tuple[int, int]:
     return hosts, max(1, sc.defaultParallelism // hosts)
 
 
-def _frame_bytes() -> int:
-    """Largest frame of the collect twin's raw result path: 1 GiB, inside
-    the signed 32-bit length pyspark gives a frame (`write_int` packs
-    `!i`), so a partial of any size crosses in frames. A function, like
-    `_host_slots`, read on the driver when the job is built."""
-    return 1 << 30
-
-
 class _ArrayFrames(FramedSerializer):
-    """A stream of ndarrays as raw frames, with no pickle. Each array is a
-    header frame (the JSON of its `dtype.str` and shape), then its
-    C-order bytes as `memoryview` slices of at most `frame_bytes` each
-    (none for an empty array). `load_stream` reads each payload with
-    `readinto` straight into an `np.empty` of that dtype and shape, so
-    an array arrives writeable, with no unpickle and no second copy, and
-    the next array is not read until the caller asks for it."""
-
-    def __init__(self, frame_bytes: int):
-        self.frame_bytes = frame_bytes
+    """A stream of ndarrays as raw frames, with no pickle. Each array is
+    two frames: a header (the JSON of its `dtype.str` and shape), then
+    its C-order bytes as one `memoryview`. `load_stream` reads each
+    payload with `readinto` straight into an `np.empty` of that dtype
+    and shape, so an array arrives writeable, with no unpickle and no
+    second copy, and the next array is not read until the caller asks
+    for it. pyspark packs a frame length as a signed 32-bit int
+    (`write_int`), so an array must stay under 2 GiB; a task result
+    that large is refused first by `spark.driver.maxResultSize` (1 GiB
+    by default)."""
 
     def dump_stream(self, iterator, stream):
         import json
@@ -493,8 +468,7 @@ class _ArrayFrames(FramedSerializer):
             buf = memoryview(a.reshape(-1).view(np.uint8))
             head = json.dumps([a.dtype.str, a.shape]).encode()
             write_with_length(head, stream)
-            for lo in range(0, buf.nbytes, self.frame_bytes):
-                write_with_length(buf[lo : lo + self.frame_bytes], stream)
+            write_with_length(buf, stream)
 
     def load_stream(self, stream):
         while True:
@@ -517,14 +491,14 @@ class _ArrayFrames(FramedSerializer):
         dtype, shape = json.loads(stream.read(head_len))
         a = np.empty(shape, dtype)
         buf = memoryview(a.reshape(-1).view(np.uint8))
+        if read_int(stream) != buf.nbytes:
+            raise ValueError("array frame length does not match its header")
         pos = 0
         while pos < buf.nbytes:
-            end = pos + read_int(stream)
-            while pos < end:
-                got = stream.readinto(buf[pos:end])
-                if not got:
-                    raise EOFError("array frame cut short")
-                pos += got
+            got = stream.readinto(buf[pos:])
+            if not got:
+                raise EOFError("array frame cut short")
+            pos += got
         return a
 
 
@@ -560,10 +534,12 @@ def pmapreduce_dense_elsum(spark: SparkSession, n_tasks: int, make_array):
 
     A host partial leaves its task as raw frames (`_ArrayFrames`), not a
     pickle, and the driver folds the partials in partition order as they
-    come off the result socket, so it holds at most two arrays whatever
-    the host count. With one host that is one array crossing to the
-    driver, with no shuffle, no pickle and no second output buffer; the
-    returned array is writeable.
+    come off the result socket, so the driver's Python process holds at
+    most two arrays whatever the host count. The driver JVM still holds
+    every host partial at once: `collectAndServe` collects them all
+    before it serves the first. With one host that is one array crossing
+    to the driver, with no shuffle, no pickle and no second output
+    buffer; the returned array is writeable.
 
     `make_array` runs on up to k threads of a host at once (see
     `_host_fold`): it must be thread-safe, and it should release the GIL,
@@ -573,7 +549,7 @@ def pmapreduce_dense_elsum(spark: SparkSession, n_tasks: int, make_array):
     from pyspark.traceback_utils import SCCallSiteSync
     from pyspark.util import _load_from_socket
 
-    frames = _ArrayFrames(_frame_bytes())
+    frames = _ArrayFrames()
     rdd = _host_partials(spark, n_tasks, make_array)._reserialize(frames)
     sc = spark.sparkContext
     # `collect()` without its `list(...)`: the partials are folded lazily

@@ -491,9 +491,8 @@ def _fold_in_thread(make_array, ids, threads):
 
 
 def test_host_fold_side_thread_error_surfaces():
-    # make_array raising on a thread other than the first aborts the
-    # round's barrier: the fold ends, and the error raised is the
-    # original one, not the other threads' BrokenBarrierError
+    # make_array raising on a thread other than the first ends the fold,
+    # and the error raised is the original one
     def gen(i):
         if i == 5:  # thread 1 of the second round
             raise ValueError("make_array failed on id 5")
@@ -506,8 +505,8 @@ def test_host_fold_side_thread_error_surfaces():
 
 def test_host_fold_overflow_in_one_stripe_surfaces():
     # only the last rows overflow int8, so only the last thread's
-    # stripe add raises; the others wait at the barrier and must be
-    # released, and the OverflowError itself must reach the caller
+    # stripe add raises; the fold must end, and the OverflowError itself
+    # must reach the caller
     def gen(i):
         a = np.zeros((8, 5), dtype=np.int8)
         a[6:] = 60
@@ -516,6 +515,22 @@ def test_host_fold_overflow_in_one_stripe_surfaces():
     raised = _fold_in_thread(gen, range(4), 4)
     assert len(raised) == 1 and type(raised[0]) is OverflowError
     assert "headroom" in str(raised[0])
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_host_fold_refuses_mismatched_shapes(k):
+    # one shape rule on every path: shapes that np.add would broadcast
+    # are refused whatever the thread count, and by the driver fold
+    from parallelutilities_jl_spark.operators.mapreduce import _fold
+
+    def gen(i):
+        return np.ones((1, 3)) if i == 2 else np.ones((4, 3))
+
+    raised = _fold_in_thread(gen, range(6), k)
+    assert len(raised) == 1 and type(raised[0]) is ValueError
+    assert "shape (1, 3)" in str(raised[0])
+    with pytest.raises(ValueError, match="shape"):
+        _fold([np.ones((4, 3)), np.ones((1, 3))])
 
 
 def _frames(data):
@@ -543,9 +558,9 @@ _FRAME_CASES = {
 
 @pytest.mark.parametrize("case", sorted(_FRAME_CASES))
 def test_array_frames_round_trip(case):
-    # a header frame, then the C-order bytes in frames of at most
-    # frame_bytes (7 splits elements across frames), read back by
-    # readinto into a writeable array of the same dtype and shape
+    # a header frame, then the C-order bytes as one frame (empty for an
+    # empty array), read back by readinto into a writeable array of the
+    # same dtype and shape
     import io
     import json
 
@@ -553,19 +568,14 @@ def test_array_frames_round_trip(case):
 
     arrays = [_FRAME_CASES[case](i) for i in range(3)]
     out = io.BytesIO()
-    _ArrayFrames(7).dump_stream(iter(arrays), out)
+    _ArrayFrames().dump_stream(iter(arrays), out)
     frames = _frames(out.getvalue())
-    pos = 0
-    for a in arrays:
-        dtype, shape = json.loads(frames[pos])
+    assert len(frames) == 2 * len(arrays)
+    for a, head, data in zip(arrays, frames[::2], frames[1::2]):
+        dtype, shape = json.loads(head)
         assert (dtype, tuple(shape)) == (a.dtype.str, a.shape)
-        n_data = -(-a.nbytes // 7)
-        data = frames[pos + 1 : pos + 1 + n_data]
-        assert all(0 < len(f) <= 7 for f in data)
-        assert b"".join(data) == np.ascontiguousarray(a).tobytes()
-        pos += 1 + n_data
-    assert pos == len(frames)
-    back = list(_ArrayFrames(7).load_stream(io.BytesIO(out.getvalue())))
+        assert data == np.ascontiguousarray(a).tobytes()
+    back = list(_ArrayFrames().load_stream(io.BytesIO(out.getvalue())))
     assert len(back) == len(arrays)
     for a, b in zip(arrays, back):
         assert b.dtype == a.dtype and b.shape == a.shape
@@ -574,16 +584,15 @@ def test_array_frames_round_trip(case):
 
 
 @pytest.mark.parametrize("case", sorted(_FRAME_CASES))
-def test_dense_elsum_collect_reassembles_frames(spark, monkeypatch, case):
-    # the collect twin end to end with 7-byte frames: every host partial
-    # crosses Python -> JVM -> driver in many frames and is rebuilt in
-    # place; the sum equals the left fold in dtype, shape and bytes
+def test_dense_elsum_collect_keeps_dtype_and_bytes(spark, monkeypatch, case):
+    # the collect twin end to end: every host partial crosses Python ->
+    # JVM -> driver as raw frames and is rebuilt in place; the sum equals
+    # the left fold in dtype, shape and bytes
     import functools
 
     from parallelutilities_jl_spark.operators import mapreduce
 
     gen = _FRAME_CASES[case]
-    monkeypatch.setattr(mapreduce, "_frame_bytes", lambda: 7)
     _slots(monkeypatch, 2, 2)
     out = mapreduce.pmapreduce_dense_elsum(spark, 6, gen)
     ref = functools.reduce(np.add, map(gen, range(6)))
@@ -594,8 +603,9 @@ def test_dense_elsum_collect_reassembles_frames(spark, monkeypatch, case):
 
 def test_dense_elsum_driver_holds_two_arrays(spark, monkeypatch):
     # the driver folds the host partials as they come off the result
-    # socket, in partition order, so it holds the accumulator and the
-    # partial being read: 8 hosts, yet under 2.5 arrays traced
+    # socket, in partition order, so its Python process holds the
+    # accumulator and the partial being read: 8 hosts, yet under 2.5
+    # arrays traced (tracemalloc sees no JVM heap)
     import tracemalloc
 
     from parallelutilities_jl_spark.operators.mapreduce import (
