@@ -339,7 +339,7 @@ def main() -> None:
         # resident-index case). `release_cached_blocks` clears the
         # resident memo of fits and graphs AND unpersists every
         # persistent RDD —
-        # catalog.clearCache alone left the 49 localCheckpoint/persist
+        # catalog.clearCache alone left the `session.materialize`
         # sites' blocks pinned, and over a 90-head roster that
         # accumulation degraded the round-13 driver run progressively
         # (heavy heads 5-8x) while per-head isolation showed ~1x. Then

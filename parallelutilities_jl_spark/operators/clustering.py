@@ -9,7 +9,7 @@ Lloyd's algorithm, Spark-idiomatically:
   centroid matrix (tiny) is collected and re-broadcast as literal
   arrays each round, exactly MLlib's k-means loop; assignment and mean
   updates stay fully distributed. The driver never sees a data row.
-* **assignment is a codegen projection** — per-centroid squared-L2 as a
+* **assignment is one projection** — per-centroid squared-L2 as a
   `aggregate(zip_with(...))` fold over floor-quantized int64 terms (an
   EXACT sum, identical on every engine/combine order — see `_sq_dist`),
   argmin via `array_min` over `struct(dist, cid)` (lexicographic struct
@@ -39,7 +39,7 @@ from parallelutilities_jl_spark.operators.similarity import (
     DOT_SCALE,
     _emb_double,
 )
-from parallelutilities_jl_spark.session import resident
+from parallelutilities_jl_spark.session import materialize, resident
 from parallelutilities_jl_spark.sources.fixtures import load_table
 
 K = 8
@@ -92,12 +92,17 @@ def _assign(emb: DataFrame, centroids: dict[int, list[float]]) -> DataFrame:
     EXACT flat argmin over every centroid. An empty model (no vectors
     to init from) assigns nothing — the empty-corpus contract, same
     schema. Below TWO_LEVEL_JOIN_MIN_K the argmin is an inlined
-    literal-array expression (fastest at small k: in-register,
-    codegen'd, no exchange); at or above it the same arithmetic runs
-    as a broadcast model-table join (`_assign_join`) because the
-    literal expression's plan size is O(k·dim) — a planning-time bomb
-    when k ∝ N (the round-11 finding at k_eff=80). Both paths are
-    pinned row-identical in tests/test_fit_cache.py."""
+    literal-array expression: one projection, with no k-fold row
+    expansion and no `groupBy` exchange (not faster per row — the
+    `aggregate`/`zip_with` fold is `CodegenFallback`, interpreted on
+    both paths). Forcing the join path (gate 0) on `kmeans_assign` at
+    sf0.1 measured 4.33 s against 2.79 s for the literal path (build
+    3.62 vs 2.59 s; 7 alternating reps, identical 2000 rows). At or
+    above the gate the same arithmetic runs as a broadcast model-table
+    join (`_assign_join`) because the literal expression's plan size is
+    O(k·dim) — a planning-time bomb when k ∝ N (the round-11 finding
+    at k_eff=80). Both paths are pinned row-identical in
+    tests/test_fit_cache.py."""
     if not centroids:
         return emb.select(
             "vec_id", F.lit(0).cast("long").alias("cluster")
@@ -176,11 +181,10 @@ def _fit_state(
         # overhead dominates compute (at corpus scale the scan arrives
         # already in thousands of splits and this repartition is a
         # no-op-sized rebalance)
-        emb = (
+        emb = materialize(  # reused every Lloyd's round
             _emb_double(spark, sf_dir)
             .select("vec_id", "emb")
             .repartition(min(8, spark.sparkContext.defaultParallelism))
-            .localCheckpoint()  # reused every Lloyd's round; frees on GC
         )
         init = emb.filter(F.col("vec_id") < k).collect()
         centroids = {
@@ -189,9 +193,9 @@ def _fit_state(
         }
         if not centroids:  # empty corpus: no model, no assignments
             return emb, {}
-        emb_long = emb.select(
-            "vec_id", F.posexplode("emb").alias("idx", "val")
-        ).localCheckpoint()
+        emb_long = materialize(
+            emb.select("vec_id", F.posexplode("emb").alias("idx", "val"))
+        )
         return emb, _lloyd_rounds(emb, emb_long, centroids, iters)
 
     emb, centroids = resident(spark, ("flat_fit", sf_dir, k, iters), build)
@@ -465,8 +469,10 @@ def _two_level(
 # quantized integer distance and the (d, id) struct-min tiebreak are
 # the same arithmetic whether the centroid is a literal or a column.
 # The fixture tiers (k_eff ≤ ~10) stay on the expression path — faster
-# at small k where in-register evaluation beats a join — and the 10x
-# stress tier (k_eff = 80) exercises the join path.
+# at small k because it is one projection, with no k-fold row expansion
+# and no groupBy exchange (the fold itself is CodegenFallback on both
+# paths; see `_assign` for the measured fork) — and the 10x stress tier
+# (k_eff = 80) exercises the join path.
 TWO_LEVEL_JOIN_MIN_K = 64
 
 
@@ -655,7 +661,7 @@ def _lloyd_sample(
     SQL replay (`_kmeans_ctes_sampled`) mirrors every round. Returns
     the centroid dict (empty on an empty sample — the empty-corpus
     contract)."""
-    sample = sample.localCheckpoint(eager=False)
+    sample = materialize(sample)
     init = sample.orderBy("vec_id").limit(k).collect()
     centroids = {
         int(r["vec_id"]): list(r["emb"])
@@ -663,9 +669,9 @@ def _lloyd_sample(
     }
     if not centroids:
         return {}
-    emb_long = sample.select(
-        "vec_id", F.posexplode("emb").alias("idx", "val")
-    ).localCheckpoint(eager=False)
+    emb_long = materialize(
+        sample.select("vec_id", F.posexplode("emb").alias("idx", "val"))
+    )
     return _lloyd_rounds(sample, emb_long, centroids, iters)
 
 
@@ -1522,14 +1528,13 @@ def _pq_fit_state(
     returned codebook is a per-call copy (`_model_copy`)."""
 
     def build():
+        # read by the fit, encode, and LUT passes
         emb = _pq_sliced(
-            _emb_double(spark, sf_dir)
-            .select("vec_id", "emb")
-            .repartition(min(8, spark.sparkContext.defaultParallelism))
-            # cached, not checkpointed: read by the fit, encode, and LUT
-            # passes (first collect materializes it lazily); a clearCache
-            # between queries just recomputes — correctness unaffected
-            .cache()
+            materialize(
+                _emb_double(spark, sf_dir)
+                .select("vec_id", "emb")
+                .repartition(min(8, spark.sparkContext.defaultParallelism))
+            )
         )
         init = emb.filter(F.col("vec_id") < PQ_K).collect()
         cb = {
@@ -1767,7 +1772,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within-cell self-join (same rationale as the scaled variant:
     # keeps Catalyst planning O(1) in k_eff instead of re-walking the
     # assignment subtree inside the join tree)
-    assign = _assign(emb_all, centroids).localCheckpoint()
+    assign = materialize(_assign(emb_all, centroids))
     return _semdedup_prune_census(
         emb_all.join(assign, "vec_id"), n_cells=len(centroids)
     )
@@ -1887,12 +1892,11 @@ def _sampled_fit(
     from parallelutilities_jl_spark.operators.pipeline import _KNUTH
 
     def build():
-        emb_all = (
+        emb_all = materialize(
             _emb_double(spark, sf_dir)
             .select("vec_id", "emb")
             .filter(F.size("emb") > 0)
             .repartition(min(8, spark.sparkContext.defaultParallelism))
-            .localCheckpoint()
         )
         n = emb_all.count()
         k_eff = max(K, n // cell_target)
@@ -1913,27 +1917,12 @@ def _sampled_fit(
     return emb_all, _model_copy(centroids)
 
 
-def _sampled_fit_assign(
-    spark: SparkSession,
-    sf_dir: str,
-    cell_target: int = SEMDEDUP_CELL_TARGET,
-    spc: int = SEMDEDUP_FIT_SPC,
-    iters: int = IVF_FIT_ITERS,
-) -> tuple[DataFrame, DataFrame]:
-    """`_sampled_fit` + the single-cell two-level assignment: returns
-    (checkpointed (vec_id, emb) corpus frame, lazy (vec_id, cluster))."""
-    emb_all, centroids = _sampled_fit(
-        spark, sf_dir, cell_target, spc, iters
-    )
-    return emb_all, _two_level_pick(emb_all, centroids)
-
-
 def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup, production shape — the linear-quantizer variant of
     `q_semantic_dedup` (which fits on the FULL corpus and assigns flat,
     the knowingly super-linear term in SCALING.md when k ∝ N):
     bounded-sample fit + hierarchical assignment
-    (`_sampled_fit_assign`), then prune + census within cells exactly
+    (`_sampled_fit` + `_two_level_pick`), then prune + census within cells exactly
     as the flat variant (`_semdedup_prune_census` — that stage was
     always linear, O(cell) per row).
 
@@ -1945,12 +1934,11 @@ def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (`_oracle_semantic_scaled`) replays sample, fit, grouping,
     both argmin levels, and the prune bit-for-bit."""
     emb_all, centroids = _sampled_fit(spark, sf_dir)
-    assign = _two_level_pick(emb_all, centroids)
     # materialize the (vec_id, cluster) assignment before the
     # within-cell self-join for the same reason as _build_mutual_edges:
     # keeps Catalyst planning O(1) in k_eff instead of re-walking the
     # k_eff-centroid argmin expression inside the join tree
-    assign = assign.localCheckpoint()
+    assign = materialize(_two_level_pick(emb_all, centroids))
     return _semdedup_prune_census(
         emb_all.join(assign, "vec_id"), n_cells=len(centroids)
     )
@@ -2169,7 +2157,7 @@ def _power_direction_checkpointed(
     return resident(
         spark,
         ("power_direction", sf_dir, PI_ITERS, PI_SHIFT),
-        lambda: q_embedding_power_iteration(spark, sf_dir).localCheckpoint(),
+        lambda: materialize(q_embedding_power_iteration(spark, sf_dir)),
     )
 
 
@@ -2400,7 +2388,7 @@ def _mutual_edges_checkpointed(
     return resident(
         spark,
         ("mutual_edges", sf_dir, KNN_GRAPH_NPROBE),
-        lambda: _build_mutual_edges(spark, sf_dir).localCheckpoint(),
+        lambda: materialize(_build_mutual_edges(spark, sf_dir)),
     )
 
 
@@ -2466,11 +2454,10 @@ def _build_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # outright (guide §2.3/§2.4). Measured at sf0.1: 2.28 M scored
     # rows -> 1 per distinct pair; interleaved same-boot duel
     # 3.33/2.54 s -> 2.22/2.17 s.
-    pset = (
+    pset = materialize(
         _two_level_probes(emb_all, centroids, KNN_GRAPH_NPROBE)
         .groupBy("vec_id")
         .agg(F.array_sort(F.collect_set("cluster")).alias("pcells"))
-        .localCheckpoint()
     )
     probes = pset.select(
         "vec_id", "pcells", F.explode("pcells").alias("cluster")
@@ -2539,7 +2526,7 @@ def _build_mutual_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row) structs emits both directions inside the SAME stage: the
     # scored chain plans and executes exactly once, the mirror is a
     # narrow flatmap, and nothing needs materializing (a round-11
-    # localCheckpoint variant re-paid the whole pair frame as
+    # materialized variant re-paid the whole pair frame as
     # serialization — a wash at the 10x tier where the pair list is
     # 18M rows).
     pair = half.select(

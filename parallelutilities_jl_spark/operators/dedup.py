@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallelutilities_jl_spark.functions import texthash as TH
+from parallelutilities_jl_spark.session import materialize
 from parallelutilities_jl_spark.sources.fixtures import (
     load_table,
     load_table_parallel,
@@ -298,7 +299,7 @@ def _minhash_candidates(spark: SparkSession, sf_dir: str):
     candidate×shingle joins that scale with Σ_cand |shingles| —
     strictly more exchanged bytes than one array column over the
     (bucket-capped) candidate rows."""
-    per_doc = minhash_per_doc(spark, sf_dir).localCheckpoint()
+    per_doc = materialize(minhash_per_doc(spark, sf_dir))
     cands = candidate_pairs(lsh_bands(per_doc))
 
     def side(s: str) -> DataFrame:
@@ -337,9 +338,12 @@ def _exact_jaccard_pairs(
     candidate pair: at the 10× stress tier (~1000× qualifying pairs)
     the array-carrying joins dominated wall
     (tools/stress_fingerprints.py; identical output asserted)."""
-    per = shingle_arrays(spark, sf_dir).select(
-        "doc_id", "shs", F.size("shs").cast("long").alias("n")
-    ).localCheckpoint()  # one narrow pass feeds dfreq, candidates, hot sets
+    # one narrow pass feeds dfreq, candidates, hot sets
+    per = materialize(
+        shingle_arrays(spark, sf_dir).select(
+            "doc_id", "shs", F.size("shs").cast("long").alias("n")
+        )
+    )
     sh = per.select("doc_id", F.explode("shs").alias("sh"))
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     cold_keys = dfreq.filter(F.col("df") <= NGRAM_MAX_DF).select("sh")
@@ -702,7 +706,7 @@ def q_lsh_banding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (round-17 fusion, guide §2.4 — share one exchange):
     the signature frame is computed once (zero-shuffle narrow map,
-    localCheckpoint shared by all four geometries), and ALL FOUR
+    materialized once for all four geometries), and ALL FOUR
     geometries ride ONE config-tagged band frame — a single explode of
     the 16+8+4+2 (cfg, band, key) entries — so the whole planner is one
     (cfg, band, key) exchange feeding the bucket stats, the capped
@@ -716,7 +720,7 @@ def q_lsh_banding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     global aggregates emitted a zero row per config)."""
     from pyspark.sql.window import Window as W
 
-    sig = minhash_per_doc(spark, sf_dir).localCheckpoint()
+    sig = materialize(minhash_per_doc(spark, sf_dir))
     entries = [
         F.struct(
             F.lit(bands).cast("long").alias("cfg"),
@@ -1430,7 +1434,7 @@ def connected_components(
     Each round is a node-keyed shuffle (neighbor min) plus a label-keyed
     shuffle (pointer jump — composing with the previous round's label
     map, which shortcuts descending label chains and measured 15 → 13
-    rounds on the sf0.1 mutual-kNN graph); `localCheckpoint` truncates
+    rounds on the sf0.1 mutual-kNN graph); `materialize` truncates
     the lineage every round, and every `_CC_STATS_RESET_EVERY` rounds
     the label frame takes a parquet round-trip: Catalyst's
     size-in-bytes estimate for a join is the PRODUCT of its children's,
@@ -1446,14 +1450,13 @@ def connected_components(
     # materialize the edge list once — every propagation round reuses it,
     # and without this the (possibly expensive) edge-producing pipeline
     # re-executes per round
-    und = (
+    und = materialize(
         edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .union(
             edges.select(
                 F.col("doc_b").alias("u"), F.col("doc_a").alias("v")
             )
         )
-        .localCheckpoint()
     )
     # PARTITION-LOCAL CONTRACTION (round-16 optimization, the standard
     # two-phase CC prelude — cf. GraphFrames/GraphX local aggregation
@@ -1538,9 +1541,7 @@ def connected_components(
         )
     contract = n_und > _CC_CONTRACT_MIN_ROWS
     if contract:
-        app = und.mapInPandas(
-            _local_uf, "n long, r long"
-        ).localCheckpoint()
+        app = materialize(und.mapInPandas(_local_uf, "n long, r long"))
         # node -> its min local root (one row per node); root edges =
         # the other roots the node co-appears with (connectivity
         # witnesses between partitions — every original edge is inside
@@ -1552,23 +1553,25 @@ def connected_components(
             .filter(F.col("r") != F.col("r0"))
             .select(F.col("r0").alias("u"), F.col("r").alias("v"))
         )
-        loop_und = redges.union(
-            redges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).localCheckpoint()
+        loop_und = materialize(
+            redges.union(
+                redges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+        )
     else:
         labels0 = None
         loop_und = und
     # init fuses the first propagation round: lbl = min(own id, min
     # neighbor id) is one groupBy over the edge list — cheaper than a
     # full join round, and every node with an edge appears as a `u`
-    labels = (
+    labels = materialize(
         loop_und.groupBy("u")
         .agg(F.min("v").alias("mv"))
         .select(
             F.col("u").alias("n"),
             F.least(F.col("u"), F.col("mv")).alias("lbl"),
         )
-    ).localCheckpoint()
+    )
     spark = edges.sparkSession
     state = {"dir": None, "local": False}
 
@@ -1603,7 +1606,7 @@ def connected_components(
         if state["dir"] is not None and converged:
             # the surviving frame may lazily read the spill files —
             # pin the rows in block storage before deleting them
-            labels = labels.localCheckpoint()
+            labels = materialize(labels)
     finally:
         # an exception mid-round (or in the parquet write itself) must
         # not leak pu_cc_spill_* dirs (round-10 advisor)
@@ -1675,11 +1678,13 @@ def _cc_loop(spark, und, labels, max_iters, spill):
         # checkpoints anyway, so convergence detection is a predicate
         # count over checkpointed blocks — not the extra shuffle join
         # of new-vs-old labels each round previously paid
-        stepped = cur.select(
-            "n",
-            F.col("h").alias("lbl"),
-            (F.col("h") < F.col("prev")).alias("chg"),
-        ).localCheckpoint()
+        stepped = materialize(
+            cur.select(
+                "n",
+                F.col("h").alias("lbl"),
+                (F.col("h") < F.col("prev")).alias("chg"),
+            )
+        )
         labels = stepped.select("n", "lbl")
         if stepped.filter("chg").count() == 0:
             converged = True
@@ -1715,7 +1720,7 @@ def q_quality_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-capped); on top of it this adds one equi-join of documents with
     the (smaller) component map and one groupBy(component) — both plain
     key shuffles, nothing data-sized beyond them. `full` is deliberately
-    NOT cached: the component map is already localCheckpoint-materialized
+    NOT cached: the component map is already materialized
     inside `connected_components`, so recomputing `full` for the second
     consumer is a pushed-down column scan + scalar scoring — far cheaper
     at corpus scale than pinning a corpus-sized frame in executor memory
@@ -1962,9 +1967,8 @@ def q_link_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and deg, and without truncation Spark replans (and re-executes)
     # the edge synthesis + 1-row count broadcast per round — the classic
     # iterative-lineage blowup (27 exchanges → 9 at 3 rounds here)
-    edges = (
-        docs.crossJoin(F.broadcast(n))
-        .select(
+    edges = materialize(
+        docs.crossJoin(F.broadcast(n)).select(
             F.col("doc_id").alias("u"),
             F.explode(
                 F.array(
@@ -1975,13 +1979,8 @@ def q_link_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("v"),
         )
-        .localCheckpoint()
     )
-    deg = (
-        edges.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
+    deg = materialize(edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
     r = docs.select(
         F.col("doc_id").alias("u"),
         F.lit(PR_SCALE).cast("long").alias("r"),
@@ -2074,7 +2073,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         % F.col("n")
         for j in range(1, TRI_OUT_DEG + 1)
     ]
-    und = (
+    # materialized: the edge synthesis runs once for its 4 consumers
+    # (wedge join ×2, degrees, edge count)
+    und = materialize(
         docs.crossJoin(F.broadcast(n))
         .select(
             F.col("doc_id").alias("u"),
@@ -2086,11 +2087,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("u", "v").alias("b"),
         )
         .distinct()
-        # lazy checkpoint: truncates lineage so the edge synthesis runs
-        # once for its 4 consumers (wedge join ×2, degrees, edge count)
-        # without executing at plan-build time (keeps the query lazy for
-        # the plan audit and driver)
-        .localCheckpoint(eager=False)
     )
     e1 = und.alias("e1")
     e2 = und.select(

@@ -32,8 +32,6 @@ from __future__ import annotations
 
 import struct
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
 
 def _boxes(data: bytes, start: int, end: int):
     """Yield (type, payload_start, box_end) for the sibling boxes in

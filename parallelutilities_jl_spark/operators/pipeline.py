@@ -32,6 +32,7 @@ from parallelutilities_jl_spark.operators.text import (
     dd_quality_score,
     quality_parts,
 )
+from parallelutilities_jl_spark.session import materialize
 from parallelutilities_jl_spark.sources.fixtures import (
     EVAL_SOURCE,
     load_table,
@@ -813,14 +814,16 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`pack_sequences` over the fixture corpus (see that docstring for
     the sharded-cumsum design)."""
     docs = load_table_parallel(spark, sf_dir, "documents")
-    # cache the tiny (doc_id, n_tokens) projection: 16 bytes/doc, and it
-    # keeps the corpus-sized scan + regex tokenization to ONE pass — the
-    # max-id probe, window branch, and offsets branch all reread it
-    # otherwise (4 FileScans, tokenization twice, in the uncached plan)
-    toks = docs.select(
-        "doc_id",
-        F.size(TH.words(F.col("text"))).cast("long").alias("n_tokens"),
-    ).localCheckpoint()
+    # materialize the tiny (doc_id, n_tokens) projection: 16 bytes/doc,
+    # and it keeps the corpus-sized scan + regex tokenization to ONE
+    # pass — the max-id probe, window branch, and offsets branch all
+    # reread it otherwise (4 FileScans, tokenization twice)
+    toks = materialize(
+        docs.select(
+            "doc_id",
+            F.size(TH.words(F.col("text"))).cast("long").alias("n_tokens"),
+        )
+    )
     return pack_sequences(toks)
 
 
@@ -880,10 +883,11 @@ def shuffle_positions(
 def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`shuffle_positions` over the fixture corpus (see that docstring
     for the equi-width shard design)."""
+    # the window branch and the offsets branch each read the parquet's
+    # doc_id column: materializing it first saved no scan and cost
+    # 0.14 s of wall at sf0.1 (SCALING.md, one materialization rule)
     docs = load_table(spark, sf_dir, "documents")
-    # tiny cached projection (8 bytes/doc): the window branch and the
-    # offsets branch read it without a second corpus scan
-    return shuffle_positions(docs.select("doc_id").localCheckpoint())
+    return shuffle_positions(docs.select("doc_id"))
 
 
 ORACLE_CORPUS_SHUFFLE = f"""
@@ -910,38 +914,35 @@ def q_training_order_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition over data."""
     from parallelutilities_jl_spark.operators.dedup import _simhash_df
 
-    # Survivor lineage is materialized ONCE via eager localCheckpoint
-    # (narrow id+hash+count frame — tiny next to the corpus), not
-    # .cache(): checkpoint blocks are freed by the ContextCleaner when
-    # the frame is GC'd, whereas CacheManager entries pin executor
-    # memory until an explicit clearCache — a leak across a 150-query
-    # sweep. Checkpointing also truncates the dedup lineage, so the
-    # downstream pack/join plan no longer re-plans the fingerprint
-    # stage per consumer branch. `with_n_tokens` rides the token count
-    # on the same narrow fingerprint pass — the corpus is scanned and
-    # tokenized exactly once, and the old second scan + doc-keyed
-    # n_tokens join are gone.
-    fp = _simhash_df(spark, sf_dir, with_n_tokens=True).localCheckpoint()
+    # Survivor lineage is materialized ONCE (narrow id+hash+count
+    # frame — tiny next to the corpus): it truncates the dedup lineage,
+    # so the downstream pack/join plan no longer re-plans the
+    # fingerprint stage per consumer branch. `with_n_tokens` rides the
+    # token count on the same narrow fingerprint pass — the corpus is
+    # scanned and tokenized exactly once, and the old second scan +
+    # doc-keyed n_tokens join are gone.
+    fp = materialize(_simhash_df(spark, sf_dir, with_n_tokens=True))
     # canonical survivor in ONE shuffle: lexicographic struct-min picks
     # the min-doc_id row per fingerprint and its n_tokens rides along —
     # the previous groupBy(min) + left_semi join paid a second
     # corpus-keyed exchange and a join for the same rows
-    kept = (
+    kept = materialize(
         fp.groupBy("simhash")
         .agg(
             F.min(F.struct("doc_id", "n_tokens")).alias("m")
         )
         .select(F.col("m.doc_id").alias("doc_id"), F.col("m.n_tokens").alias("n_tokens"))
-        .localCheckpoint()
     )
     pos = shuffle_positions(kept.select("doc_id"))
-    # checkpointed: pack_sequences' max-id probe, window branch, and
+    # materialized: pack_sequences' max-id probe, window branch, and
     # offsets branch would otherwise each recompute the shuffle windows
-    ordered = kept.join(pos, "doc_id").select(
-        F.col("doc_id").alias("orig_doc_id"),
-        F.col("shuffle_pos").alias("doc_id"),  # pack along training order
-        "n_tokens",
-    ).localCheckpoint()
+    ordered = materialize(
+        kept.join(pos, "doc_id").select(
+            F.col("doc_id").alias("orig_doc_id"),
+            F.col("shuffle_pos").alias("doc_id"),  # pack along training order
+            "n_tokens",
+        )
+    )
     packed = pack_sequences(ordered.select("doc_id", "n_tokens"))
     return packed.join(ordered, ["doc_id", "n_tokens"]).select(
         F.col("orig_doc_id").alias("doc_id"),
@@ -1133,7 +1134,7 @@ def q_pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EAGER-BUILD contract: constructing this DataFrame runs nearly
     the whole computation — the CC component executes at build time
-    and the four lazy components materialize via localCheckpoint on a
+    and the four lazy components are `materialize`d on a
     side thread (round-16 overlap optimization), pinning their blocks
     until released; callers needing a lazy plan must compose the
     component queries themselves.
@@ -1165,11 +1166,13 @@ def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs; only past that gate does CC become a sequence of small
     bounded shuffles that underfills the cluster. Either way the
     build-time jobs leave cores idle, so the four lazy components
-    materialize (localCheckpoint, S rows each) on a second
-    job-submitting thread WHILE they run — Spark schedules jobs from
-    both threads onto the same executor pool. Whether the overlap
-    still pays on the tiny-graph path is unmeasured. The final action
-    then only joins five S-row frames.
+    materialize (S rows each) on a second job-submitting thread WHILE
+    they run — Spark schedules jobs from both threads onto the same
+    executor pool. On the tiny-graph path the overlap still pays: over
+    8 alternating reps at sf0.1 with identical rows, 5.40 s median wall
+    [5.27, 6.04], 15.5 s CPU, against 5.95 s [5.78, 6.60], 16.1 s CPU
+    with no thread and `rest` joined lazily. The final action then
+    only joins five S-row frames.
     Results are unchanged (same component frames, same join), and the
     four-way lazy subtree still shares its tokenize exchange via AQE
     stage reuse because it stays ONE plan. The side thread is an
@@ -1206,7 +1209,7 @@ def q_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _materialize_rest() -> None:
         try:
-            box["rest"] = rest.localCheckpoint()
+            box["rest"] = materialize(rest)
         except BaseException as e:  # propagate to the caller thread
             box["err"] = e
 
@@ -1652,10 +1655,8 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus); both n-gram histograms then derive FROM tf — lang
     # rides the grouping key (it is functionally dependent on doc_id)
     # instead of forcing a second corpus scan
-    tf = (
-        fb.groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
+    tf = materialize(
+        fb.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("tf"))
     )
     hist = tf.groupBy("b").agg(
         F.sum("tf").alias("c_r"),
@@ -1881,9 +1882,7 @@ def q_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table_parallel(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
-    per_doc = (
-        minhash_per_doc(spark, sf_dir).join(src, "doc_id").localCheckpoint()
-    )
+    per_doc = materialize(minhash_per_doc(spark, sf_dir).join(src, "doc_id"))
     # source rides the band explode (round-16): the doc-keyed
     # join-back exchange the old two-step paid is gone
     bands = lsh_bands(per_doc, carry=("source",))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from parallelutilities_jl_spark.functions import texthash as TH
 from parallelutilities_jl_spark.operators.text import _qlog2
+from parallelutilities_jl_spark.session import materialize
 from parallelutilities_jl_spark.sources.fixtures import load_table_parallel
 
 # BM25 constants (Robertson k1/b defaults); written as exact double
@@ -69,7 +70,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 documents for a fixed 3-term query.
 
     Plan shape: ONE tokenize pass → per-doc (dl, query-term
-    occurrences) projection, materialized (localCheckpoint at build)
+    occurrences) projection, materialized at build
     because the corpus stats and the postings both consume it →
     (doc, term) tf hash-agg → broadcast-join the 3-row df table and
     the 1-row corpus stats → integer contribution → per-doc SUM →
@@ -86,16 +87,14 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are the same per document; filter(NULL) stays NULL and
     # explode(NULL) emits nothing, exactly like the old explode+isin.
     qarr = F.array(*[F.lit(t) for t in BM25_QUERY])
-    base = (
-        docs.select("doc_id", TH.words(F.col("text")).alias("ws"))
-        .select(
+    base = materialize(
+        docs.select("doc_id", TH.words(F.col("text")).alias("ws")).select(
             "doc_id",
             F.size("ws").cast("long").alias("dl"),
             F.filter(
                 "ws", lambda w: F.array_contains(qarr, w)
             ).alias("qws"),
         )
-        .localCheckpoint()
     )
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parallelutilities_jl_spark.functions import texthash as TH
+from parallelutilities_jl_spark.session import materialize
 from parallelutilities_jl_spark.sources.fixtures import load_table_parallel
 
 STOPWORDS = ("the", "a", "of", "and", "in")
@@ -664,7 +665,7 @@ FROM t
 
 
 # Re-encode the working word histogram (apply pending merges, truncate
-# the plan with a localCheckpoint) every this many rounds: bounds the
+# the plan with `materialize`) every this many rounds: bounds the
 # per-round literal-REPLACE chain at R, so total replace work is
 # O(merges·R·vocab) — LINEAR in merge count — instead of the unbounded
 # chain's O(merges²·vocab). At a real tokenizer's 32k merges the
@@ -685,7 +686,7 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
     docs = load_table_parallel(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    vocab = (
+    vocab = materialize(  # reused every merge round
         docs.select(F.explode(TH.words(F.col("text"))).alias("word"))
         .filter(F.col("word").rlike(_BPE_WORD_RE))
         .groupBy("word")
@@ -693,7 +694,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
         .select(
             F.regexp_replace("word", "(.)", r"($1)").alias("w"), "freq"
         )
-        .localCheckpoint()  # reused every merge round; freed on GC
     )
 
     def pair_counts(wcol: Column, frame: DataFrame) -> DataFrame:
@@ -748,9 +748,11 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
         if len(pending) >= BPE_REENCODE_EVERY and r + 1 < BPE_MERGES:
             # bake the pending merges in and truncate the plan — the
             # next round's replace chain restarts at length 0
-            work = work.select(
-                _apply_merges(F.col("w"), pending).alias("w"), "freq"
-            ).localCheckpoint()
+            work = materialize(
+                work.select(
+                    _apply_merges(F.col("w"), pending).alias("w"), "freq"
+                )
+            )
             pending = []
     return vocab, merges, out
 
@@ -773,7 +775,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized work is ONE tokenize + groupBy(word) pass; everything
     after runs on the word-frequency vocabulary (bounded by vocabulary
     growth, not corpus size — the classic BPE-on-histogram trick), kept
-    distributed and localCheckpoint-materialized once. Each merge round
+    distributed and materialized once. Each merge round
     is one map-side-combinable pair-count shuffle plus a 1-row
     TakeOrderedAndProject argmax to the driver; the chosen pair is
     applied as a literal REPLACE (narrow map) in the next round's plan,

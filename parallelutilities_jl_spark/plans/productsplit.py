@@ -31,8 +31,6 @@ from typing import Iterator, Optional, Sequence
 
 from parallelutilities_jl_spark.sources.ranges import RangeSpec
 
-Tuple_ = tuple
-
 
 class TaskNotPresentError(KeyError):
     """A value is absent from the task set (reference src/productsplit.jl:1-7)."""

@@ -26,7 +26,7 @@ import sys
 import warnings
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the process's usable cores unless SPARK_GRAFT_CPUS names a count
 DEFAULT_CPUS = int(
@@ -168,20 +168,42 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 # Cached-block lifetime policy (round-13 verdict items 1/4)
 # ---------------------------------------------------------------------------
 #
-# The engine pins blocks two ways: per-call `localCheckpoint()` /
-# `persist()` inside individual queries (freed only when the RDD handle
-# is GC'd AND the ContextCleaner runs), and the resident memo below,
-# which intentionally keeps fitted models and graphs (checkpointed
-# frames) alive for reuse within a session. Neither is freed by
-# `spark.catalog.clearCache()` (which only drops catalog-cached
-# relations), so a long-lived session running the full roster
-# accumulates storage-memory blocks without bound — the round-13 driver
-# bench degraded progressively (heavy heads 5-8x) with exactly that
-# signature. The policy: after a query's result has been fully
-# materialized (written/collected), the caller may release EVERYTHING —
-# the memo first (so no entry keeps a handle to a frame whose
-# checkpoint blocks are about to vanish; a localCheckpoint has no
-# lineage to recompute from), then every persistent RDD in the context.
+# The engine pins blocks two ways: `materialize` inside individual
+# queries, and the resident memo below, which intentionally keeps
+# fitted models and graphs (materialized frames) alive for reuse within
+# a session. Two `.cache()` frames (the ann_int8 index and the
+# containment shingle frame) are catalog-cached instead, keyed on their
+# plan. `spark.catalog.clearCache()` frees only those two, so a
+# long-lived session running the full roster accumulates storage-memory
+# blocks without bound — the round-13 driver bench degraded
+# progressively (heavy heads 5-8x) with exactly that signature. The
+# policy: after a query's result has been fully materialized
+# (written/collected), the caller may release EVERYTHING —
+# `release_cached_blocks`, or per query `block_scope`.
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """The engine's one way to pin an intermediate frame that several
+    consumers (or loop rounds) read: an eager `localCheckpoint()`,
+    whose job runs here, at plan-build time. The one storage rule:
+
+    * the rows live as blocks in executor storage, and the returned
+      frame's lineage is cut — its plan (and `.explain`) starts at the
+      blocks, not at the plan that produced them;
+    * `release_cached_blocks` and a `block_scope` exit free the blocks
+      (clearing the resident memo first); nothing else does, short of
+      the ContextCleaner collecting an unreferenced handle;
+    * a frame cannot be recomputed once its blocks are released: an
+      action on it raises ("Checkpoint block rdd_... not found"), it
+      never returns other rows.
+
+    SCALE NOTE: the right trade at fixture/bench scale, where every
+    consumer re-reads the frame many times and the corpus is MBs. At
+    100 TB the corpus side must NOT be pinned: keep only the KB-sized
+    model and let each consumer re-scan the columnar parquet; the model
+    is the only state worth pinning."""
+    return df.localCheckpoint()
+
 
 # (applicationId, artifact, *params) -> value; see `resident`
 _RESIDENT: dict[tuple, object] = {}
@@ -205,13 +227,9 @@ def resident(spark: SparkSession, key: tuple, build):
     life of the application — a rewritten fixture at the same path
     would be served stale (acceptable: fixtures are read-only).
 
-    SCALE NOTE: a stored frame pins its localCheckpoint'ed blocks in
-    executor storage until `release_cached_blocks` or a `block_scope`
-    exit drops the entry — the right trade at fixture/bench scale,
-    where every consumer re-reads the frame many times and the corpus
-    is MBs. At 100 TB the corpus side must NOT be pinned: keep only the
-    KB-sized model and let each consumer re-scan the columnar parquet;
-    the model is the only state worth pinning.
+    A stored frame is `materialize`d: its blocks stay pinned until
+    `release_cached_blocks` or a `block_scope` exit drops the entry
+    (see `materialize` for the rule and its scale note).
 
     Values are shared: a caller that may mutate a model takes a copy."""
     app = spark.sparkContext.applicationId
@@ -226,12 +244,12 @@ def resident(spark: SparkSession, key: tuple, build):
 def release_cached_blocks(spark: SparkSession) -> int:
     """Release every cached/checkpointed block in the session: clear the
     resident memo, the catalog cache, and unpersist every persistent
-    RDD (which is where `localCheckpoint()` blocks live). Returns the
+    RDD (which is where `materialize` blocks live). Returns the
     number of RDDs unpersisted.
 
     SAFE only between queries — i.e. after the previous query's result
     was fully materialized and before the next one builds its plan. A
-    localCheckpointed RDD has truncated lineage, so unpersisting it
+    `materialize`d frame has truncated lineage, so unpersisting it
     makes any still-held handle unrecomputable; clearing the memo
     first guarantees the engine itself holds none. This is the
     100x-scale fix: a resident service running thousands of queries per

@@ -25,8 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def sf_of(sf_dir: str) -> float:
     """Scale factor parsed from a fixture dir name ('.../sf0.1' → 0.1);
@@ -42,11 +40,6 @@ def sf_of(sf_dir: str) -> float:
         return float(m.group(1).rstrip("."))
     except ValueError:
         return 0.0
-
-# Dimension tables small enough to broadcast at ANY scale factor: their
-# cardinality is fixed (region=5, nation=25) or grows sub-linearly. At
-# 100 TB these still fit in an executor — always broadcast them.
-BROADCASTABLE = {"region", "nation", "supplier", "part", "customer"}
 
 
 # the held-out "benchmark" slice of the documents fixture — the eval

@@ -1,16 +1,26 @@
 """Cached-block lifetime policy (round-13 verdict items 1/4): after a
 query's result is materialized, `release_cached_blocks` must leave ZERO
-persistent RDD blocks in the session — the 49 `localCheckpoint`/
-`persist` sites otherwise accumulate storage memory linearly across a
-long-lived roster (the mechanism behind the round-13 driver bench's
-progressive 5-8x heavy-head inflation), and the resident memo of fits
-and graphs (`session.resident`) must drop its handles first so nothing
-dangles on a truncated-lineage frame."""
+persistent RDD blocks in the session — the engine's `materialize` sites
+otherwise accumulate storage memory linearly across a long-lived roster
+(the mechanism behind the round-13 driver bench's progressive 5-8x
+heavy-head inflation), and the resident memo of fits and graphs
+(`session.resident`) must drop its handles first so nothing dangles on
+a truncated-lineage frame. `materialize` is the only call that pins a
+frame, apart from two allowlisted `.cache()` sites."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
+import pytest
+
 from parallelutilities_jl_spark import session as sess
-from parallelutilities_jl_spark.session import release_cached_blocks
+from parallelutilities_jl_spark.session import (
+    block_scope,
+    materialize,
+    release_cached_blocks,
+)
 
 
 def _n_persistent(spark) -> int:
@@ -215,3 +225,72 @@ def test_block_scope_evicts_del_then_recompute(spark):
         assert key not in sess._RESIDENT
     finally:
         sess._RESIDENT.pop(key, None)
+
+
+def test_released_materialization_raises(spark):
+    """A `materialize`d frame has no lineage to recompute from: once its
+    blocks are released, an action raises a named error rather than
+    returning rows — after `release_cached_blocks`, and after a
+    `block_scope` exit for a frame made inside the scope."""
+    release_cached_blocks(spark)
+    df = materialize(spark.range(1000))
+    assert df.count() == 1000
+    release_cached_blocks(spark)
+    with pytest.raises(Exception, match="Checkpoint block rdd_"):
+        df.collect()
+
+    with block_scope(spark):
+        scoped = materialize(spark.range(1000))
+        assert scoped.count() == 1000
+    with pytest.raises(Exception, match="Checkpoint block rdd_"):
+        scoped.collect()
+
+
+# (module, enclosing function) -> why it caches instead of materializing.
+# Both follow a different rule: CacheManager keys a `.cache()` frame on
+# its analyzed plan, so a repeated call of the same query re-hits the
+# built frame (bench.py's reps rely on it), and a release just
+# recomputes it.
+_CACHE_ALLOWED = {
+    ("operators/similarity.py", "q_ann_int8_topk"): (
+        "the ann_int8 index an ANN service keeps resident across calls"
+    ),
+    ("operators/pipeline.py", "_source_overlap_matrix"): (
+        "the containment shingle frame: one InMemoryRelation for every "
+        "consumer, reused across calls"
+    ),
+}
+_PINNING = {"localCheckpoint", "checkpoint", "cache", "persist"}
+
+
+def test_materialize_is_the_only_pinning_call():
+    """No `localCheckpoint`, `checkpoint`, `cache` or `persist` call in
+    the engine package outside `session.py`, apart from the two
+    allowlisted `.cache()` sites — and both of those still exist."""
+    import parallelutilities_jl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found, allowed = [], set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "session.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        owner = {}  # node -> innermost enclosing function (walk is BFS)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner.update((node, fn.name) for node in ast.walk(fn))
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _PINNING
+            ):
+                continue
+            site = (rel, owner.get(node, "<module>"))
+            if node.func.attr == "cache" and site in _CACHE_ALLOWED:
+                allowed.add(site)
+            else:
+                found.append(f"{rel}:{node.lineno} .{node.func.attr}()")
+    assert not found, f"pin through session.materialize: {sorted(set(found))}"
+    assert allowed == set(_CACHE_ALLOWED), "stale allowlist entry"
