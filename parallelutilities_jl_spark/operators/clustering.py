@@ -1520,7 +1520,7 @@ def _pq_fit_state(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, dict]:
     """Fit the per-subspace PQ codebooks (see `q_ann_pq_topk`'s
-    docstring for the math); returns (sliced cached corpus frame,
+    docstring for the math); returns (sliced materialized corpus frame,
     {(s, code): centroid} dict). Resident per (application, sf_dir):
     the fit is deterministic (lowest-id init, one Lloyd round with
     int64-quantized means), so a hit is bit-identical to a fresh fit,
@@ -1922,9 +1922,9 @@ def q_semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     `q_semantic_dedup` (which fits on the FULL corpus and assigns flat,
     the knowingly super-linear term in SCALING.md when k ∝ N):
     bounded-sample fit + hierarchical assignment
-    (`_sampled_fit` + `_two_level_pick`), then prune + census within cells exactly
-    as the flat variant (`_semdedup_prune_census` — that stage was
-    always linear, O(cell) per row).
+    (`_sampled_fit` + `_two_level_pick`), then prune + census within
+    cells exactly as the flat variant (`_semdedup_prune_census` — that
+    stage was always linear, O(cell) per row).
 
     The fit term is still O(k²) ∝ (N/cell)² with a 1/spc constant — a
     fully linear fit would recurse the two-level hierarchy into the

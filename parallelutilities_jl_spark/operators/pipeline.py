@@ -883,9 +883,9 @@ def shuffle_positions(
 def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`shuffle_positions` over the fixture corpus (see that docstring
     for the equi-width shard design)."""
-    # the window branch and the offsets branch each read the parquet's
-    # doc_id column: materializing it first saved no scan and cost
-    # 0.14 s of wall at sf0.1 (SCALING.md, one materialization rule)
+    # not materialized: the window and offsets branches each read the
+    # parquet's doc_id column, and a materialized copy was read twice
+    # too, so it saved no scan (SCALING.md, "One materialization rule")
     docs = load_table(spark, sf_dir, "documents")
     return shuffle_positions(docs.select("doc_id"))
 
