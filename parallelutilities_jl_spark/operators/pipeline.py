@@ -32,7 +32,7 @@ from parallelutilities_jl_spark.operators.text import (
     dd_quality_score,
     quality_parts,
 )
-from parallelutilities_jl_spark.session import materialize
+from parallelutilities_jl_spark.session import materialize, resident
 from parallelutilities_jl_spark.sources.fixtures import (
     EVAL_SOURCE,
     load_table,
@@ -256,17 +256,14 @@ def _source_overlap_matrix(spark: SparkSession, sf_dir: str):
         )
         .select("source", F.md5("s").alias("h"))
         .distinct()
-        # cached DELIBERATELY (ann_int8 precedent): the deduped
-        # (source, md5) frame feeds totals, the per-shingle source
-        # sets, and (in the planner) a second totals consumer — each
-        # with different column pruning, so Catalyst cannot reuse the
-        # exchange across them and would otherwise re-run the
-        # corpus-sized shingle distinct per subtree. One
-        # InMemoryRelation makes every consumer read a single
-        # materialization (plan_audit: planner 8 → 4 exchanges).
-        # Lifetime: spark.catalog.clearCache() (bench.py does).
-        .cache()
     )
+    # the deduped (source, md5) frame feeds totals, the per-shingle
+    # source sets, and (in the planner) a second totals consumer — each
+    # with different column pruning, so Catalyst cannot reuse the
+    # exchange across them and would otherwise re-run the corpus-sized
+    # shingle distinct per subtree; resident, so the census and the
+    # planner share it
+    sh = resident(spark, ("overlap_shingles", sf_dir), lambda: materialize(sh))
     totals = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_src_a"))
     srcs = sh.groupBy("h").agg(F.collect_set("source").alias("ss"))
     pairs = (

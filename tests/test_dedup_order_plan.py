@@ -78,26 +78,28 @@ def test_rank_is_a_permutation_and_ties_break_by_name(spark, tmp_path):
 
 
 def test_results_identical_across_cache_states(spark, sf_dir):
-    """The shared shingle frame is cache()d for its multi-consumer
-    reuse; results must be identical whether served from a fresh
-    build, the resident cache, or after an explicit clearCache —
-    the same hygiene the fit caches pin bit-identically."""
+    """The shared shingle frame is a resident materialization for its
+    multi-consumer reuse; results must be identical whether served from
+    a fresh build, the resident entry, or a rebuild after
+    `release_cached_blocks` — the same hygiene the fit caches pin
+    bit-identically."""
     from parallelutilities_jl_spark.operators.pipeline import (
         q_dedup_order_plan,
         q_source_overlap_census,
     )
+    from parallelutilities_jl_spark.session import release_cached_blocks
 
     def rows(fn):
         return sorted(tuple(r) for r in fn(spark, sf_dir).collect())
 
-    spark.catalog.clearCache()
+    release_cached_blocks(spark)
     cold_p, cold_c = rows(q_dedup_order_plan), rows(
         q_source_overlap_census
     )
-    # both rides of the resident cache
+    # both served from the resident entry
     warm_p = rows(q_dedup_order_plan)
     warm_c = rows(q_source_overlap_census)
-    spark.catalog.clearCache()
+    release_cached_blocks(spark)
     again_p = rows(q_dedup_order_plan)
     again_c = rows(q_source_overlap_census)
     assert cold_p == warm_p == again_p and len(cold_p) > 0

@@ -31,41 +31,24 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _vmhwm_kb(pid: int) -> int:
-    try:
-        with open(f"/proc/{pid}/status") as f:
-            for line in f:
-                if line.startswith("VmHWM:"):
-                    return int(line.split()[1])
-    except OSError:  # the process ended between listing and reading
-        pass
-    return 0
+from perfbench.proctree import _tree  # noqa: E402
 
 
 def worker_peak_mb() -> float:
     """Largest peak resident set (`VmHWM`) among the Python processes
-    under this one, the pyspark daemon and the workers it forked, read
-    from /proc as perfbench's process-tree metrics are."""
-    children: dict[int, list[tuple[int, str]]] = {}
-    for name in os.listdir("/proc"):
-        if not name.isdigit():
+    under this one, the pyspark daemon and the workers it forked, over
+    perfbench's process-tree walk."""
+    me, peak = os.getpid(), 0
+    for pid, st in _tree(me).items():
+        if pid == me or not st[0].startswith("python"):
             continue
         try:
-            with open(f"/proc/{name}/stat") as f:
-                raw = f.read()
-        except OSError:
-            continue
-        # comm may hold spaces or parentheses: split after the last ')'
-        head, _, rest = raw.rpartition(")")
-        comm, ppid = head.partition("(")[2], int(rest.split()[1])
-        children.setdefault(ppid, []).append((int(name), comm))
-    peak, todo = 0, [os.getpid()]
-    while todo:
-        for pid, comm in children.get(todo.pop(), ()):
-            todo.append(pid)
-            if comm.startswith("python"):
-                peak = max(peak, _vmhwm_kb(pid))
+            with open(f"/proc/{pid}/status") as f:
+                for line in f:
+                    if line.startswith("VmHWM:"):
+                        peak = max(peak, int(line.split()[1]))
+        except OSError:  # the process ended between listing and reading
+            pass
     return round(peak / 1024, 1)
 
 

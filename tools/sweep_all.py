@@ -50,7 +50,7 @@ def main() -> None:
             continue
         # same per-query isolation as bench.py: a resident-index query
         # (ann_int8, the census's shared shingle frame) must not hold
-        # its cache over the remaining registry, and the
+        # its resident entry over the remaining registry, and the
         # `session.materialize` sites must not accumulate storage
         # blocks over a 230+-query session (the round-13 progressive
         # degradation) — the per-query secs land in SWEEP_LOCAL.json
